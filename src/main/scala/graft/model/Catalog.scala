@@ -1,14 +1,23 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.EnumSet
+
+import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StructField, StructType}
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 
 /** Self-describing topic↔table catalog (SURVEY §1.1/§2.9): the analog of
   * the reference's `ros_sql_metadata` tables
-  * [upstream: ros_sql/models.py], persisted as a small parquet table next
-  * to the data. One row per recorded (topic, schema version): topic name,
-  * mangled table name, message type name, schema fingerprint, schema DDL,
-  * version number, and the FINGERPRINT CHAIN — a hash chain
+  * [upstream: ros_sql/models.py], persisted as one small JSON document
+  * (`catalog.json` under `path`) that the driver reads and writes through
+  * the Hadoop FileContext API — no Spark job per call, and the same
+  * local/HDFS/S3 reach as any other path. One row per recorded (topic,
+  * schema version): topic name, mangled table name, message type name,
+  * schema fingerprint, schema DDL, version number, and the FINGERPRINT
+  * CHAIN — a hash chain
   * (chain₁ = fp₁, chainₖ = md5(chainₖ₋₁ ‖ fpₖ)) over the topic's schema
   * history, so the whole evolution lineage is summarized by one
   * tamper-evident value and two catalogs that agree on the latest chain
@@ -16,6 +25,12 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * before reconstructing typed objects — the md5-check the reference
   * performs in sql2msg — and names the matching historical version when
   * a stale reader shows up.
+  *
+  * Every write replaces the document atomically: write a hidden temp
+  * file, then rename it over the old one (Spark's CheckpointFileManager
+  * discipline), so a crash mid-write leaves the previous catalog intact.
+  * A `path` still holding the earlier parquet-table layout fails loudly
+  * instead of reading as empty.
   *
   * Schema EVOLUTION rule (register on an existing topic with a new
   * schema): additive changes — new fields, which must be nullable so
@@ -39,6 +54,15 @@ final case class TopicMeta(
 
 final class Catalog(spark: SparkSession, path: String) {
   import spark.implicits._
+  private implicit val formats: Formats = DefaultFormats
+
+  private val dir = new Path(path)
+  private val doc = new Path(dir, Catalog.DocName)
+  private val fc: FileContext = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    if (dir.toUri.getScheme == null) FileContext.getFileContext(conf)
+    else FileContext.getFileContext(dir.toUri, conf)
+  }
 
   def register(topic: String, msgType: String, schema: StructType): TopicMeta = {
     val fp = SchemaMapper.fingerprint(schema)
@@ -71,23 +95,49 @@ final class Catalog(spark: SparkSession, path: String) {
       case None =>
         TopicMeta(topic, table, msgType, fp, schema.toDDL, 1, fp)
     }
-    (others ++ mine :+ meta).toDS().repartition(1)
-      .write.mode(SaveMode.Overwrite).parquet(path)
+    replace(others ++ mine :+ meta)
     meta
+  }
+
+  /** Write `rows` to a hidden temp file, then rename it over the
+    * document: readers see the old catalog or the new one, never a
+    * partial or missing one. */
+  private def replace(rows: Seq[TopicMeta]): Unit = {
+    val tmp = new Path(dir, s".${Catalog.DocName}.${java.util.UUID.randomUUID()}.tmp")
+    val out = fc.create(tmp, EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+      Options.CreateOpts.createParent())
+    try out.write(Serialization.write(rows).getBytes(UTF_8)) finally out.close()
+    fc.rename(tmp, doc, Options.Rename.OVERWRITE)
   }
 
   /** Every (topic, version) row. Empty ONLY when the catalog doesn't
     * exist yet (first registration). Any other read failure propagates:
     * swallowing it here would let register() overwrite the catalog with
     * a single topic, silently dropping every other topic's metadata.
-    * register() is read-then-overwrite and therefore not safe under
+    * register() is read-then-replace and therefore not safe under
     * concurrent registrations — callers must serialize (the recorder
     * registers topics one at a time from the driver). */
   def allVersions(): Seq[TopicMeta] =
-    try spark.read.parquet(path).as[TopicMeta].collect().toSeq
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" => Seq.empty
+    if (fc.util.exists(doc)) {
+      val in = fc.open(doc)
+      val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      Serialization.read[List[TopicMeta]](text)
+    } else {
+      // temp files of an interrupted write are hidden; anything else
+      // means `path` is not an (empty) catalog
+      val found = if (!fc.util.exists(dir)) Seq.empty[String]
+        else fc.util.listStatus(dir).toSeq.map(_.getPath.getName)
+          .filterNot(_.startsWith("."))
+      if (found.exists(n => n.endsWith(".parquet") || n == "_SUCCESS"))
+        throw new IllegalStateException(
+          s"catalog $path holds the legacy parquet-table layout " +
+          s"(${found.sorted.mkString(", ")}), not ${Catalog.DocName} — " +
+          "move it aside and re-register its topics")
+      if (found.nonEmpty)
+        throw new IllegalStateException(
+          s"catalog $path has no ${Catalog.DocName} but holds " +
+          s"${found.sorted.mkString(", ")} — not a catalog directory")
+      Seq.empty
     }
 
   /** Latest version per topic (the view pre-evolution callers had). */
@@ -129,6 +179,9 @@ final class Catalog(spark: SparkSession, path: String) {
 }
 
 object Catalog {
+  /** The catalog document's file name under the catalog path. */
+  private val DocName = "catalog.json"
+
   /** One hash-chain step: chainₖ = md5(chainₖ₋₁ ‖ '→' ‖ fpₖ). */
   def chainStep(prevChain: String, fp: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")

@@ -426,8 +426,11 @@ object MacroOps2 extends OpGroup {
         // suppkey. A supplier is "late" iff ANY of its lineitems in
         // the order is late — exactly max(late) over the pair group —
         // so all three outputs are identical to the distinct forms.
+        // countDistinct skips NULL suppliers and count(*) would not:
+        // drop them before the (order, supplier) grain
         val po = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
+          .filter(col("l_suppkey").isNotNull)
           .join(o, col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("l_orderkey"), col("l_suppkey"))
           .agg(max(late).as("_late"))

@@ -1590,19 +1590,10 @@ object StatsOps extends OpGroup {
       // so the hash can't flap. Two tiny cross-join passes.
       "q_ts_theil_sen",
       (s, d) => {
-        // r13 (guide §3.3): daily — the ONE corpus pass, collapsed to
-        // the ~30-row day domain — fed both pair-join sides, the
-        // intercept branch, and (through ranked/ics duplication) TEN
-        // re-planned event scans in plans/r13/..._before.txt.
-        // Materialized once per invocation; everything downstream is
-        // day-domain-sized recompute. A/B: 1.07× at sf0.1, 1.08× at
-        // sf1 (plans/r13/ab/b3_*/b4_*) — the one batch-2 sweep site
-        // that wins at BOTH SFs (10 saved corpus passes clear the
-        // seam overhead; mann_kendall's 3 do not, see its note).
+        // No seam on daily: measured 1.07×/1.08× (sf0.1/sf1), reverted: it hides the day-domain bound from PlanAuditSpec ban 2.
         val daily = Tables.events(s, d)
           .select(expr("ts_us div 86400000000").as("x"))
           .groupBy(col("x")).agg(count(lit(1)).as("y"))
-          .seam()
         val a = daily.select(col("x").as("xi"), col("y").as("yi"))
         val b = daily.select(col("x").as("xj"), col("y").as("yj"))
         val pairs = a.join(b, col("xj") > col("xi"))

@@ -149,6 +149,93 @@ class ModelSpec extends SparkSpec {
     assert(mS.version == 1 && cat.allVersions().size == 3)
   }
 
+  test("catalog calls launch no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("graft.test.phase")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val cat = new graft.model.Catalog(spark, tmpDir("cat-jobs") + "/_metadata")
+      val v1 = StructType(Seq(StructField("x", LongType)))
+      val v2 = v1.add(StructField("y", DoubleType))
+      sc.setLocalProperty("graft.test.phase", "catalog")
+      cat.register("/r1/pose", "geometry_msgs/Pose", v1)
+      cat.register("/r1/pose", "geometry_msgs/Pose", v2)
+      cat.register("/r1/imu", "sensor_msgs/Imu", v1)
+      assert(cat.lookup("/r1/pose").get.version == 2)
+      assert(cat.verified("/r1/pose", v2).version == 2)
+      assert(cat.history("/r1/pose").size == 2)
+      // a job started after the probe: once the listener has seen it,
+      // it has seen every job started before it
+      sc.setLocalProperty("graft.test.phase", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!seen.contains("sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains("sentinel"), "listener never saw the sentinel job")
+      assert(!seen.contains("catalog"),
+        s"catalog calls launched Spark jobs: $seen")
+    } finally {
+      sc.setLocalProperty("graft.test.phase", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("catalog: a second instance on the same path sees the full chain") {
+    val path = tmpDir("cat-share") + "/_metadata"
+    val a = new graft.model.Catalog(spark, path)
+    val v1 = StructType(Seq(StructField("x", LongType)))
+    a.register("/r1/pose", "geometry_msgs/Pose", v1)
+    a.register("/r1/pose", "geometry_msgs/Pose",
+      v1.add(StructField("y", DoubleType)))
+    a.register("/r1/imu", "sensor_msgs/Imu", v1)
+    val b = new graft.model.Catalog(spark, path)
+    assert(b.history("/r1/pose") == a.history("/r1/pose"))
+    assert(b.history("/r1/pose").map(_.version) == Seq(1, 2))
+    assert(b.allVersions().toSet == a.allVersions().toSet)
+    // and a registration through b extends the chain a reads
+    val m3 = b.register("/r1/pose", "geometry_msgs/Pose",
+      v1.add(StructField("y", DoubleType)).add(StructField("z", DoubleType)))
+    assert(a.lookup("/r1/pose") == Some(m3) && m3.version == 3)
+  }
+
+  test("catalog: a write interrupted before its rename loses nothing") {
+    val dir = tmpDir("cat-crash") + "/_metadata"
+    val cat = new graft.model.Catalog(spark, dir)
+    val v1 = StructType(Seq(StructField("x", LongType)))
+    val m1 = cat.register("/r1/pose", "geometry_msgs/Pose", v1)
+    // what a writer killed mid-write leaves: a partial hidden temp file
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, ".catalog.json.crashed.tmp"),
+      "[{\"topic\":\"/r1/po".getBytes("UTF-8"))
+    assert(cat.allVersions() == Seq(m1))
+    val m2 = cat.register("/r1/imu", "sensor_msgs/Imu", v1)
+    assert(cat.allVersions().toSet == Set(m1, m2))
+  }
+
+  test("catalog: a legacy parquet catalog fails loudly, never reads empty") {
+    val path = tmpDir("cat-legacy") + "/_metadata"
+    Seq(graft.model.TopicMeta("/r1/pose", "r1_pose", "geometry_msgs/Pose",
+        "fp", "x BIGINT", 1, "fp")).toDS()
+      .repartition(1).write.parquet(path)
+    val cat = new graft.model.Catalog(spark, path)
+    val v1 = StructType(Seq(StructField("x", LongType)))
+    for (call <- Seq[() => Any](
+        () => cat.allVersions(), () => cat.lookup("/r1/pose"),
+        () => cat.register("/r1/imu", "sensor_msgs/Imu", v1))) {
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("legacy parquet"), e.getMessage)
+    }
+    // the failed register left the legacy table as it was
+    assert(spark.read.parquet(path).count() == 1)
+  }
+
   // ---- TxTable: the minimal ACID commit-log layer (r6 task 4) ----
 
   test("txlog: append/overwrite commits are atomic and versioned") {

@@ -1,9 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 import java.util.Properties
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.{Catalog, SchemaMapper}
 import graft.streaming.Recorder
@@ -23,6 +27,13 @@ case class LiveEvent(event_id: Long, ts: Timestamp, user_id: Long,
   * classpath), standing in for the reference's SQLite/Postgres. */
 class RecorderSpec extends SparkSpec {
   import spark.implicits._
+
+  private def parquetFiles(dir: Path): List[Path] = {
+    val ls = Files.list(dir)
+    try ls.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toList
+    finally ls.close()
+  }
 
   test("record to parquet + catalog, then typed readback (sql2msg analog)") {
     implicit val ctx = spark.sqlContext
@@ -74,6 +85,57 @@ class RecorderSpec extends SparkSpec {
       PoseEvolved(1.0, 2.0, 3.0, Stamp(1700000000L, 1L), None),
       PoseEvolved(4.0, 5.0, 6.0, Stamp(1700000001L, 2L), Some("map"))),
       s"v1 rows must surface the v2 column as null: $back")
+  }
+
+  test("readback reads committed files only: a crash leftover is ignored") {
+    implicit val ctx = spark.sqlContext
+    val base = tmpDir("leftover")
+    val cat = new Catalog(spark, s"$base/_metadata")
+    val in = MemoryStream[Pose]
+    val msgs = (1 to 6).map(i => Pose(i, i, i, Stamp(1700000000L + i, i)))
+    val (meta, q) = Recorder.recordParquet(in.toDS(), "/robot1/pose",
+      "geometry_msgs/Pose", cat, base, s"$base/_ckpt",
+      Trigger.ProcessingTime(0))
+    try {
+      in.addData(msgs.take(3)); q.processAllAvailable()
+      in.addData(msgs.drop(3)); q.processAllAvailable()
+    } finally q.stop()
+    // a part file a crashed attempt wrote into v1/ but never committed
+    // to v1/_spark_metadata
+    val stray = s"$base/stray"
+    Recorder.withReceipt(Seq(Pose(-1, -1, -1, Stamp(0L, 0L)),
+        Pose(-2, -2, -2, Stamp(0L, 0L))).toDF())
+      .coalesce(1).write.parquet(stray)
+    Files.move(parquetFiles(Paths.get(stray)).head,
+      Paths.get(base, meta.table, "v1", "part-00000-crashed.c000.snappy.parquet"))
+    // a directory listing sees it...
+    assert(spark.read.parquet(s"$base/${meta.table}/v*").count() == 8)
+    // ...the manifest-resolved readback does not
+    val back = Recorder.readback[Pose](spark, "/robot1/pose", cat, base)
+      .collect().toSeq
+    assert(back.sortBy(_.x) == msgs)
+  }
+
+  test("parquet sink writes one part file per trigger") {
+    implicit val ctx = spark.sqlContext
+    val base = tmpDir("files")
+    val cat = new Catalog(spark, s"$base/_metadata")
+    val in = MemoryStream[Pose](3)
+    val (meta, q) = Recorder.recordParquet(in.toDS(), "/robot1/pose",
+      "geometry_msgs/Pose", cat, base, s"$base/_ckpt",
+      Trigger.ProcessingTime(0))
+    val k = 4
+    // six messages per trigger: every one of the 3 input partitions
+    // holds data, so one file per partition would leave 3k files
+    val msgs = (0 until 6 * k).map(i => Pose(i, i, i, Stamp(i.toLong, 0L)))
+    try msgs.grouped(6).foreach { b => in.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == k)
+    val parts = parquetFiles(Paths.get(base, meta.table, "v1")).size
+    assert(parts == k, s"$parts part files for $k triggers")
+    val back = Recorder.readback[Pose](spark, "/robot1/pose", cat, base)
+      .collect().toSeq
+    assert(back.sortBy(_.x) == msgs)
   }
 
   test("readback fails fast on schema drift (md5-check analog)") {
@@ -151,7 +213,6 @@ class RecorderSpec extends SparkSpec {
 
   test("e2e live ingest ~1M events: sustained rate source -> compaction " +
       "-> catalog readback -> declared queries on the landed table") {
-    import org.apache.spark.sql.streaming.Trigger
     val base = tmpDir("e2e")
     val cat = new Catalog(spark, s"$base/_metadata")
     // rate source plays the live topic; the typed map(identity) pins the
