@@ -17,6 +17,21 @@ object Bench {
     "q_graph_lpa", "q_graph_modularity", "q_graph_pagerank",
     "q_graph_reachability", "q_graph_sssp", "q_split_leakage_safe")
 
+  /** The between-query sweep shared by the harness mains (Bench,
+    * Verify, Explain, PayoffBench): drops every CacheManager entry —
+    * the rank/CDF pins of [[Determinism.distCumSumsBy]] included —
+    * then unpersists every RDD the context still holds, which takes
+    * the dead localCheckpoint blocks of the query just run (otherwise
+    * held until a driver GC lets ContextCleaner reclaim them). It
+    * releases EVERYTHING, a caller's own cache too, so it belongs to
+    * a main that owns its session and calls it only between queries,
+    * never to a library call. */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(r => { scala.util.Try(r.unpersist(blocking = false)); () })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -85,29 +100,6 @@ object Bench {
             s"over ${rows.length} groups")
         } catch { case NonFatal(e) =>
           System.err.println(s"[bench] calibration failed: ${e.getMessage}")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      runs(runs.size / 2)
-    }
-    // r9-comparable variant: the r9 artifact's 0.300 s was measured
-    // with .count() on this aggregate (sum/avg pruned by Catalyst).
-    // Keep measuring it one more round so r9→r10 can normalize
-    // apples-to-apples; future rounds compare the pinned
-    // `calibration_s` only.
-    val calibrationLegacy = {
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try {
-          import org.apache.spark.sql.functions._
-          graft.io.Tables.lineitem(spark, sfDir)
-            .groupBy(col("l_returnflag"), col("l_linestatus"))
-            .agg(sum(col("l_quantity")), avg(col("l_extendedprice")),
-                 count(lit(1)))
-            .count()
-        } catch { case NonFatal(e) =>
-          System.err.println(
-            s"[bench] legacy calibration failed: ${e.getMessage}")
         }
         (System.nanoTime() - t0) / 1e9
       }.sorted
@@ -192,13 +184,6 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => only.forall(_.contains(kv._1)))
-    // Diagnostic arm for the r10 bench anomaly A/B: with KEEP_PINS=1
-    // the pinned rank/CDF frames are NOT released between queries, so
-    // reps 2+ of a distCumSumsBy rider hit the CacheManager-deduped
-    // warm frame exactly as the r9 bits did (MaxPinned=4 still bounds
-    // storage). The driver sets no such var: the official number
-    // keeps the release contract, i.e. measures cold per-query cost.
-    val keepPins = sys.env.get("SPARK_GRAFT_BENCH_KEEP_PINS").contains("1")
     val times = scala.collection.mutable.Map.empty[String, List[Double]]
     def runOne(name: String,
                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
@@ -214,16 +199,8 @@ object Bench {
         failed ::= name
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       }
-      // untimed: drop the rank/CDF queries' pinned range frames so a
-      // full-suite run never accumulates storage across queries
-      // (round-10 advisory; each bench invocation builds a fresh
-      // frame, so the old pin is dead weight by here). r12 advisory:
-      // also drop the query's dead localCheckpoint seam blocks —
-      // ContextCleaner would otherwise hold them until a driver GC.
-      if (!keepPins) {
-        Determinism.releaseCumSums()
-        Seam.releaseAll(spark)
-      }
+      // untimed: every rep measures cold per-query cost
+      release(spark)
     }
     for (_ <- 1 to reps; (name, fn) <- names) runOne(name, fn)
     // Drift-proofing (round-12 verdict #4a): the cost-decile queries
@@ -291,7 +268,7 @@ object Bench {
       s""""disk_over_io":${calibrationIo.map(io => over(diskTotal, io))
         .getOrElse("null")},""" +
       s""""cpu_total_s":${sec(cpuTotal)},"disk_total_s":${sec(diskTotal)}}"""
-    val full = s"""{"metric":"total","value":${sec(total)},"unit":"sec","n_queries":${ok.size},"calibration_s":${sec(calibration)},"calibration_legacy_s":${sec(calibrationLegacy)},"calibration_io_s":$ioJson,"floor_s":${sec(floor)},"ratios":$ratiosJson,"keep_pins":$keepPins,"queries":$fullQs,"spread_min_med":$spreadJson,"failed":$failedJson,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":${sec(total)},"unit":"sec","n_queries":${ok.size},"calibration_s":${sec(calibration)},"calibration_io_s":$ioJson,"floor_s":${sec(floor)},"ratios":$ratiosJson,"queries":$fullQs,"spread_min_med":$spreadJson,"failed":$failedJson,"sf":"$sfDir"}"""
     System.err.println(s"[bench-full] $full")
     // r12 verdict #2: every invocation used to clobber BENCH_FULL.json
     // (the driver's 8-core run silently replaced the builder's
@@ -322,7 +299,7 @@ object Bench {
     // sbt from prefixing it or appending a [success] banner after it.
     // The measurement methodology is untouched — only the emission
     // point moved.
-    val line = s"""{"metric":"total","value":${sec(total)},"unit":"sec","n_queries":${ok.size},"calibration_s":${sec(calibration)},"calibration_legacy_s":${sec(calibrationLegacy)},"calibration_io_s":$ioJson,"floor_s":${sec(floor)},"ratios":$ratiosJson,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${sec(total)},"unit":"sec","n_queries":${ok.size},"calibration_s":${sec(calibration)},"calibration_io_s":$ioJson,"floor_s":${sec(floor)},"ratios":$ratiosJson,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
     spark.stop()
     System.out.println(line)
     System.out.flush()

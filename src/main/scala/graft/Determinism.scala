@@ -272,27 +272,15 @@ object Determinism {
     * trades cache hits for recompute. What is NOT safe is unbounded
     * growth: each rank/CDF query pins one frame for the life of the
     * session (round-10 advisory), so a 391-query sweep would
-    * accumulate storage until ContextCleaner GC. Two bounds:
-    * (a) the queue caps at [[MaxPinned]] — the oldest frame (from a
-    * query whose action already completed in any sequential driver)
-    * is dropped on overflow; (b) harness loops (Verify, Bench) call
-    * [[releaseCumSums]] between queries. */
+    * accumulate storage until ContextCleaner GC. The queue caps at
+    * [[MaxPinned]]: the oldest frame is dropped on overflow. The
+    * library never releases anything else; a harness that wants a
+    * clean session between queries sweeps it itself
+    * ([[graft.Bench.release]]). */
   private val pinnedCumFrames =
     new java.util.concurrent.ConcurrentLinkedQueue[
       org.apache.spark.sql.DataFrame]()
   private val MaxPinned = 4
-
-  /** Release every frame [[distCumSumsBy]] still has pinned. Call
-    * after the action that consumed the returned frame (or between
-    * queries in a sweep); safe to call at any time, see
-    * [[pinnedCumFrames]]. */
-  def releaseCumSums(): Unit = {
-    var f = pinnedCumFrames.poll()
-    while (f != null) {
-      scala.util.Try(f.unpersist(blocking = false))
-      f = pinnedCumFrames.poll()
-    }
-  }
 
   def distCumSumsBy(df: org.apache.spark.sql.DataFrame, vs: Seq[String],
                     cnts: Seq[String], parts: Int = -1)
@@ -322,7 +310,10 @@ object Determinism {
     // sampled RangePartitioners → silently shifted ranks). A persisted
     // frame is ONE InMemoryRelation — one exchange, one partitioner —
     // in every consumer by construction; eviction recompute re-reads
-    // the same shuffle output, so pids stay stable.
+    // the same shuffle output, so pids stay stable. It stays a persist,
+    // not a localCheckpoint: PlanSpec's spearman audit finds the
+    // collapsed rank maps through InMemoryRelation.cachedPlan, and a
+    // checkpoint's LogicalRDD carries no plan to inspect.
     val ranged = df.repartitionByRange(nParts, ord: _*)
       .withColumn("_pid", spark_partition_id())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -39,9 +39,9 @@ object Explain {
         catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}" }
       Files.writeString(Paths.get(outDir, s"$n$suffix.txt"), txt + "\n")
       System.err.println(s"[explain] wrote $outDir/$n$suffix.txt")
-      // CC/rank queries pin frames during construction; release like
-      // the harnesses do so a full-suite explain never accumulates
-      Determinism.releaseCumSums()
+      // CC/rank queries pin frames and checkpoint seams during
+      // construction; release so a full-suite explain never accumulates
+      Bench.release(spark)
     }
     spark.stop()
   }

@@ -165,7 +165,7 @@ object PayoffBench {
           .agg(sum(expr("cum_cnt % 1000000007")).cast("long"))
           .head().getLong(0)
       }
-      Determinism.releaseCumSums()
+      Bench.release(spark)
       single.foreach { case (_, sumSingle) =>
         require(sumSingle == sumDist,
           s"variants disagree on $dir: $sumSingle vs $sumDist") }

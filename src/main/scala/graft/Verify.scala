@@ -38,15 +38,9 @@ object Verify {
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // rank/CDF queries pin a range-partitioned frame for plan-shape
-      // determinism; release between queries so a full sweep never
-      // accumulates storage (round-10 advisory: unbounded
-      // InMemoryRelation growth across a 391-query session)
-      Determinism.releaseCumSums()
-      // r12 advisory: also drop the query's dead localCheckpoint
-      // blocks (seams) — ContextCleaner would otherwise hold them
-      // until a driver GC
-      Seam.releaseAll(spark)
+      // drop the query's rank/CDF pins and dead localCheckpoint
+      // blocks so a full sweep never accumulates storage
+      Bench.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -201,13 +201,13 @@ object Dedup {
     // verify rep) always recomputes from parquet — this is the
     // in-query seam materialization the signature STORE performs
     // durably in q_dedup_from_signatures, never a cross-run cache.
-    // r13: the seam now honors spark.graft.seam.mode (graft.Seam) —
-    // "reliable" swaps in an executor-loss-proof checkpoint on real
-    // clusters (the r12 advisory's knob); default stays localCheckpoint.
+    // The blocks are executor-local; a caller that needs the
+    // signatures to survive executor loss persists them through the
+    // signature store instead (see the README's executor-loss note).
     val sig = minhashSignatures(df, id, text, shingle,
                                 maxShingleDocFreq, maxShingleDocFrac,
                                 fastHash)
-    minhashPairsFromSignatures(sig.seam(), minMatch)
+    minhashPairsFromSignatures(sig.localCheckpoint(), minMatch)
   }
 
   /** Self-match candidate pairs from an EXISTING signature frame —
@@ -588,7 +588,7 @@ object Dedup {
     // whole tokenize+md5+majority signature pipeline; materialize the
     // doc-sized signature frame once per invocation (localCheckpoint —
     // never CacheManager-registered, recomputed every invocation).
-    val sig = simhashSig32(df, id, text, fastHash).seam()
+    val sig = simhashSig32(df, id, text, fastHash).localCheckpoint()
     val bands = sig.select(col("doc_id"), col("sig"),
         explode(expr("sequence(0, 3)")).as("b"))
       .withColumn("bv", expr("(sig div shiftleft(1L, 8 * b)) % 256"))
@@ -715,7 +715,7 @@ object Dedup {
     // tokenize+shingle+explode pipeline; materialize the inverted
     // index once per invocation (localCheckpoint — recomputed from
     // parquet on every invocation, never CacheManager-cached).
-    val shC = sh.seam()
+    val shC = sh.localCheckpoint()
     val a = shC.select(col("doc_id").as("doc_a"), col("sz").as("sz_a"),
                        col("g"))
     val b = shC.select(col("doc_id").as("doc_b"), col("sz").as("sz_b"),
@@ -791,7 +791,7 @@ object Dedup {
           s"concat_ws(' ', $parts))")).as(Seq("pos", "g")))
       // r12 (guide §3.3): feeds the shared-gram agg AND the semi-join
       // probe — materialize the gram grid once per invocation
-      .seam()
+      .localCheckpoint()
     val shared = sh.groupBy(col("g"))
       .agg(countDistinct(col("__doc")).as("df"))
       .filter(col("df") >= 2).select(col("g"))

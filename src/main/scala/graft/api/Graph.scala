@@ -55,8 +55,8 @@ object Graph {
           .select(col("dst").as("node")).distinct()
           .join(visited.select(col("node")), Seq("node"), "left_anti")
           .withColumn("dist", lit(h))
-          .seam()
-        visited = visited.union(frontier).seam()
+          .localCheckpoint()
+        visited = visited.union(frontier).localCheckpoint()
         h += 1
       }
       visited
@@ -116,7 +116,7 @@ object Graph {
             .select(col("dst").as("node"),
                     (col("dist") + col("w")).as("dist")))
           .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-          .seam()
+          .localCheckpoint()
         r += 1
       }
       dist
@@ -154,7 +154,7 @@ object Graph {
                   (lit(base) +
                    expr("(coalesce(_c, 0L) div 100) * 85 + " +
                         "(coalesce(_c, 0L) % 100) * 85 div 100")).as("r"))
-          .seam()
+          .localCheckpoint()
       }
       ranks.select(col("node"), col("r").as("rank_e12"))
     } finally { e.unpersist(); nodes.unpersist(); () }
@@ -233,7 +233,7 @@ object Graph {
           .join(winners, Seq("node"), "left")
           .select(col("node"),
                   coalesce(col("newlab"), col("lab")).as("lab"))
-          .seam()
+          .localCheckpoint()
       }
       lab.select(col("node"), col("lab").as("label"))
     } finally { e.unpersist(); nodes.unpersist(); () }
@@ -276,7 +276,7 @@ object Graph {
       .select(least(col("s"), col("t")).as("src"),
               greatest(col("s"), col("t")).as("dst"))
       .distinct()
-    var edges = canon.seam()
+    var edges = canon.localCheckpoint()
     var done = false
     var round = 0
     while (!done && round < maxRounds) {
@@ -294,7 +294,7 @@ object Graph {
         edges = edges
           .join(keepS, col("src") === col("_ks"), "left_semi")
           .join(keepT, col("dst") === col("_kt"), "left_semi")
-          .seam()
+          .localCheckpoint()
       }
     }
     edges.select(col("src").as("node"))

@@ -577,7 +577,7 @@ object Pipeline {
     // never CacheManager-registered, so re-invocations recompute).
     val counts = v.groupBy(col("_v")).agg(count(lit(1)).as("_c"))
       .withColumn("_pb", expr(s"_v div ${prefixBucketWidth}L"))
-      .seam()
+      .localCheckpoint()
     val perB = counts.groupBy(col("_pb")).agg(sum(col("_c")).as("_bc"))
     val wCum = Window.orderBy(col("_pb"))
       .rowsBetween(Window.unboundedPreceding, -1)

@@ -16,14 +16,13 @@ import org.apache.spark.sql.functions._
   * identical numbers everywhere (R3); ties break on candidate id.
   *
   * Materialization seams: frames consumed by several plan branches are
-  * materialized once per invocation via [[graft.Seam]] (`.seam()`).
-  * The default mode is an eager localCheckpoint — fast, but its blocks
-  * are EXECUTOR-LOCAL, so on a multi-executor cluster an executor loss
-  * mid-query fails the job (the retry recomputes), and upstream
-  * work/exceptions surface at DataFrame-construction time. Set
-  * `spark.graft.seam.mode=reliable` (plus `setCheckpointDir`) for
-  * executor-loss-proof checkpoints, or `lazy`/`off` for
-  * deferred/no materialization — see [[graft.Seam]].
+  * materialized once per invocation with an eager `localCheckpoint()`
+  * — fast, but its blocks are EXECUTOR-LOCAL, so on a multi-executor
+  * cluster an executor loss mid-query fails the job (the retry
+  * recomputes), and upstream work/exceptions surface at
+  * DataFrame-construction time. The blocks are never registered with
+  * the CacheManager; ContextCleaner reclaims them once the frame is
+  * unreachable.
   */
 object Sim {
 
@@ -108,7 +107,7 @@ object Sim {
     // invocation instead of planning the norm pipeline twice
     val e = withNorm(df, id, emb, Seq("_isq" -> isQuery))
       .filter(col("embedding").isNotNull && col("nrm") > 0)
-      .seam()
+      .localCheckpoint()
     val q = e.filter(col("_isq"))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
               col("nrm").as("q_nrm"))
@@ -141,7 +140,7 @@ object Sim {
     // invocation instead of planning the norm pipeline twice
     val e = withNorm(df, id, emb, Seq("_isq" -> isQuery))
       .filter(col("embedding").isNotNull && col("nrm") > 0)
-      .seam()
+      .localCheckpoint()
     val q = e.filter(col("_isq"))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
               col("nrm").as("q_nrm"))
@@ -211,7 +210,7 @@ object Sim {
       // r12 (guide §3.3): feeds both self-join sides — materialize the
       // bucketed collection once per invocation instead of planning
       // the norm+bucket pipeline twice
-      .seam()
+      .localCheckpoint()
     val q = b.select(col("vec_id").as("q_id"), col("embedding").as("qe"),
                      col("nrm").as("qn"), col("bucket"))
     val c = b.select(col("vec_id").as("cand_id"),
@@ -223,7 +222,7 @@ object Sim {
         round(dot("qe", "ce") / (col("qn") * col("cn")), 4))
     // r12: the mutual-kNN semi-join consumes `top` twice — materialize
     // the n×k ranked frame once per invocation
-    val top = heapRankCos(scored, k).seam()
+    val top = heapRankCos(scored, k).localCheckpoint()
     val rev = top.select(col("q_id").as("b_id"), col("cand_id").as("a_id"))
     top.filter(col("q_id") < col("cand_id"))
       .join(rev, col("q_id") === col("a_id") &&
@@ -257,7 +256,7 @@ object Sim {
     val e = withNorm(df, id, emb, Seq("_isq" -> isQuery))
       .filter(col("embedding").isNotNull && col("nrm") > 0)
       .withColumn("bucket", signBits(col("embedding"), bits))
-      .seam() // r12: feeds both bucket-join sides
+      .localCheckpoint() // r12: feeds both bucket-join sides
     val q0 = e.filter(col("_isq"))
     val q =
       if (nprobe == 1)
@@ -390,7 +389,7 @@ object Sim {
     // r12 (guide §3.3): qz feeds the broadcast query side AND the
     // candidate scan — materialize the quantized collection once
     val qz = quantizeInt8(df, id, emb, Seq("_isq" -> isQuery))
-      .seam()
+      .localCheckpoint()
     val q = qz.filter(col("_isq"))
       .select(col("vec_id").as("q_id"), col("qvec").as("q_q"))
     val c = qz.select(col("vec_id").as("cand_id"), col("qvec").as("c_q"))
@@ -497,7 +496,7 @@ object Sim {
               isQuery.as("_isq"), isCodebook.as("_iscb"))
       .filter(col("embedding").isNotNull)
       .withColumn("q64", grid64(col("embedding")))
-      .seam()
+      .localCheckpoint()
     val sub = subvectors(base, m, Seq("vec_id", "_isq", "_iscb"))
     val cb = pqCodebook(sub)
     val enc = pqEncode(sub, cb)
@@ -711,7 +710,7 @@ object Sim {
       .withColumn("pemb", slice(col("embedding"), 1, prefixDims))
       .withColumn("pnrm", sqrt(expr("dot_f32(pemb, pemb)")))
       .filter(col("pnrm") > 0)
-      .seam() // r12: coarse+rerank stages reuse it
+      .localCheckpoint() // r12: coarse+rerank stages reuse it
     val q = e.filter(col("_isq"))
       .select(col("vec_id").as("q_id"), col("pemb").as("qpe"),
               col("pnrm").as("qpn"))

@@ -183,13 +183,14 @@ final class TxTable private (
     // r13 (guide §3.3 / §1.1): `batch` feeds FOUR consumers (key
     // counts, total count, anti-join broadcast, union write) — without
     // a seam each recomputes the caller's whole batch lineage.
-    // Materialized once per merge (localCheckpoint, never
-    // CacheManager-registered; recomputed from source on every merge).
+    // Materialized once per merge with an eager localCheckpoint (never
+    // CacheManager-registered, so a caller's own cache of `batch` is
+    // untouched; recomputed from source on every merge).
     // Executor-storage caveat: the checkpointed blocks are
     // executor-local, so an executor loss during the merge fails the
     // job — acceptable for a delta batch inside one atomic commit
-    // (the commit simply retries); see the class doc.
-    val bt = graft.Seam(batch)
+    // (the commit simply retries).
+    val bt = batch.localCheckpoint()
     // r13 (guide §3.1): nUpd was `batch LEFT SEMI JOIN snapshot` — the
     // table-sized snapshot landed on the build side, forcing a full
     // sort-merge shuffle of the snapshot's keys per merge. The batch
@@ -410,21 +411,11 @@ final class TxTable private (
     * names them — a crashed writer leaves only unreferenced files. */
   private def writeData(df: DataFrame, forVersion: Long): Seq[String] = {
     val sub = s"data/c$forVersion-${java.util.UUID.randomUUID()}"
-    // Output file sizing (guide §6): the commit inherits the incoming
-    // frame's partitioning — at cluster scale that means one file per
-    // upstream task, i.e. thousands of shards whose sizes are whatever
-    // the previous exchange left (the small-files problem at table
-    // scale). The REBALANCE hint lets AQE re-split the write into
-    // advisoryPartitionSizeInBytes-sized output files. It costs one
-    // extra exchange per commit, which on a laptop-sized table is pure
-    // overhead — so it is OFF by default (keeps the local bench
-    // comparable) and a production deployment turns it on per session:
-    //   spark.conf.set("spark.graft.tx.rebalanceWrite", "true")
-    val out =
-      if (spark.conf.get("spark.graft.tx.rebalanceWrite", "false").toBoolean)
-        df.hint("rebalance")
-      else df
-    out.write.parquet(s"$dir/$sub")
+    // Output file sizing: the commit inherits the incoming frame's
+    // partitioning (one file per upstream task). A caller writing from
+    // a wide frame sizes its files itself before committing, e.g.
+    // `df.hint("rebalance")` or `coalesce(n)`.
+    df.write.parquet(s"$dir/$sub")
     Option(Paths.get(dir, sub).toFile.listFiles()).toSeq.flatten
       .filter(_.getName.endsWith(".parquet"))
       .map(f => s"$sub/${f.getName}").sorted

@@ -131,7 +131,7 @@ object CurateOps extends OpGroup {
           .agg(sum(when(col("event_type") === "purchase", col("vc"))
                  .otherwise(0L)).as("_pv"),
                count(lit(1)).as("_c"))
-          .seam()
+          .localCheckpoint()
         val j = ag.groupBy(col("user_id"), col("grp"))
           .agg(sum(col("_pv")).as("pv"),
                sum(when(col("event_type").isin("click", "view"),

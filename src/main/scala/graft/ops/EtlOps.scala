@@ -513,7 +513,7 @@ object EtlOps extends OpGroup {
         val o = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"),
                   (money("o_totalprice") * 100).cast("long").as("cents"))
-          .seam()
+          .localCheckpoint()
         val oldDef = o.filter(pmod(col("o_orderkey"), lit(11)) =!= 0)
           .withColumn("cents",
             when(pmod(col("o_orderkey"), lit(7)) === 0,

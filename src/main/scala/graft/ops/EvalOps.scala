@@ -490,13 +490,13 @@ object EvalOps extends OpGroup {
         val j = docs.select(col("doc_id"), col("lang"))
           .join(pred, Seq("doc_id"), "left")
           .select(col("lang"), col("predicted"))
-          .seam()
+          .localCheckpoint()
         val abst = j.agg(sum(when(col("predicted").isNull, 1L)
           .otherwise(0L)).as("n_abstained"))
         val conf = j.filter(col("predicted").isNotNull)
           .groupBy(col("lang"), col("predicted"))
           .agg(count(lit(1)).as("n"))
-          .seam()
+          .localCheckpoint()
         val rows = conf.groupBy(col("lang").as("_t"))
           .agg(sum(col("n")).as("rt"))
         val cols = conf.groupBy(col("predicted").as("_p"))
@@ -725,7 +725,7 @@ object EvalOps extends OpGroup {
                   expr("(2 * _num + _ntok) div (2 * _ntok)").as("score"))
           // r12 (guide §3.3): feeds the totals, block-CDF, and decile
           // branches — materialize the doc-sized scored frame once
-          .seam()
+          .localCheckpoint()
         val tot = scored.agg(count(lit(1)).as("_N"),
                              sum(col("pos1")).as("_P"))
         val blocks = boundedDomain(

@@ -1624,7 +1624,7 @@ object EventOps extends OpGroup {
         // per invocation (localCheckpoint — recomputed every
         // invocation, never CacheManager-cached).
         val rked = hs0.withColumn("_rkb", row_number().over(wcap))
-          .seam()
+          .localCheckpoint()
         val hs = rked.filter(col("_rkb") <= 512).drop("_rkb")
         val nCapped = rked.agg(
           count(when(col("_rkb") > 512, 1)).as("n_capped_slots"))
@@ -1796,7 +1796,7 @@ object EventOps extends OpGroup {
         val act = Tables.orders(s, d)
           .select(year(col("o_orderdate")).as("yr"), col("o_custkey"))
           .distinct()
-          .seam()
+          .localCheckpoint()
         val nxt = act.select((col("yr") - 1).as("py"),
                              col("o_custkey").as("ck"))
         val last = act.agg(max(col("yr")).as("_my"))
@@ -1850,7 +1850,7 @@ object EventOps extends OpGroup {
         val act = Tables.orders(s, d)
           .select(year(col("o_orderdate")).as("yr"), col("o_custkey"))
           .distinct()
-          .seam()
+          .localCheckpoint()
         val n1 = act.select((col("yr") - 1).as("p1"),
                             col("o_custkey").as("c1"))
         val n2 = act.select((col("yr") - 2).as("p2"),

@@ -34,13 +34,13 @@ object GraphOps extends OpGroup {
     val ls = Tables.lineitem(s, d)
       .join(wk, col("l_orderkey") === col("o_orderkey"), "left_semi")
       .select(col("l_orderkey"), col("l_suppkey")).distinct()
-      .seam()
+      .localCheckpoint()
     ls.alias("a")
       .join(ls.alias("b"), col("a.l_orderkey") === col("b.l_orderkey"))
       .filter(col("a.l_suppkey") =!= col("b.l_suppkey"))
       .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
       .distinct()
-      .seam()
+      .localCheckpoint()
   }
 
   private val coSupplyEdgesSql: String =
@@ -137,7 +137,7 @@ object GraphOps extends OpGroup {
         val ls = Tables.lineitem(s, d)
           .join(wk, col("l_orderkey") === col("o_orderkey"), "left_semi")
           .select(col("l_orderkey"), col("l_suppkey")).distinct()
-          .seam() // r12: shared by both self-join sides
+          .localCheckpoint() // r12: shared by both self-join sides
         val ew = ls.alias("a")
           .join(ls.alias("b"), col("a.l_orderkey") === col("b.l_orderkey"))
           .filter(col("a.l_suppkey") =!= col("b.l_suppkey"))

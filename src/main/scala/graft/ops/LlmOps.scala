@@ -494,7 +494,7 @@ object LlmOps extends OpGroup {
         // (it feeds the sizes agg AND the join back).
         val g = rooted.groupBy(col("root"), col("lang"))
           .agg(count(lit(1)).as("cnt"))
-          .seam()
+          .localCheckpoint()
         val sizes = g.groupBy(col("root"))
           .agg(sum(col("cnt")).as("csz"))
         g.join(sizes, "root")

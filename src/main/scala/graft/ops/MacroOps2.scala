@@ -156,7 +156,7 @@ object MacroOps2 extends OpGroup {
           // 2 re-planned corpus scans in plans/r13/..._before.txt.
           // A/B: 0.95× at sf0.1 / 1.05× at sf1 (plans/r13/ab/) —
           // kept on the at-scale number
-          .seam()
+          .localCheckpoint()
         val tot = v.agg(sum(col("_v")).as("_tot"))
         v.crossJoin(broadcast(tot))
           .filter(col("_v") * 1000 > col("_tot"))

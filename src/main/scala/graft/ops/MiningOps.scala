@@ -47,7 +47,7 @@ object MiningOps extends OpGroup {
           .join(broadcast(brands), col("l_partkey") === col("p_partkey"))
           .select(col("l_orderkey").as("ok"), col("p_brand").as("item"))
           .distinct()
-          .seam()
+          .localCheckpoint()
         val nOrders = items.agg(
           countDistinct(col("ok")).as("_n"))
         val itemCnt = items.groupBy(col("item"))

@@ -915,12 +915,12 @@ object NearDupOps extends OpGroup {
             Tables.documents(s, d), col("doc_id"), col("text"),
             terms = Seq("spark", "query"), k = 20)
           .select(col("_id"), row_number().over(w).as("rank"))
-          .seam()
+          .localCheckpoint()
         val sem = graft.api.Sim.cosineTopK(
             Tables.embeddings(s, d), col("vec_id"), col("embedding"),
             isQuery = col("vec_id") === 0, k = 20)
           .select(col("cand_id").as("_id"), col("rn").as("rank"))
-          .seam()
+          .localCheckpoint()
         graft.api.Sim.rrfFuse(Seq(lex, sem), k0 = 60, k = 10)
           .join(lex.withColumnRenamed("rank", "lex_rank"), Seq("_id"),
                 "left")
@@ -1202,7 +1202,7 @@ object NearDupOps extends OpGroup {
           // r12 (guide §3.3): six plan references (3 offsets × 2 join
           // sides) re-ran the scan+window pipeline — materialize once
           // per invocation
-          .seam()
+          .localCheckpoint()
         val right = f.select(col("blk").as("_blk"), col("rn").as("_rn"),
                              col("doc_id").as("_id"), col("pfx").as("_pfx"))
         Seq(1, 2, 3).map { off =>
@@ -1554,7 +1554,7 @@ object NearDupOps extends OpGroup {
         // per invocation.
         val indeg = ranked.groupBy(col("cand_id"))
           .agg(count(lit(1)).as("indeg"))
-          .seam()
+          .localCheckpoint()
         // max hub = max(struct(indeg, -cand_id)): the (indeg DESC,
         // cand_id ASC) rank-1 row as a 1-row hash-agg max instead of
         // a global window sort over the in-degree frame

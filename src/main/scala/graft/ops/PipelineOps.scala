@@ -574,7 +574,7 @@ object PipelineOps extends OpGroup {
         val sk = Pipeline.kmvSketch(ev, col("event_type"),
                                     col("user_id"), k = K)
           .select(col("g"), col("hv"))
-          .seam()
+          .localCheckpoint()
         val per = sk.groupBy(col("g"))
           .agg(count(lit(1)).as("n_s"), max(col("hv")).as("kth"))
         def est(n: org.apache.spark.sql.Column,
@@ -598,7 +598,7 @@ object PipelineOps extends OpGroup {
         val h = ev.select(col("event_type").as("g"),
                           Pipeline.hash32(col("user_id")).as("hv"))
           .distinct()
-          .seam()
+          .localCheckpoint()
         val inter = h.alias("p")
           .join(h.alias("q"),
                 col("p.hv") === col("q.hv") && col("p.g") < col("q.g"))

@@ -65,7 +65,7 @@ object StatsOps extends OpGroup {
         val base = Tables.lineitem(s, d)
           .select((money("l_quantity") * 100).cast("long").as("xv"),
                   (money("l_extendedprice") * 100).cast("long").as("yv"))
-          .seam()
+          .localCheckpoint()
         val rx = rank2Map(base, "xv").withColumnRenamed("r2", "r2x")
         val ry = rank2Map(base, "yv").withColumnRenamed("r2", "r2y")
         val j = base.join(broadcast(rx), "xv").join(ry, "yv")
@@ -1121,7 +1121,7 @@ object StatsOps extends OpGroup {
                 col("o_custkey") === col("c_custkey"))
           .select(col("o_orderkey"), col("g_obs"),
                   (money("o_totalprice") * 100).cast("long").as("vc"))
-          .seam()
+          .localCheckpoint()
         def grpSums(df: org.apache.spark.sql.DataFrame, g: String) = Seq(
           sum(when(col(g) === 1, col("vc")).otherwise(0L).cast(D38)),
           sum(when(col(g) === 0, col("vc")).otherwise(0L).cast(D38)),
@@ -1133,7 +1133,7 @@ object StatsOps extends OpGroup {
           .withColumn("ao", abs(col("s1o") * col("n0o") -
                                 col("s0o") * col("n1o")).cast(D38))
           .withColumn("bo", (col("n1o") * col("n0o")).cast(D38))
-          .seam() // one row, consumed by two branches
+          .localCheckpoint() // one row, consumed by two branches
         val reps = pool
           // 64 hex digits = 256 bits per order, decoded to an int array
           // once; replicate r reads bit (r%4) of digit (r div 4)

@@ -852,14 +852,14 @@ object TextOps extends OpGroup {
           .withColumn("seg", sum(col("stop").cast("long")).over(wSeg))
           .filter(!col("stop"))
           .select(col("doc_id"), col("seg"), col("pos"), col("w"))
-          .seam()
+          .localCheckpoint()
         val ph = m.groupBy(col("doc_id"), col("seg"))
           .agg(concat_ws(" ",
                  transform(array_sort(collect_list(
                    struct(col("pos"), col("w")))), _.getField("w")))
                  .as("phrase"),
                count(lit(1)).as("len"))
-          .seam()
+          .localCheckpoint()
         val ws = m.join(ph.select(col("doc_id").as("_d"),
                                   col("seg").as("_s"), col("len")),
                         col("doc_id") === col("_d") &&

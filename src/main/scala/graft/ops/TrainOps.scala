@@ -87,7 +87,7 @@ object TrainOps extends OpGroup {
           // r12 (guide §3.3): dc still fed TWO branches (bucket LMs +
           // the weight join-back), re-tokenizing the corpus twice —
           // materialize it once per invocation
-          .seam()
+          .localCheckpoint()
         val stats = dc.groupBy(col("b"))
           .agg(sum(col("c")).as("r"),
                sum(when(col("lang") === "en", col("c")).otherwise(0L))
@@ -294,7 +294,7 @@ object TrainOps extends OpGroup {
           // ReuseExchange to dedupe the corpus tokenize (an
           // optimization, not a contract) and re-running the norm
           // window twice
-          .seam()
+          .localCheckpoint()
         val a = profN.select(col("lang").as("la"), col("tri").as("ta"),
                              col("c").as("ca"), col("nrm").as("na"),
                              col("n_tri").as("n_tri_a"))
@@ -374,13 +374,13 @@ object TrainOps extends OpGroup {
                   posexplode(transform(col("embedding"), x =>
                     round(x.cast("double") * 1000000).cast("long")))
                     .as(Seq("j", "q")))
-          .seam()
+          .localCheckpoint()
         def rescale(raw: DataFrame): DataFrame = {
           val m = raw.agg(max(abs(col("raw"))).as("m"))
           raw.crossJoin(broadcast(m))
             .select(col("j"), sHalfUp(col("raw") * 10000, col("m"))
                       .as("u"))
-            .seam() // 64 rows — one tiny job per step
+            .localCheckpoint() // 64 rows — one tiny job per step
         }
         def iterate(v: DataFrame): DataFrame = {
           val w = qv
@@ -498,7 +498,7 @@ object TrainOps extends OpGroup {
                   posexplode(transform(col("embedding"), x =>
                     round(x.cast("double") * 1000000).cast("long")))
                     .as(Seq("j", "q")))
-          .seam()
+          .localCheckpoint()
         val cent = qv.groupBy(col("j"))
           .agg(sum(col("q").cast(D38)).as("sq"),
                count(lit(1)).as("c"))
@@ -506,7 +506,7 @@ object TrainOps extends OpGroup {
         val rel = qv.join(broadcast(cent), col("j") === col("_cj"))
           .groupBy(col("vec_id"))
           .agg(sum((col("q").cast(D38) * col("u")).cast(D38)).as("rel"))
-          .seam()
+          .localCheckpoint()
         var picks = Vector.empty[(Long, Long, Long, Long, Long)]
         for (ord <- 1 to 5) {
           val done = picks.map(_._2)
@@ -695,7 +695,7 @@ object TrainOps extends OpGroup {
           .select(col("o_orderkey"),
                   (money("o_totalprice") * 100).cast("long").as("cents"),
                   year(col("o_orderdate").cast("timestamp")).as("y"))
-          .seam()
+          .localCheckpoint()
         t.overwrite(o.filter(col("y") < 1997))
         val batch = o
           .filter(col("y") < 1997 && col("o_orderkey") % 2 === 0)
@@ -750,7 +750,7 @@ object TrainOps extends OpGroup {
           .select(col("o_orderkey"),
                   (money("o_totalprice") * 100).cast("long").as("cents"),
                   year(col("o_orderdate").cast("timestamp")).as("y"))
-          .seam()
+          .localCheckpoint()
         t.overwrite(o.filter(col("y") < 1998))
         def audit(df: DataFrame): Option[String] = {
           val r = df.agg(min(col("cents")).as("mn"),
@@ -826,7 +826,7 @@ object TrainOps extends OpGroup {
           .select(col("o_orderkey"),
                   (money("o_totalprice") * 100).cast("long").as("cents"),
                   year(col("o_orderdate").cast("timestamp")).as("y"))
-          .seam()
+          .localCheckpoint()
         t.overwrite(o.filter(col("y") < 1996))
         t.overwrite(o.filter(col("y") === 1996))
         val staged = t.writeAuditPublish(
@@ -893,7 +893,7 @@ object TrainOps extends OpGroup {
           .select(col("o_orderkey"),
                   (money("o_totalprice") * 100).cast("long").as("cents"),
                   year(col("o_orderdate").cast("timestamp")).as("y"))
-          .seam()
+          .localCheckpoint()
         t.append(o.filter(col("y") < 1996))
         t.append(o.filter(col("y") === 1996 || col("y") === 1997))
         t.append(o.filter(col("y") >= 1998))
@@ -950,7 +950,7 @@ object TrainOps extends OpGroup {
                   posexplode(transform(col("embedding"), x =>
                     round(x.cast("double") * 1000000).cast("long")))
                     .as(Seq("j", "q")))
-          .seam()
+          .localCheckpoint()
         val anchors = base.select(col("vec_id").as("aid"),
                                   col("label").as("albl"))
           .orderBy(col("aid")).limit(5)
@@ -961,7 +961,7 @@ object TrainOps extends OpGroup {
           .filter(col("vec_id") =!= col("aid"))
           .groupBy(col("aid"), col("albl"), col("vec_id"), col("label"))
           .agg(sum((col("q").cast(D38) * col("aq")).cast(D38)).as("dot"))
-          .seam()
+          .localCheckpoint()
         val hn = dots.filter(col("label") =!= col("albl"))
           .groupBy(col("aid"))
           .agg(max(struct(col("dot"), (-col("vec_id")).as("negid")))

@@ -18,16 +18,6 @@ package object ops {
     def qs: Seq[Q]
   }
 
-  /** Postfix syntax for [[graft.Seam]] — `frame.seam()` materializes
-    * the frame once per invocation under the `spark.graft.seam.mode`
-    * knob (local / reliable / lazy / off; see [[graft.Seam]] for the
-    * executor-loss trade of each). In scope for every operator file
-    * via the package object. */
-  implicit final class SeamSyntax(private val df: DataFrame)
-      extends AnyVal {
-    def seam(): DataFrame = graft.Seam(df)
-  }
-
   /** DuckDB twin of `graft.api.Dedup.tokens` — THE oracle-side
     * tokenizer for the n-gram/shingle family. The explicit character
     * class equals Java regex `\s` (RE2's `\s` omits `\x0B`), and the

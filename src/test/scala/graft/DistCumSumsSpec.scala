@@ -62,7 +62,7 @@ class DistCumSumsSpec extends SparkSpec {
       .distCumSumsBy(df, Seq("v1", "v2"), Seq("c1", "c2"), parts)
       .select("v1", "v2", "cum_c1", "tot_c1", "cum_c2", "tot_c2")
       .collect()
-    Determinism.releaseCumSums()
+    Bench.release(spark)
     assert(got.length == n, s"row count: ${got.length} != $n")
     got.foreach { r =>
       val k = (r.getLong(0), r.getLong(1))
@@ -93,7 +93,7 @@ class DistCumSumsSpec extends SparkSpec {
     val got = Determinism
       .distCumSumsBy(df, Seq("negrev", "pk"), Seq("rev"), 64)
       .select("negrev", "pk", "cum_rev", "tot_rev").collect()
-    Determinism.releaseCumSums()
+    Bench.release(spark)
     val sorted = vals.sortBy(v => (v._1, v._2))
     val tot = vals.map(_._3).sum
     val exp = sorted.scanLeft(0L)(_ + _._3).tail
@@ -118,7 +118,7 @@ class DistCumSumsSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
                              r.getLong(3), r.getLong(4), r.getLong(5)))
         .sortBy(t => (t._1, t._2)).toSeq
-      Determinism.releaseCumSums()
+      Bench.release(spark)
       out
     }
     val a = run(df.coalesce(1))
@@ -131,7 +131,7 @@ class DistCumSumsSpec extends SparkSpec {
   test("cache-release contract: a sweep of distCumSumsBy consumers " +
        "leaves no pinned frames behind, and the pin count is bounded " +
        "even without release") {
-    Determinism.releaseCumSums() // clean slate from earlier suites
+    Bench.release(spark) // clean slate from earlier suites
     val before = spark.sparkContext.getPersistentRDDs.size
     // 7 calls with NO explicit release: the internal MaxPinned bound
     // must hold the pinned-frame count at ≤ 4 (round-10 advisory:
@@ -143,11 +143,11 @@ class DistCumSumsSpec extends SparkSpec {
     }
     val pinned = spark.sparkContext.getPersistentRDDs.size - before
     assert(pinned <= 4, s"unbounded pin growth: $pinned frames cached")
-    // the harness-loop contract (Verify/Bench call this per query):
-    // release drops everything
-    Determinism.releaseCumSums()
-    assert(spark.sparkContext.getPersistentRDDs.size <= before,
-      "releaseCumSums left pinned frames behind")
+    // the harness-loop contract (Verify/Bench sweep per query): the
+    // sweep drops every pin
+    Bench.release(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      "the harness sweep left pinned frames behind")
     // correctness after release: unpersist is recompute, not staleness
     val (df, data) = frame(120, 77L, 4)
     val out = Determinism
@@ -156,6 +156,6 @@ class DistCumSumsSpec extends SparkSpec {
     out.select("v1", "v2", "cum_c1").collect().foreach { r =>
       assert(r.getLong(2) == exp((r.getLong(0), r.getLong(1)))._1)
     }
-    Determinism.releaseCumSums()
+    Bench.release(spark)
   }
 }
