@@ -17,8 +17,25 @@ object Bench {
     "q_graph_lpa", "q_graph_modularity", "q_graph_pagerank",
     "q_graph_reachability", "q_graph_sssp", "q_split_leakage_safe")
 
-  /** The between-query sweep shared by the harness mains (Bench,
-    * Verify, Explain, PayoffBench): drops every CacheManager entry —
+  /** Cores of every tool main's local master, and its shuffle fan-out. */
+  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** The session every tool main (Bench, Verify, Explain, ScaleUp)
+    * runs on: `local[SPARK_GRAFT_CPUS]` with one shuffle partition per
+    * core, UTC session time zone, no UI, WARN logging. */
+  def session(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** The between-query sweep shared by the plan mains (Bench, Verify,
+    * Explain): drops every CacheManager entry —
     * the rank/CDF pins of [[Determinism.distCumSumsBy]] included —
     * then unpersists every RDD the context still holds, which takes
     * the dead localCheckpoint blocks of the query just run (otherwise
@@ -34,13 +51,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     // JIT/codegen/session warmup outside the measured window so the first
     // measured query isn't charged ~4s of one-time JVM cost. Warm on the
     // BENCH dataset (not a hardcoded fixture path) and never let a warmup

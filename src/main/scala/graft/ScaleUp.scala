@@ -89,47 +89,30 @@ object ScaleUp {
       .cast("double")
 
   def main(args: Array[String]): Unit = {
-    val (src, out, fStr, mode, tables) = args match {
-      case Array(s, o, f)    => (s, o, f, "classic", None)
-      case Array(s, o, f, m) => (s, o, f, m, None)
-      // targeted projections (e.g. the PayoffBench sf100-diversity
-      // point needs ONLY lineitem — writing all ten tables at ×1000
-      // would burn disk and hours for columns nothing reads)
-      case Array(s, o, f, m, ts) =>
-        (s, o, f, m, Some(ts.split(",").map(_.trim).toSet))
-      case _ => sys.error(
-        "usage: ScaleUp <src> <out> <factor> [diversity] [tables-csv]")
+    val usage = "usage: ScaleUp <src> <out> <factor> [diversity]"
+    // validated before any session exists: a typo must not silently
+    // run the other mode (or stop a session the caller shares)
+    val (src, out, factor, diversity) = args match {
+      case Array(s, o, f) => (s, o, f.toInt, false)
+      case Array(s, o, f, "diversity") => (s, o, f.toInt, true)
+      case Array(_, _, _, m) =>
+        throw new IllegalArgumentException(s"unknown mode '$m'; $usage")
+      case _ => throw new IllegalArgumentException(usage)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    run(spark, src, out, fStr.toInt, diversity = mode == "diversity",
-        only = tables)
+    val spark = Bench.session()
+    run(spark, src, out, factor, diversity)
     spark.stop()
   }
 
-  def run(spark: SparkSession, src: String, out: String, factor: Int)
-      : Unit = run(spark, src, out, factor, diversity = false)
-
   def run(spark: SparkSession, src: String, out: String, factor: Int,
-          diversity: Boolean): Unit =
-    run(spark, src, out, factor, diversity, only = None)
-
-  def run(spark: SparkSession, src: String, out: String, factor: Int,
-          diversity: Boolean, only: Option[Set[String]]): Unit = {
+          diversity: Boolean = false): Unit = {
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    def wanted(table: String): Boolean = only.forall(_.contains(table))
 
     val K = 10000000L // per-replica key offset (dims/docs/vectors)
     val KO = 100000000L // orders/lineitem orderkey offset
     val KE = 1000000000L // event id offset
 
     def scaled(table: String)(per: (DataFrame, Int) => DataFrame): Unit = {
-      if (!wanted(table)) return
       val base = spark.read.parquet(s"$src/$table.parquet")
       val all = (0 until factor).map(k => per(base, k))
         .reduce(_ unionByName _)
@@ -137,7 +120,7 @@ object ScaleUp {
       println(s"[scaleup] $table x$factor written")
     }
 
-    for (t <- Seq("region", "nation") if wanted(t))
+    for (t <- Seq("region", "nation"))
       spark.read.parquet(s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
 

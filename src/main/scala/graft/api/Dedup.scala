@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * reproduce results byte-for-byte; the production 100 TB swap is the
   * WIRED `fastHash = true` flag on the minhash and simhash families
   * (codegen'd xxhash64, same plan shapes and slot/banding contracts —
-  * measured 3.5×/2.5×/1.6× by BenchHashSwap, see SCALE.md), kept off
+  * measured 3.5×/2.5×/1.6×, see SCALE.md), kept off
   * in every declared query only because cross-engine oracle
   * verification needs the portable hash.
   */
@@ -295,7 +295,7 @@ object Dedup {
       // frames from the two paths in minhashMatches. NOT cross-engine
       // portable (xxhash64 differs per engine), which is the ONLY
       // reason the declared oracle queries stay on md5. Measured at
-      // sf0.1 (BenchHashSwap): see SCALE.md.
+      // sf0.1: see SCALE.md.
       {
         // r13: same de-explode as the md5 path — 8 hash columns, 16
         // long minima in one doc-keyed HashAggregate (8× fewer rows
@@ -497,7 +497,7 @@ object Dedup {
     // fastHash: bit k of one codegen'd xxhash64(token) replaces the
     // parity of md5 hex digit k — same independent-fair-coin property
     // per bit, same votes shape, not cross-engine portable (the
-    // minhash fastHash rationale; measured by BenchHashSwap)
+    // minhash fastHash rationale; measured in SCALE.md)
     //
     // r13 (per-task work, guide §1.2 step 2): the md5 path used to
     // test each of the `bits` hex digits with

@@ -55,24 +55,45 @@ class ReleaseSpec extends SparkSpec {
     mine.unpersist(blocking = true)
   }
 
-  test("only the harness mains sweep the session or read a seam knob") {
-    val root = Paths.get(sys.props("user.dir"), "src/main/scala/graft")
+  /** Every `.scala` file under `dir` (relative to the build root). */
+  private def sources(dir: String): (Path, Seq[Path]) = {
+    val root = Paths.get(sys.props("user.dir"), dir)
     assert(Files.isDirectory(root), s"source tree not found at $root")
-    val harness = Set("Bench.scala", "Verify.scala", "Explain.scala",
-                      "PayoffBench.scala")
+    (root, Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala")).toSeq)
+  }
+
+  test("only the harness mains sweep the session or read a seam knob") {
+    val (root, files) = sources("src/main/scala/graft")
+    val harness = Set("Bench.scala", "Verify.scala", "Explain.scala")
     val banned = Seq("""getPersistentRDDs""", """catalog\.clearCache""",
                      """spark\.graft\.seam\.mode""").map(_.r)
-    val sources = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala")).toSeq
     val offenders = for {
-      p: Path <- sources
+      p: Path <- files
       if !(p.getParent == root && harness(p.getFileName.toString))
       text = Files.readString(p)
       b <- banned if b.findFirstIn(text).isDefined
     } yield s"${root.relativize(p)}: $b"
-    assert(sources.size > 50, s"only ${sources.size} sources scanned")
+    assert(files.size > 50, s"only ${files.size} sources scanned")
     assert(offenders.isEmpty,
       "library code releases session-wide state or reads a seam knob:\n" +
         offenders.mkString("\n"))
+  }
+
+  test("only the four tool mains define a main") {
+    val (mainRoot, mainSources) = sources("src/main/scala/graft")
+    val (_, testSources) = sources("src/test/scala")
+    val tools = Set("Bench.scala", "Verify.scala", "Explain.scala",
+                    "ScaleUp.scala")
+    val entry = """\bdef\s+main\s*\(""".r
+    val withMain = (mainSources ++ testSources)
+      .filter(p => entry.findFirstIn(Files.readString(p)).isDefined)
+    val extra = withMain.filterNot(p =>
+      p.getParent == mainRoot && tools(p.getFileName.toString))
+    assert(withMain.size - extra.size == tools.size,
+      s"expected a main in each of ${tools.mkString(", ")}: $withMain")
+    assert(extra.isEmpty,
+      "a main outside Bench, Verify, Explain and ScaleUp:\n" +
+        extra.mkString("\n"))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 /** The sf-multiplier's replication invariants (SCALE.md round 5): the
@@ -75,6 +76,17 @@ class ScaleUpSpec extends SparkSpec {
     val dCross = math.abs(dot(emb(self), emb(self + 20000000L)))
     assert(dCross < dSelf * 0.8,
       s"cross-replica vectors should decorrelate: |$dCross| vs $dSelf")
+  }
+
+  test("an unknown mode is rejected before a session or a file exists") {
+    val dir = tmpDir("scaleup-mode") + "/out"
+    val e = intercept[IllegalArgumentException](
+      ScaleUp.main(Array(sfDir, dir, "3", "diverse")))
+    assert(e.getMessage.contains("'diverse'"), e.getMessage)
+    assert(!Files.exists(Paths.get(dir)), s"ScaleUp wrote under $dir")
+    // the main never reached its session, so it never stopped ours
+    assert(!spark.sparkContext.isStopped)
+    assert(spark.range(3).count() == 3L)
   }
 
   // ---------------- DIVERSITY mode (round 8, VERDICT r7 #3) ----------------
