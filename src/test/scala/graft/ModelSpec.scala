@@ -549,4 +549,98 @@ class ModelSpec extends SparkSpec {
     assert(graft.model.TxLog.tryWriteCheckpoint(dir, c0))
     assert(graft.model.TxLog.latestCheckpointAt(dir, 20L).contains(c0))
   }
+
+  /** A fresh table dir whose `_txlog` holds `name` with `body`. */
+  private def txlogWith(tag: String, name: String, body: String): String = {
+    val dir = tmpDir(tag)
+    val log = java.nio.file.Paths.get(dir, "_txlog")
+    java.nio.file.Files.createDirectories(log)
+    java.nio.file.Files.write(log.resolve(name), body.getBytes("UTF-8"))
+    dir
+  }
+
+  test("txlog: a malformed manifest or checkpoint fails loudly, " +
+       "never reads as a default") {
+    val m1 = "00000000000000000001.json"
+    val manifests = Seq(
+      "truncated" ->
+        """{"version":1,"action":"append","adds":["data/c1-x/p.parq""",
+      "missing removes" ->
+        """{"version":1,"action":"append","adds":[],"schemaDdl":""}""",
+      "null removes" ->
+        ("""{"version":1,"action":"append","adds":[],"removes":null,""" +
+        """"schemaDdl":""}"""),
+      "null action" ->
+        ("""{"version":1,"action":null,"adds":[],"removes":[],""" +
+        """"schemaDdl":""}"""),
+      "number in adds" ->
+        ("""{"version":1,"action":"append","adds":[1],"removes":[],""" +
+        """"schemaDdl":""}"""),
+      "empty file" -> "")
+    for ((what, body) <- manifests) {
+      val dir = txlogWith("tx-bad-m", m1, body)
+      val e = intercept[IllegalArgumentException](
+        graft.model.TxLog.readManifest(dir, 1L))
+      info(s"$what: ${e.getMessage}")
+    }
+    val dir = txlogWith("tx-bad-c", "00000000000000000010.ckpt",
+      """{"version":10,"schemaDdl":"k BIGINT"}""")
+    val e = intercept[IllegalArgumentException](
+      graft.model.TxLog.latestCheckpointAt(dir, 10L))
+    info(s"checkpoint without files: ${e.getMessage}")
+  }
+
+  test("txlog: logs in the existing byte format decode, and the writer " +
+       "emits those bytes") {
+    import graft.model.TxLog.{Checkpoint, Manifest}
+    val mBytes =
+      """{"version":3,"action":"compact",""" +
+      """"adds":["data/c3-x/part-a,b.parquet","data/c3-x/q\"r.parquet"],""" +
+      """"removes":["data/c1-x/p\\0.parquet"],""" +
+      """"schemaDdl":"k BIGINT, s STRING \\"}"""
+    val m = Manifest(3L, "compact",
+      adds = Seq("data/c3-x/part-a,b.parquet", "data/c3-x/q\"r.parquet"),
+      removes = Seq("data/c1-x/p\\0.parquet"),
+      schemaDdl = "k BIGINT, s STRING \\")
+    val cBytes =
+      """{"version":10,"files":["data/c1-y/p,0.parquet",""" +
+      """"data/c2-y/p\\1.parquet","data/c3-y/p\"2.parquet"],""" +
+      """"schemaDdl":"k BIGINT, note STRING \\"}"""
+    val c = Checkpoint(10L,
+      files = Seq("data/c1-y/p,0.parquet", "data/c2-y/p\\1.parquet",
+                  "data/c3-y/p\"2.parquet"),
+      schemaDdl = "k BIGINT, note STRING \\")
+    val mName = "00000000000000000003.json"
+    val cName = "00000000000000000010.ckpt"
+    // decode: bytes an existing table holds
+    assert(graft.model.TxLog.readManifest(
+      txlogWith("tx-fmt-m", mName, mBytes), 3L) == m)
+    assert(graft.model.TxLog.latestCheckpointAt(
+      txlogWith("tx-fmt-c", cName, cBytes), 10L).contains(c))
+    // encode: the writer emits exactly those bytes
+    val out = tmpDir("tx-fmt-w")
+    val log = java.nio.file.Paths.get(out, "_txlog")
+    java.nio.file.Files.createDirectories(log)
+    def bytesOf(name: String) =
+      new String(java.nio.file.Files.readAllBytes(log.resolve(name)), "UTF-8")
+    assert(graft.model.TxLog.tryPublish(out, m))
+    assert(bytesOf(mName) == mBytes)
+    assert(graft.model.TxLog.tryWriteCheckpoint(out, c))
+    assert(bytesOf(cName) == cBytes)
+    // control characters: either case of a \\u escape reads back, and
+    // whatever escape the writer picks round-trips
+    val u = "\\u001"
+    val ctl = s"""{"version":1,"action":"append",""" +
+      s""""adds":["p${u}f.parquet","p${u}F.parquet"],"removes":[],""" +
+      s""""schemaDdl":"a\\tb"}"""
+    assert(graft.model.TxLog.readManifest(
+      txlogWith("tx-fmt-u", "00000000000000000001.json", ctl), 1L) ==
+      Manifest(1L, "append", Seq("p\u001f.parquet", "p\u001f.parquet"),
+        Seq.empty, "a\tb"))
+    val odd = Manifest(2L, "append",
+      Seq("p\u0008.parquet", "p\u001f.parquet", "p\n\r\t.parquet"),
+      Seq("p\u0000.parquet"), "k BIGINT COMMENT 'a\u000cb'")
+    assert(graft.model.TxLog.tryPublish(out, odd))
+    assert(graft.model.TxLog.readManifest(out, 2L) == odd)
+  }
 }
