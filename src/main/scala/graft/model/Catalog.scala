@@ -6,8 +6,6 @@ import java.util.EnumSet
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StructField, StructType}
-import org.json4s.{DefaultFormats, Formats}
-import org.json4s.jackson.Serialization
 
 /** Self-describing topic↔table catalog (SURVEY §1.1/§2.9): the analog of
   * the reference's `ros_sql_metadata` tables
@@ -54,7 +52,6 @@ final case class TopicMeta(
 
 final class Catalog(spark: SparkSession, path: String) {
   import spark.implicits._
-  private implicit val formats: Formats = DefaultFormats
 
   private val dir = new Path(path)
   private val doc = new Path(dir, Catalog.DocName)
@@ -106,12 +103,13 @@ final class Catalog(spark: SparkSession, path: String) {
     val tmp = new Path(dir, s".${Catalog.DocName}.${java.util.UUID.randomUUID()}.tmp")
     val out = fc.create(tmp, EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
       Options.CreateOpts.createParent())
-    try out.write(Serialization.write(rows).getBytes(UTF_8)) finally out.close()
+    try out.write(JsonDoc.write(rows).getBytes(UTF_8)) finally out.close()
     fc.rename(tmp, doc, Options.Rename.OVERWRITE)
   }
 
   /** Every (topic, version) row. Empty ONLY when the catalog doesn't
-    * exist yet (first registration). Any other read failure propagates:
+    * exist yet (first registration). Any other read failure propagates,
+    * a document that is not a list of complete rows included:
     * swallowing it here would let register() overwrite the catalog with
     * a single topic, silently dropping every other topic's metadata.
     * register() is read-then-replace and therefore not safe under
@@ -121,7 +119,10 @@ final class Catalog(spark: SparkSession, path: String) {
     if (fc.util.exists(doc)) {
       val in = fc.open(doc)
       val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
-      Serialization.read[List[TopicMeta]](text)
+      JsonDoc.objs(text, s"catalog $doc").map(f => TopicMeta(
+        f.str("topic"), f.str("table"), f.str("msgType"),
+        f.str("fingerprint"), f.str("schemaDdl"), f.int("version"),
+        f.str("chain")))
     } else {
       // temp files of an interrupted write are hidden; anything else
       // means `path` is not an (empty) catalog

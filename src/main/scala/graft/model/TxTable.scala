@@ -39,7 +39,8 @@ import org.apache.spark.sql.types.StructType
   *    against the new head; OVERWRITE/COMPACT validate that the files
   *    they replace are still live, else conflict (lost-update guard).
   *  - **Schema gate**: appends must match the table schema additively
-  *    (Catalog.additiveDrift — same evolution law as topic schemas).
+  *    (Catalog.additiveDrift — same evolution law as topic schemas);
+  *    an append that evolves it records the evolved schema.
   *
   * Scale notes: the log is one small JSON per commit and resolution is
   * driver-side O(commits) — the same shape Delta's JSON log takes
@@ -90,12 +91,21 @@ final class TxTable private (
     var ddl = ck.map(_.schemaDdl).getOrElse("")
     tail.foreach { ver =>
       val m = readManifest(dir, ver)
-      if (m.action == "overwrite") live = Vector.empty
-      live = live.filterNot(m.removes.toSet) ++ m.adds
+      live = applied(live, m)
       if (m.schemaDdl.nonEmpty) ddl = m.schemaDdl
     }
     (live, ddl)
   }
+
+  /** The live file list after commit `m`: an overwrite resets it,
+    * removes drop files, adds append them. */
+  private def applied(live: Vector[String], m: Manifest): Vector[String] =
+    (if (m.action == "overwrite") Vector.empty else live)
+      .filterNot(m.removes.toSet) ++ m.adds
+
+  /** Every file the manifests of `vs` add (dir-relative). */
+  private def addsOf(vs: Seq[Long]): Seq[String] =
+    vs.flatMap(readManifest(dir, _).adds)
 
   /** Snapshot read at a PINNED version — time travel. The file list is
     * resolved once, so concurrent commits (even compactions that
@@ -124,11 +134,33 @@ final class TxTable private (
     ddl
   }
 
-  /** Append `df` as one atomic commit; returns the new version.
-    * Blind appends commute, so a lost publish race simply retries
-    * against the new head (bounded attempts, then throws). */
-  def append(df: DataFrame): Long =
-    commitWithRetry(df, "append", validateRemoves = Seq.empty)
+  /** Append `df` as one atomic commit; returns the new version. An
+    * additive schema change (new nullable fields, relaxed nullability)
+    * is recorded with the commit. Blind appends commute, so a lost
+    * publish race retries against the new head, gated against that
+    * head's schema (bounded attempts, then throws). */
+  def append(df: DataFrame): Long = {
+    def gated(base: Long): String = appendSchema(base, df.schema)
+      .fold(why => throw new IllegalStateException(
+        s"append schema incompatible with $dir: $why"), identity)
+    var base = currentVersion()
+    var ddl = gated(base)
+    val adds = writeData(df, base + 1)
+    var attempt = 0
+    while (attempt < 20) {
+      if (tryPublish(dir, Manifest(base + 1, "append", adds, Seq.empty, ddl))) {
+        maybeCheckpoint(base + 1)
+        return base + 1
+      }
+      // publish race lost: appends commute — rebase on the new head,
+      // gated against the schema this attempt would land on
+      attempt += 1
+      base = currentVersion()
+      ddl = gated(base)
+    }
+    throw new IllegalStateException(
+      s"append to $dir lost the publish race 20 times — livelock?")
+  }
 
   /** Replace the whole table content atomically. `base` is the
     * version this overwrite was PREPARED against (optimistic-
@@ -223,11 +255,9 @@ final class TxTable private (
   def writeAuditPublish(df: DataFrame)(
       audit: DataFrame => Option[String]): Either[String, Long] = {
     val base = currentVersion()
-    if (base > 0) {
-      val tbl = StructType.fromDDL(schemaDdlAt(base))
-      Catalog.additiveDrift(tbl, df.schema).foreach { why =>
-        return Left(s"schema gate: $why")
-      }
+    val ddl = appendSchema(base, df.schema) match {
+      case Left(why) => return Left(s"schema gate: $why")
+      case Right(d) => d
     }
     val adds = writeData(df, base + 1)
     val staged = spark.read.schema(df.schema)
@@ -235,7 +265,6 @@ final class TxTable private (
     audit(staged) match {
       case Some(reason) => Left(reason)
       case None =>
-        val ddl = if (base == 0) df.schema.toDDL else ""
         Right(publishOrThrow(
           Manifest(base + 1, "append", adds, Seq.empty, ddl), base))
     }
@@ -248,8 +277,7 @@ final class TxTable private (
     * FRESH one can race a publish that lands moments later; reclaim
     * only past [[TxTable.VacuumStagedGraceMs]] (see [[vacuum]]). */
   def unreferencedFiles(): Seq[String] = {
-    val referenced = versions()
-      .flatMap(TxLog.readManifest(dir, _).adds).toSet
+    val referenced = addsOf(versions()).toSet
     allDataFiles().filterNot(referenced)
   }
 
@@ -259,9 +287,7 @@ final class TxTable private (
     * retention horizon. */
   def unlistedFiles(): Seq[String] = {
     val live = filesAt(currentVersion()).map(_.stripPrefix(s"$dir/")).toSet
-    val referenced = versions()
-      .flatMap(TxLog.readManifest(dir, _).adds).distinct
-    referenced.filterNot(live)
+    addsOf(versions()).distinct.filterNot(live)
   }
 
   /** The oldest version whose data files are guaranteed on disk
@@ -299,19 +325,18 @@ final class TxTable private (
              stagedGraceMs: Long = TxTable.VacuumStagedGraceMs)
       : (Long, Int) = {
     require(retainVersions >= 1, "must retain at least the head")
-    val head = currentVersion()
+    val logged = versions()
+    val head = logged.lastOption.getOrElse(0L)
     // empty table: nothing published, nothing reclaimable — a no-op,
     // not a confusing foldedAt(1) failure (round-9 advisory)
     if (head == 0) return (0L, 0)
     val horizon = math.max(1L, head - retainVersions + 1)
     // union of live sets across every retained version: fold once from
     // the horizon snapshot, accumulating — O(retained) manifest reads
-    var keep = foldedAt(horizon)._1.toSet
-    var live = keep
-    listVersions(dir).filter(v => v > horizon && v <= head).foreach { v =>
-      val m = readManifest(dir, v)
-      if (m.action == "overwrite") live = Set.empty
-      live = live -- m.removes ++ m.adds
+    var live = foldedAt(horizon)._1
+    var keep = live.toSet
+    logged.filter(_ > horizon).foreach { v =>
+      live = applied(live, readManifest(dir, v))
       keep ++= live
     }
     TxLog.writeHorizon(dir, horizon)
@@ -319,8 +344,7 @@ final class TxTable private (
     // must not push its adds into the "debt" class (they'd be deleted
     // unconditionally) — post-head adds fall through to the staged
     // class, where grace + the late-commit re-check protect them
-    val referenced = listVersions(dir).filter(_ <= head)
-      .flatMap(readManifest(dir, _).adds).toSet
+    val referenced = addsOf(logged).toSet
     val all = allDataFiles()
     val debt = all.filterNot(keep).filter(referenced)
     val cutoff = System.currentTimeMillis() - stagedGraceMs
@@ -333,8 +357,7 @@ final class TxTable private (
       scala.util.Try(Files.getLastModifiedTime(p).toMillis < cutoff)
         .getOrElse(false)
     }
-    val lateAdds = listVersions(dir).filter(_ > head)
-      .flatMap(readManifest(dir, _).adds).toSet
+    val lateAdds = addsOf(listVersions(dir).filter(_ > head)).toSet
     val doomed = (debt ++ staged.filterNot(lateAdds)).distinct
     doomed.foreach(rel => Files.deleteIfExists(Paths.get(dir, rel)))
     // sweep now-empty per-commit directories so the data root doesn't
@@ -357,35 +380,24 @@ final class TxTable private (
 
   // ---- internals ----
 
-  private def commitWithRetry(
-      df: DataFrame, action: String, validateRemoves: Seq[String])
-      : Long = {
-    // schema gate: an append must evolve the table additively
-    val cur = currentVersion()
-    if (cur > 0) {
-      val tbl = StructType.fromDDL(schemaDdlAt(cur))
-      Catalog.additiveDrift(tbl, df.schema).foreach { why =>
-        throw new IllegalStateException(
-          s"append schema incompatible with $dir: $why")
+  /** The schema DDL an append of `next` on top of version `base`
+    * records — "" when the head's schema already covers it, the evolved
+    * schema when `next` adds fields or relaxes nullability — or
+    * Left(reason) when `next` is not an additive evolution of the head
+    * (Catalog.additiveDrift). Evolved fields keep the head's order; new
+    * fields follow in `next`'s order. */
+  private def appendSchema(base: Long, next: StructType)
+      : Either[String, String] =
+    if (base == 0) Right(next.toDDL)
+    else {
+      val head = StructType.fromDDL(schemaDdlAt(base))
+      Catalog.additiveDrift(head, next).toLeft {
+        val evolved = StructType(head.fields.map(f =>
+            f.copy(nullable = f.nullable || next(f.name).nullable)) ++
+          next.fields.filterNot(f => head.fieldNames.contains(f.name)))
+        if (evolved == head) "" else evolved.toDDL
       }
     }
-    var base = currentVersion()
-    val adds = writeData(df, base + 1)
-    var attempt = 0
-    while (attempt < 20) {
-      val ddl = if (base == 0) df.schema.toDDL else ""
-      if (tryPublish(dir,
-          Manifest(base + 1, action, adds, Seq.empty, ddl))) {
-        maybeCheckpoint(base + 1)
-        return base + 1
-      }
-      // publish race lost: appends commute — rebase on the new head
-      attempt += 1
-      base = currentVersion()
-    }
-    throw new IllegalStateException(
-      s"append to $dir lost the publish race 20 times — livelock?")
-  }
 
   private def publishOrThrow(m: Manifest, expectedBase: Long): Long = {
     if (currentVersion() != expectedBase || !tryPublish(dir, m))
@@ -468,116 +480,63 @@ private[graft] object TxLog {
   private def horizonPath(dir: String): Path =
     Paths.get(dir, "_txlog", "_horizon")
 
-  def listVersions(dir: String): Seq[Long] = {
-    val log = Paths.get(dir, "_txlog")
-    if (!Files.isDirectory(log)) return Seq.empty
-    Option(log.toFile.listFiles()).toSeq.flatten
-      .map(_.getName)
-      .filter(_.endsWith(".json"))
-      .map(_.stripSuffix(".json").toLong)
+  /** Versions of the `_txlog` entries named `<version><suffix>`,
+    * ascending (empty when the log directory does not exist). */
+  private def logged(dir: String, suffix: String): Seq[Long] =
+    Option(Paths.get(dir, "_txlog").toFile.listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.endsWith(suffix))
+      .map(_.stripSuffix(suffix).toLong)
       .sorted
-  }
+
+  def listVersions(dir: String): Seq[Long] = logged(dir, ".json")
 
   /** Counts manifest + checkpoint reads — lets the spec PROVE the
     * ≤ interval+1 log-reads bound instead of asserting it in prose. */
   val logReads = new java.util.concurrent.atomic.AtomicLong(0)
 
-  def latestCheckpointAt(dir: String, v: Long): Option[Checkpoint] = {
-    val log = Paths.get(dir, "_txlog")
-    if (!Files.isDirectory(log)) return None
-    Option(log.toFile.listFiles()).toSeq.flatten
-      .map(_.getName).filter(_.endsWith(".ckpt"))
-      .map(_.stripSuffix(".ckpt").toLong)
-      .filter(_ <= v).sorted.lastOption
-      .map(readCheckpoint(dir, _))
+  def latestCheckpointAt(dir: String, v: Long): Option[Checkpoint] =
+    logged(dir, ".ckpt").filter(_ <= v).lastOption.map { c =>
+      val f = readDoc(ckptPath(dir, c), c, s"checkpoint v$c of $dir")
+      Checkpoint(c, f.strs("files"), f.str("schemaDdl"))
+    }
+
+  def readManifest(dir: String, v: Long): Manifest = {
+    val f = readDoc(logPath(dir, v), v, s"manifest v$v of $dir")
+    Manifest(v, f.str("action"), f.strs("adds"), f.strs("removes"),
+      f.str("schemaDdl"))
   }
 
-  private def readCheckpoint(dir: String, v: Long): Checkpoint = {
+  /** The fields of log document `p`, which must hold version `v`: a
+    * checkpoint's version is where the fold resumes, so one copied
+    * under another name would silently resolve the wrong snapshot. */
+  private def readDoc(p: Path, v: Long, what: String): JsonDoc.Fields = {
     logReads.incrementAndGet()
-    val raw = new String(Files.readAllBytes(ckptPath(dir, v)), UTF_8)
-    val ver = raw.replaceAll("""^\{"version":(\d+).*""", "$1").toLong
-    Checkpoint(ver, arrField(raw, "files", s"checkpoint v$v"),
-      strField(raw, "schemaDdl", s"checkpoint v$v"))
+    val f = JsonDoc.obj(new String(Files.readAllBytes(p), UTF_8), what)
+    val held = f.long("version")
+    if (held != v)
+      throw new IllegalArgumentException(s"$what: holds version $held")
+    f
   }
 
-  // ---- escape-aware field scanners (round-9 advisory: the old
-  // comma-split array parser and the `charAt(j-1) == '\\'` closing-
-  // quote scan disagreed with esc() on paths containing ',' and on
-  // strings ending in an escaped backslash — writer and reader must
-  // share one string domain, and a malformed log must fail loudly,
-  // never silently yield a wrong file set) ----
+  /** Atomically publish a manifest; false when version already taken. */
+  def tryPublish(dir: String, m: Manifest): Boolean =
+    publish(logPath(dir, m.version), m)
 
-  /** Decode the JSON string whose OPENING quote is at `raw(at)`;
-    * returns (decoded, index just past the closing quote). Tracks
-    * escapes left-to-right, so `\\"` closes and `\\\\"` doesn't
-    * confuse it. */
-  private def scanString(raw: String, at: Int, what: String)
-      : (String, Int) = {
-    require(at < raw.length && raw.charAt(at) == '"',
-      s"$what: expected string at offset $at")
-    val b = new StringBuilder
-    var i = at + 1
-    while (i < raw.length && raw.charAt(i) != '"') {
-      raw.charAt(i) match {
-        case '\\' =>
-          require(i + 1 < raw.length, s"$what: dangling escape")
-          raw.charAt(i + 1) match {
-            case 'n' => b += '\n'; i += 2
-            case 'r' => b += '\r'; i += 2
-            case 't' => b += '\t'; i += 2
-            case 'u' =>
-              b += Integer.parseInt(raw.substring(i + 2, i + 6), 16).toChar
-              i += 6
-            case c => b += c; i += 2
-          }
-        case c => b += c; i += 1
-      }
-    }
-    require(i < raw.length, s"$what: unterminated string")
-    (b.toString, i + 1)
-  }
+  /** Publish a checkpoint the same way; false (benign) if some writer
+    * already landed it. */
+  def tryWriteCheckpoint(dir: String, c: Checkpoint): Boolean =
+    publish(ckptPath(dir, c.version), c)
 
-  private def strField(raw: String, name: String, what: String): String = {
-    val k = s""""$name":"""
-    val i = raw.indexOf(k)
-    require(i >= 0, s"$what missing $name")
-    scanString(raw, i + k.length, s"$what $name")._1
-  }
-
-  private def arrField(raw: String, name: String, what: String)
-      : Seq[String] = {
-    val k = s""""$name":["""
-    val i = raw.indexOf(k)
-    require(i >= 0, s"$what missing $name")
-    var j = i + k.length
-    val out = Seq.newBuilder[String]
-    var first = true
-    while (j < raw.length && raw.charAt(j) != ']') {
-      if (!first) {
-        require(raw.charAt(j) == ',', s"$what $name: expected ',' at $j")
-        j += 1
-      }
-      val (s, next) = scanString(raw, j, s"$what $name")
-      out += s
-      j = next
-      first = false
-    }
-    require(j < raw.length, s"$what $name: unterminated array")
-    out.result()
-  }
-
-  /** Publish a checkpoint with the same no-overwrite link discipline
-    * as manifests; false (benign) if some writer already landed it. */
-  def tryWriteCheckpoint(dir: String, c: Checkpoint): Boolean = {
-    val target = ckptPath(dir, c.version)
+  /** Write `doc` to a temp file, then hard-link it to `target` — link(2)
+    * FAILS if the target exists (unlike rename(2), which silently
+    * replaces), which is exactly the no-overwrite CAS a commit log
+    * needs. HDFS analog: rename w/o overwrite; S3: `If-None-Match: *`
+    * conditional PUT. */
+  private def publish(target: Path, doc: AnyRef): Boolean = {
     if (Files.exists(target)) return false
-    val body =
-      s"""{"version":${c.version},""" +
-      s""""files":${c.files.map(esc).mkString("[", ",", "]")},""" +
-      s""""schemaDdl":${esc(c.schemaDdl)}}"""
-    val tmp = Files.createTempFile(target.getParent, ".ck", ".tmp")
+    val tmp = Files.createTempFile(target.getParent, ".tx", ".tmp")
     try {
-      Files.write(tmp, body.getBytes(UTF_8))
+      Files.write(tmp, JsonDoc.write(doc).getBytes(UTF_8))
       try { Files.createLink(target, tmp); true }
       catch { case _: java.nio.file.FileAlreadyExistsException => false }
     } finally { Files.deleteIfExists(tmp): Unit }
@@ -600,53 +559,5 @@ private[graft] object TxLog {
     Files.move(tmp, p,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-  }
-
-  // hand-rolled JSON (the house rule: no extra deps). Paths and DDL
-  // need full string escaping — schema DDL contains quotes-in-theory
-  // and backslashes-on-windows; identical discipline to Verify's.
-  private def esc(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  private def render(m: Manifest): String = {
-    def arr(xs: Seq[String]) = xs.map(esc).mkString("[", ",", "]")
-    s"""{"version":${m.version},"action":${esc(m.action)},""" +
-      s""""adds":${arr(m.adds)},"removes":${arr(m.removes)},""" +
-      s""""schemaDdl":${esc(m.schemaDdl)}}"""
-  }
-
-  def readManifest(dir: String, v: Long): Manifest = {
-    logReads.incrementAndGet()
-    val raw = new String(Files.readAllBytes(logPath(dir, v)), UTF_8)
-    // fixed field order (we wrote it); a tolerant parser would hide
-    // corruption — the shared escape-aware scanners fail loudly on
-    // anything unexpected
-    val ver = raw.replaceAll("""^\{"version":(\d+).*""", "$1").toLong
-    val what = s"manifest v$v"
-    Manifest(ver, strField(raw, "action", what), arrField(raw, "adds", what),
-      arrField(raw, "removes", what), strField(raw, "schemaDdl", what))
-  }
-
-  /** Atomically publish a manifest; false when version already taken.
-    * Local FS: write a temp file, then hard-link it to the final name —
-    * link(2) FAILS if the target exists (unlike rename(2), which
-    * silently replaces), which is exactly the no-overwrite CAS a
-    * commit log needs. HDFS analog: rename w/o overwrite; S3: `If-
-    * None-Match: *` conditional PUT. */
-  def tryPublish(dir: String, m: Manifest): Boolean = {
-    val target = logPath(dir, m.version)
-    val tmp = Files.createTempFile(target.getParent, ".tx", ".tmp")
-    try {
-      Files.write(tmp, render(m).getBytes(UTF_8))
-      try { Files.createLink(target, tmp); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } finally { Files.deleteIfExists(tmp): Unit }
   }
 }

@@ -236,6 +236,33 @@ class ModelSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() == 1)
   }
 
+  test("catalog: a null document or a row with a null field fails " +
+       "loudly, never reads empty") {
+    val path = tmpDir("cat-null") + "/_metadata"
+    val cat = new graft.model.Catalog(spark, path)
+    val v1 = StructType(Seq(StructField("x", LongType)))
+    cat.register("/a", "std_msgs/Int64", v1)
+    val b = cat.register("/b", "std_msgs/Int64", v1)
+    val doc = java.nio.file.Paths.get(path, "catalog.json")
+    def put(text: String) =
+      java.nio.file.Files.write(doc, text.getBytes("UTF-8"))
+    def text() = new String(java.nio.file.Files.readAllBytes(doc), "UTF-8")
+    put("null")
+    for (call <- Seq[() => Any](
+        () => cat.allVersions(), () => cat.lookup("/a"),
+        () => cat.register("/c", "std_msgs/Int64", v1))) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("catalog.json"), e.getMessage)
+    }
+    // the failed register did not replace the document with one topic
+    assert(text() == "null")
+    put(s"""[{"topic":null,"table":"b","msgType":"${b.msgType}",""" +
+      s""""fingerprint":"${b.fingerprint}","schemaDdl":"${b.schemaDdl}",""" +
+      s""""version":1,"chain":"${b.chain}"}]""")
+    val e = intercept[IllegalArgumentException](cat.allVersions())
+    assert(e.getMessage.contains("topic"), e.getMessage)
+  }
+
   // ---- TxTable: the minimal ACID commit-log layer (r6 task 4) ----
 
   test("txlog: append/overwrite commits are atomic and versioned") {
@@ -318,6 +345,61 @@ class ModelSpec extends SparkSpec {
     intercept[graft.model.TxConflictException] {
       t.compact(64L * 1024 * 1024, base = staleBase)
     }
+  }
+
+  test("txlog: an additive append records the evolved schema") {
+    val t = graft.model.TxTable(spark, tmpDir("tx-evolve"))
+    t.append(Seq((1L, 10L)).toDF("k", "v"))                 // v1
+    t.append(Seq((2L, 20L, "two")).toDF("k", "v", "note"))  // v2: + note
+    assert(t.schemaDdlAt(1) == "k BIGINT NOT NULL,v BIGINT NOT NULL")
+    assert(t.schemaDdlAt(2) ==
+      "k BIGINT NOT NULL,v BIGINT NOT NULL,note STRING")
+    val rows = t.read().orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2))))
+    assert(rows.toSeq == Seq((1L, 10L, None), (2L, 20L, Some("two"))))
+    assert(t.readAt(1).columns.toSeq == Seq("k", "v"))
+    // a plain append of the evolved schema records nothing new
+    t.append(Seq((3L, 30L, "three")).toDF("k", "v", "note"))  // v3
+    assert(t.schemaDdlAt(3) == t.schemaDdlAt(2))
+    assert(graft.model.TxLog.readManifest(t.dir, 3L).schemaDdl.isEmpty)
+    // write-audit-publish records the evolution too: a new column in
+    // `next`'s order after the head's, a relaxed nullability in place
+    val relaxed = spark.createDataFrame(
+      java.util.Arrays.asList(org.apache.spark.sql.Row(4L, null, "four", 0.5)),
+      StructType(Seq(StructField("k", LongType, nullable = false),
+        StructField("v", LongType), StructField("note", StringType),
+        StructField("w", DoubleType))))
+    assert(t.writeAuditPublish(relaxed.select("w", "k", "v", "note"))(
+      _ => None) == Right(4L))
+    assert(t.schemaDdlAt(4) ==
+      "k BIGINT NOT NULL,v BIGINT,note STRING,w DOUBLE")
+    assert(t.read().filter($"k" === 4L).collect().head.isNullAt(1))
+    assert(t.read().count() == 4)
+  }
+
+  test("txlog: racing additive appends — the loser is gated against " +
+       "the head it would land on") {
+    val dir = tmpDir("tx-evolve-race")
+    graft.model.TxTable(spark, dir).append(Seq((0L, 0L)).toDF("k", "v"))
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val results = Seq("a", "b").map { c =>
+      val df = Seq((1L, 1L, c)).toDF("k", "v", c)
+      scala.concurrent.Future {
+        go.await()
+        scala.util.Try(graft.model.TxTable(spark, dir).append(df))
+      }(scala.concurrent.ExecutionContext.global)
+    }
+    go.countDown()
+    val done = results.map(f => scala.concurrent.Await.result(f,
+      scala.concurrent.duration.Duration(120, "s")))
+    // whichever landed first, the other drops its column: refused
+    assert(done.count(_.isSuccess) == 1, done.toString)
+    val lost = done.collectFirst { case scala.util.Failure(e) => e }.get
+    assert(lost.getMessage.contains("dropped"), lost.getMessage)
+    val t = graft.model.TxTable(spark, dir)
+    assert(t.currentVersion() == 2L)
+    val winner = t.read().columns.last
+    assert(Set("a", "b").contains(winner) && t.read().count() == 2)
   }
 
   // ---- r8: manifest checkpointing + vacuum that actually deletes ----
@@ -588,6 +670,27 @@ class ModelSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       graft.model.TxLog.latestCheckpointAt(dir, 10L))
     info(s"checkpoint without files: ${e.getMessage}")
+  }
+
+  test("txlog: content after the document, or a version other than the " +
+       "file name's, fails loudly") {
+    val ok = """{"version":1,"action":"append","adds":[],"removes":[],""" +
+      """"schemaDdl":""}"""
+    val m1 = "00000000000000000001.json"
+    for (body <- Seq(ok + "garbage", ok + "{}",
+                     ok.replace("\"version\":1", "\"version\":7"))) {
+      val dir = txlogWith("tx-bad-tail", m1, body)
+      val e = intercept[IllegalArgumentException](
+        graft.model.TxLog.readManifest(dir, 1L))
+      assert(e.getMessage.contains("manifest v1"), e.getMessage)
+    }
+    // a checkpoint is where the fold resumes: one holding another
+    // version would resolve the wrong snapshot
+    val dir = txlogWith("tx-bad-ckv", "00000000000000000010.ckpt",
+      """{"version":20,"files":[],"schemaDdl":"k BIGINT"}""")
+    val e = intercept[IllegalArgumentException](
+      graft.model.TxLog.latestCheckpointAt(dir, 15L))
+    assert(e.getMessage.contains("holds version 20"), e.getMessage)
   }
 
   test("txlog: logs in the existing byte format decode, and the writer " +
