@@ -1,22 +1,12 @@
 package graft
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.json4s._
+import org.json4s.jackson.JsonMethods
+import graft.ops.{Q, rmTree}
 object Bench {
-  /** The disk-heavy bench family: every declared query whose plan
-    * traverses a localCheckpoint fixpoint (connectedComponents, LPA,
-    * k-core, PageRank, bounded SSSP/BFS) or the signature-store
-    * write+readback seam — derived from the plan bodies (round-12;
-    * the SCALE.md r11 normalization rule's list, made mechanical).
-    * Cross-round comparisons divide this family's total by
-    * `calibration_io_s` and the rest by `calibration_s`. */
-  val DiskHeavy: Set[String] = Set(
-    "q_curate_funnel", "q_dedup_canonical", "q_dedup_cluster",
-    "q_dedup_cluster_sizes", "q_dedup_from_signatures",
-    "q_dedup_lang_purity", "q_dedup_soft_weights", "q_graph_kcore",
-    "q_graph_lpa", "q_graph_modularity", "q_graph_pagerank",
-    "q_graph_reachability", "q_graph_sssp", "q_split_leakage_safe")
-
   /** Cores of every tool main's local master, and its shuffle fan-out. */
   private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
@@ -49,268 +39,240 @@ object Bench {
       .foreach(r => { scala.util.Try(r.unpersist(blocking = false)); () })
   }
 
+  /** Seconds `body` took, or None after logging why it threw: a failed
+    * rep is skipped, never timed — time-to-exception must not
+    * masquerade as a (suspiciously fast) clean measurement. */
+  private[graft] def timed(what: String)(body: => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { body; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] $what failed: ${e.getMessage}")
+      None
+    }
+  }
+
+  /** The (upper) median; None when there is no sample. */
+  private[graft] def median(xs: Seq[Double]): Option[Double] =
+    if (xs.isEmpty) None else Some(xs.sorted.apply(xs.size / 2))
+
+  /** The disk-heavy family test: `df`'s plan reads a checkpointed RDD —
+    * a localCheckpoint fixpoint (connectedComponents, LPA, k-core,
+    * PageRank, bounded SSSP/BFS) or an eager seam. Read from the plan
+    * the query really ran, so membership follows the code. */
+  private[graft] def traversesCheckpoint(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectWithSubqueries {
+      case r: LogicalRDD if r.rdd.isCheckpointed => r
+    }.nonEmpty
+
+  /** What one bench run measured. `times`: every rep time of each query
+    * that never failed, in name order; `disk`: the queries whose plan
+    * traverses a checkpoint; a probe whose reps all failed is None. */
+  private[graft] final case class Run(
+      times: Seq[(String, Seq[Double])], failed: Seq[String],
+      disk: Set[String], calibration: Option[Double],
+      calibrationIo: Option[Double], floor: Option[Double], sf: String)
+
+  /** Chars the stdout line's `queries` map may take: the driver keeps
+    * only the LAST ~2000 chars of the process's output, and a line
+    * carrying all ~400 per-query timings is >5 KB, so its head —
+    * `"metric"`/`"value"` included — would fall off the buffer. */
+  private val QueriesBudget = 1500
+
+  /** One bench JSON line, fields in the driver's order, numbers with
+    * three decimals, `null` for a probe with no successful rep. `full`
+    * (the BENCH_FULL artifact) carries every query's median and the
+    * cost decile's `[min, median]` spread; the stdout line carries the
+    * slowest medians that fit [[QueriesBudget]]. */
+  private[graft] def jsonLine(r: Run, full: Boolean): String = {
+    def sec(v: Double): JValue =
+      JDecimal(BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP))
+    def opt(v: Option[Double]): JValue = v.map(sec).getOrElse(JNull)
+    def over(n: Double, d: Option[Double]) = opt(d.filter(_ > 0).map(n / _))
+    def obj(kvs: Seq[(String, JValue)]) = JObject(kvs.toList)
+    val med = r.times.map { case (k, ts) => k -> median(ts).getOrElse(0.0) }
+    val total = med.map(_._2).sum
+    // Family-normalized ratios, computed in the artifact so cross-round
+    // comparison is mechanical: the box drifts ~2× between rounds, so
+    // the disk-heavy family divides by the IO probe and everything else
+    // by the CPU probe; these ratios are the quoted numbers, never raw
+    // seconds.
+    val diskTotal = med.collect { case (k, v) if r.disk(k) => v }.sum
+    val cpuTotal = total - diskTotal
+    val bySlowest = med.sortBy(-_._2)
+    val queries =
+      if (full) med
+      else bySlowest.foldLeft((Vector.empty[(String, Double)], 0)) {
+        case ((kept, used), (k, v)) =>
+          // `"k":v` plus its comma
+          val n = k.length + 4 + JsonMethods.compact(sec(v)).length
+          if (used + n <= QueriesBudget) (kept :+ (k -> v), used + n)
+          else (kept, used)
+      }._1
+    // per-query spread (min, median over the reps) for the top cost
+    // decile: a median is weakest exactly where the queries are slowest,
+    // so the artifact tells a noisy median from a moved floor
+    val mins = r.times.map { case (k, ts) => k -> ts.min }.toMap
+    val spread =
+      if (!full) Nil
+      else List("spread_min_med" -> obj(
+        bySlowest.take(math.max(1, med.size / 10)).map { case (k, v) =>
+          k -> JArray(List(sec(mins(k)), sec(v)))
+        }))
+    JsonMethods.compact(obj(List(
+      "metric" -> JString("total"),
+      "value" -> sec(total),
+      "unit" -> JString("sec"),
+      "n_queries" -> JInt(med.size),
+      "calibration_s" -> opt(r.calibration),
+      "calibration_io_s" -> opt(r.calibrationIo),
+      "floor_s" -> opt(r.floor),
+      "ratios" -> obj(List(
+        "total_over_calib" -> over(total, r.calibration),
+        "cpu_over_calib" -> over(cpuTotal, r.calibration),
+        "disk_over_io" -> over(diskTotal, r.calibrationIo),
+        "cpu_total_s" -> sec(cpuTotal),
+        "disk_total_s" -> sec(diskTotal))),
+      "queries" -> obj(queries.map { case (k, v) => k -> sec(v) })) ++
+      spread ++ List(
+      "failed" -> JArray(r.failed.sorted.map(JString(_)).toList),
+      "sf" -> JString(r.sf))))
+  }
+
   def main(args: Array[String]): Unit = {
+    // Builder-side subset, same list format as Verify's SPARK_GRAFT_ONLY;
+    // an unknown name fails here, before any Spark work. The driver sets
+    // no such env var and always measures the full suite.
+    val qs = SparkEntry.select(sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", ""))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    // JIT/codegen/session warmup outside the measured window so the first
-    // measured query isn't charged ~4s of one-time JVM cost. Warm on the
-    // BENCH dataset (not a hardcoded fixture path) and never let a warmup
-    // failure kill the run before any JSON is emitted.
-    // Two warmups: a plain agg (codegen/session init) AND one CC-family
-    // query — r4's driver re-run showed the first connected-components
-    // queries paying ~15 s of one-time JIT/class-load that the agg
-    // warmup does not touch (BENCH_r04 182.8 vs 228.6 s reconciliation,
-    // SCALE.md r5): the fixpoint loop, accumulator plumbing, and
-    // localCheckpoint paths only compile on first use.
-    for (w <- Seq("q_agg_group", "q_dedup_cluster"))
-      try SparkEntry.queries(w)(spark, sfDir).count()
-      catch { case NonFatal(e) =>
-        System.err.println(s"[bench] warmup $w failed: ${e.getMessage}")
-      }
     // this box's run-to-run wall-clock variance is measured at ±60%
     // (SCALE.md) — a single run per query mostly benchmarks the noise.
-    // Report the MEDIAN of `reps` runs per query, with the reps loop
-    // OUTSIDE the query loop (true round-robin): rep r of every query
-    // runs before rep r+1 of any, so repeats of one query are never
-    // back-to-back warm-cache re-runs of the measurement just taken.
-    // A malformed reps env value falls back to the default rather than
-    // killing the run before any JSON is emitted.
+    // Every figure is the MEDIAN of `reps` runs. A malformed reps env
+    // value falls back to the default rather than killing the run
+    // before any JSON is emitted.
     val reps = scala.util.Try(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").trim.toInt)
       .getOrElse(3).max(1)
-    // Box-state calibration (r9, SCALE.md r8: cross-round totals
-    // measure code × box-state with the box swinging ±40%): a FIXED
-    // piece of work — pure built-in scan+agg over lineitem, no graft
-    // operator in the path — timed the same way as the queries
-    // (median of `reps`). Future rounds divide totals by this to
-    // normalize out the box; the number changes only when the box or
-    // Spark itself does, never when query code does.
-    val calibration = {
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try {
-          import org.apache.spark.sql.functions._
-          // consume the AGGREGATE OUTPUTS, not .count() — counting the
-          // grouped rows lets Catalyst prune the unused sum/avg
-          // expressions, so the timed job would measure only the
-          // group-count path and the baseline would drift with future
-          // optimizer changes instead of only with box state
-          // (round-10 advisory). collect() materializes every agg
-          // column; the checksum goes to stderr so nothing is dead.
-          val rows = graft.io.Tables.lineitem(spark, sfDir)
-            .groupBy(col("l_returnflag"), col("l_linestatus"))
-            .agg(sum(col("l_quantity")).as("sq"),
-                 avg(col("l_extendedprice")).as("ap"),
-                 count(lit(1)).as("n"))
-            .collect()
-          val chk = rows.foldLeft(0L)((a, r) =>
-            a ^ java.lang.Double.doubleToLongBits(r.getDouble(1))
-              ^ java.lang.Double.doubleToLongBits(r.getDouble(2))
-              ^ r.getLong(3))
-          System.err.println(s"[bench] calibration checksum $chk " +
-            s"over ${rows.length} groups")
-        } catch { case NonFatal(e) =>
-          System.err.println(s"[bench] calibration failed: ${e.getMessage}")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      runs(runs.size / 2)
-    }
-    // IO-bound calibration probe (round-10 verdict: the CPU scan+agg
-    // probe cannot see disk-state drift — r10's disk-heavy family
-    // moved 2–2.6× against a CPU calibration that moved only 1.13×,
-    // and the bench ran an hour after a sweep wrote tens of GB of
-    // DuckDB spill). A FIXED piece of disk work, timed like the
-    // queries (median of `reps`): ~50 MB of incompressible hashed
-    // longs written as parquet to a fresh tmpdir and read fully back.
-    // Cross-round rule (SCALE.md): normalize CPU-bound families by
-    // `calibration_s`, disk-heavy families (localCheckpoint fixpoints,
-    // store write+readback) by `calibration_io_s`. Deletion of the
-    // probe dir is untimed.
-    // A failed probe rep is SKIPPED, not timed: including a partial
-    // write/read elapsed would skew the median silently beyond the one
-    // stderr line (round-12 advisory). All reps failing emits
-    // calibration_io_s: null in the artifact.
-    val calibrationIo: Option[Double] = {
+    val spark = session()
+    // JIT/codegen/session warmup outside the measured window so the first
+    // measured query isn't charged ~4s of one-time JVM cost, on the BENCH
+    // dataset; a warmup failure is logged, never fatal. Two warmups: a
+    // plain agg (codegen/session init) AND one CC-family query — the
+    // first connected-components queries paid ~15 s of one-time
+    // JIT/class-load that the agg warmup does not touch (SCALE.md r5):
+    // the fixpoint loop, accumulator plumbing, and localCheckpoint paths
+    // only compile on first use.
+    for (w <- Seq("q_agg_group", "q_dedup_cluster"))
+      timed(s"warmup $w")(SparkEntry.queries(w)(spark, sfDir).count())
+    def probe(what: String)(body: => Unit): Option[Double] =
+      median((1 to reps).flatMap(_ => timed(what)(body)))
+    // Box-state calibration (SCALE.md r8: cross-round totals measure
+    // code × box-state with the box swinging ±40%): a FIXED piece of
+    // work — pure built-in scan+agg over lineitem, no graft operator in
+    // the path. The number changes only when the box or Spark itself
+    // does, never when query code does.
+    val calibration = probe("calibration") {
       import org.apache.spark.sql.functions._
-      val runs = (1 to reps).flatMap { _ =>
-        val dir = Files.createTempDirectory("graft-bench-io")
-        val probe = dir.resolve("probe").toString
-        val t0 = System.nanoTime()
-        var probeOk = true
-        try {
-          spark.range(0L, 3000000L, 1L, 8)
-            .select(col("id"), xxhash64(col("id")).as("h1"),
-                    xxhash64(col("id"), lit(1)).as("h2"))
-            .write.mode("overwrite").parquet(probe)
-          // bit_xor, NOT sum: summing 3M xxhash64 longs overflows
-          // under ANSI mode — which made every r11 probe rep take the
-          // catch path and record a partial (write + most-of-read)
-          // timing. The xor consumes every row just the same with no
-          // overflow, so the probe now completes and the skip-on-
-          // failure rule below actually means something.
-          val r = spark.read.parquet(probe)
-            .agg(expr("bit_xor(h1)").as("s"), count(lit(1)).as("n"))
-            .collect()(0)
-          System.err.println(
-            s"[bench] io calibration checksum ${r.getLong(0)} over " +
-              s"${r.getLong(1)} rows")
-        } catch { case NonFatal(e) =>
-          probeOk = false
-          System.err.println(s"[bench] io calibration failed: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        try {
-          import scala.jdk.CollectionConverters._
-          Files.walk(dir).iterator().asScala.toSeq.reverse
-            .foreach(p => { Files.deleteIfExists(p); () })
-        } catch { case NonFatal(_) => }
-        if (probeOk) Some(dt) else None
-      }.sorted
-      if (runs.isEmpty) None else Some(runs(runs.size / 2))
+      // consume the AGGREGATE OUTPUTS, not .count() — counting the
+      // grouped rows lets Catalyst prune the unused sum/avg expressions,
+      // so the baseline would drift with optimizer changes instead of
+      // only with box state. The checksum goes to stderr so nothing is
+      // dead.
+      val rows = graft.io.Tables.lineitem(spark, sfDir)
+        .groupBy(col("l_returnflag"), col("l_linestatus"))
+        .agg(sum(col("l_quantity")).as("sq"),
+             avg(col("l_extendedprice")).as("ap"),
+             count(lit(1)).as("n"))
+        .collect()
+      // read by name: column 1 is l_linestatus, and reading it as a
+      // double threw after the job had run, so every rep used to fail
+      val chk = rows.foldLeft(0L)((a, r) =>
+        a ^ java.lang.Double.doubleToLongBits(r.getAs[Double]("sq"))
+          ^ java.lang.Double.doubleToLongBits(r.getAs[Double]("ap"))
+          ^ r.getAs[Long]("n"))
+      System.err.println(s"[bench] calibration checksum $chk " +
+        s"over ${rows.length} groups")
     }
-    // Per-query overhead FLOOR probe (r12 verdict #5): ~320 of the 391
-    // queries sit at 0.4–0.5 s each — mostly fixed per-query cost (job
-    // scheduling + per-query codegen + one scan setup), not work. Time
-    // the cheapest possible query through the same path (median of
-    // `reps`) and publish it, so overhead-vs-work per query is
-    // mechanical: a query within ~2× of floor_s has nothing left to
-    // optimize at this SF.
-    val floor = {
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try spark.range(1).count()
-        catch { case NonFatal(e) =>
-          System.err.println(s"[bench] floor probe failed: ${e.getMessage}")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      runs(runs.size / 2)
-    }
-    var failed = List.empty[String]
-    // Builder-side fast path mirroring Verify's SPARK_GRAFT_ONLY: time
-    // a subset while iterating on a hot query. The driver sets no such
-    // env var and always measures the full suite.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(kv => only.forall(_.contains(kv._1)))
+    // IO-bound calibration probe: the CPU probe cannot see disk-state
+    // drift (r10's disk-heavy family moved 2–2.6× against a CPU
+    // calibration that moved 1.13×). A FIXED piece of disk work: ~50 MB
+    // of incompressible hashed longs written as parquet to a fresh
+    // tmpdir and read fully back. Creating and deleting the dir is
+    // untimed.
+    val calibrationIo = median((1 to reps).flatMap { _ =>
+      val dir = Files.createTempDirectory("graft-bench-io")
+      val path = dir.resolve("probe").toString
+      try timed("io calibration") {
+        import org.apache.spark.sql.functions._
+        spark.range(0L, 3000000L, 1L, 8)
+          .select(col("id"), xxhash64(col("id")).as("h1"),
+                  xxhash64(col("id"), lit(1)).as("h2"))
+          .write.mode("overwrite").parquet(path)
+        // bit_xor, NOT sum: summing 3M xxhash64 longs overflows under
+        // ANSI mode; the xor consumes every row just the same
+        val r = spark.read.parquet(path)
+          .agg(expr("bit_xor(h1)").as("s"), count(lit(1)).as("n"))
+          .collect()(0)
+        System.err.println(
+          s"[bench] io calibration checksum ${r.getLong(0)} over " +
+            s"${r.getLong(1)} rows")
+      }
+      finally rmTree(dir.toFile)
+    })
+    // Per-query overhead FLOOR: most queries at sf0.1 sit at 0.4–0.5 s,
+    // mostly fixed per-query cost (job scheduling + codegen + one scan
+    // setup), not work. A query within ~2× of floor_s has nothing left
+    // to optimize at this SF.
+    val floor = probe("floor probe")(spark.range(1).count())
     val times = scala.collection.mutable.Map.empty[String, List[Double]]
-    def runOne(name: String,
-               fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Unit = {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).count()
-        times(name) = ((System.nanoTime() - t0) / 1e9) ::
-          times.getOrElse(name, Nil)
-      } catch { case NonFatal(e) =>
-        // record the failure loudly — time-to-exception must not
-        // masquerade as a (suspiciously fast) clean measurement
-        failed ::= name
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+    val failed = scala.collection.mutable.Set.empty[String]
+    val disk = scala.collection.mutable.Set.empty[String]
+    def runOne(q: Q): Unit = {
+      timed(q.name) {
+        val df = q.fn(spark, sfDir)
+        df.count()
+        // a walk of the analyzed plan, no Spark job
+        if (traversesCheckpoint(df)) disk += q.name
+      } match {
+        case Some(t) => times(q.name) = t :: times.getOrElse(q.name, Nil)
+        case None => failed += q.name
       }
       // untimed: every rep measures cold per-query cost
       release(spark)
     }
-    for (_ <- 1 to reps; (name, fn) <- names) runOne(name, fn)
-    // Drift-proofing (round-12 verdict #4a): the cost-decile queries
-    // are where a median-of-3 is weakest, so they get topped up to
-    // ≥ 5 samples each (round-robin again) before medians are taken.
+    def ok = qs.collect { case q if !failed(q.name) => q.name -> times(q.name) }
+    // the reps loop is OUTSIDE the query loop (true round-robin): rep r
+    // of every query runs before rep r+1 of any, so repeats of one query
+    // are never back-to-back warm-cache re-runs
+    for (_ <- 1 to reps; q <- qs) runOne(q)
+    // Drift-proofing: the cost-decile queries are where a median-of-3
+    // is weakest, so they get topped up to ≥ 5 samples each
+    // (round-robin again) before medians are taken.
     val repsDecile = 5
-    if (reps < repsDecile && names.nonEmpty) {
-      val med0 = names.map { case (n, _) =>
-        val s = times.getOrElse(n, Nil).sorted
-        n -> (if (s.isEmpty) 0.0 else s(s.size / 2))
-      }.toMap
-      val decileQ = names.filterNot(kv => failed.contains(kv._1))
-        .sortBy(kv => -med0(kv._1)).take(math.max(1, names.size / 10))
-      for (_ <- reps + 1 to repsDecile; (name, fn) <- decileQ)
-        runOne(name, fn)
-    }
-    val results = names.map { case (name, _) =>
-      val sorted = times.getOrElse(name, Nil).sorted
-      name -> (if (sorted.isEmpty) 0.0 else sorted(sorted.size / 2))
-    }
-    failed = failed.distinct
-    val ok = results.filterNot { case (k, _) => failed.contains(k) }
-    def sec(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val total = ok.map(_._2).sum
-    val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // The driver keeps only the LAST ~2000 chars of this process's
-    // output (BENCH_r{1..3}.json all show `"parsed": null` with a
-    // 2000-char `tail` whose head is mid-line): a single JSON line
-    // carrying all ~200 per-query timings is >5 KB, so its head —
-    // including `"metric"`/`"value"` — fell off the buffer and the
-    // driver never parsed a headline number. Emit the FULL map to
-    // stderr + a repo file for the judge, and keep the one stdout
-    // JSON line under the buffer: headline total over ALL queries,
-    // plus the slowest per-query timings that fit a fixed budget.
-    val fullQs = ok.map { case (k, v) => "\"" + k + "\":" + sec(v) }
-      .mkString("{", ",", "}")
-    // per-query spread (min,med over the reps) for the top cost decile
-    // (round-10 verdict #5): median-of-3 is weakest exactly where the
-    // queries are slowest, so the artifact carries enough to tell a
-    // noisy median from a moved floor without re-running the suite.
-    val okMap = ok.toMap
-    val decile = ok.sortBy(-_._2).take(math.max(1, ok.size / 10))
-    val spreadJson = decile.map { case (k, _) =>
-      val rs = times.getOrElse(k, Nil)
-      val min = if (rs.isEmpty) 0.0 else rs.min
-      "\"" + k + "\":[" + sec(min) + "," + sec(okMap.getOrElse(k, 0.0)) + "]"
-    }.mkString("{", ",", "}")
-    // Family-normalized ratios computed IN the artifact (round-12
-    // verdict #4b) so cross-round comparison is mechanical: the
-    // disk-heavy family (localCheckpoint fixpoints + the signature
-    // store write+readback — membership derived from the plan bodies,
-    // SCALE.md r11 rule) divides by the IO pin, everything else by the
-    // CPU pin. The box drifts ~2× between rounds; these ratios are the
-    // quoted cross-round numbers, never raw seconds.
-    val diskTotal = ok.collect {
-      case (k, v) if DiskHeavy(k) => v
-    }.sum
-    val cpuTotal = total - diskTotal
-    def over(n: Double, d: Double) = if (d > 0) sec(n / d) else "null"
-    val ioJson = calibrationIo.map(sec).getOrElse("null")
-    val ratiosJson =
-      s"""{"total_over_calib":${over(total, calibration)},""" +
-      s""""cpu_over_calib":${over(cpuTotal, calibration)},""" +
-      s""""disk_over_io":${calibrationIo.map(io => over(diskTotal, io))
-        .getOrElse("null")},""" +
-      s""""cpu_total_s":${sec(cpuTotal)},"disk_total_s":${sec(diskTotal)}}"""
-    val full = s"""{"metric":"total","value":${sec(total)},"unit":"sec","n_queries":${ok.size},"calibration_s":${sec(calibration)},"calibration_io_s":$ioJson,"floor_s":${sec(floor)},"ratios":$ratiosJson,"queries":$fullQs,"spread_min_med":$spreadJson,"failed":$failedJson,"sf":"$sfDir"}"""
+    val decile = ok.sortBy { case (_, ts) => -median(ts).getOrElse(0.0) }
+      .take(math.max(1, qs.size / 10)).map(_._1).toSet
+    for (_ <- reps + 1 to repsDecile; q <- qs if decile(q.name)) runOne(q)
+    System.err.println(s"[bench] disk family (${disk.size}): " +
+      disk.toSeq.sorted.mkString(","))
+    val run = Run(ok, failed.toSeq, disk.toSet, calibration, calibrationIo,
+      floor, sfDir)
+    val full = jsonLine(run, full = true)
     System.err.println(s"[bench-full] $full")
-    // r12 verdict #2: every invocation used to clobber BENCH_FULL.json
-    // (the driver's 8-core run silently replaced the builder's
-    // committed final-HEAD artifact). Write BOTH the legacy name (the
-    // judge's known location, always the LATEST run) and a
-    // cpus/sf-stamped name that distinct configurations never collide
-    // on.
+    // Write BOTH the legacy name (the known location, always the LATEST
+    // run) and a cpus/sf-stamped name that distinct configurations never
+    // collide on.
     val sfLabel = Paths.get(sfDir).getFileName.toString
     for (out <- Seq("BENCH_FULL.json", s"BENCH_FULL_c${cpus}_$sfLabel.json"))
       try Files.writeString(Paths.get(out), full + "\n")
       catch { case NonFatal(e) =>
         System.err.println(s"[bench] full dump to $out failed: ${e.getMessage}")
       }
-    val budget = 1500 // chars for the queries map; line stays < ~1800
-    val bySlowest = ok.sortBy(-_._2)
-      .map { case (k, v) => "\"" + k + "\":" + sec(v) }
-    val kept = scala.collection.mutable.ListBuffer.empty[String]
-    var used = 0
-    for (e <- bySlowest if used + e.length + 1 <= budget) {
-      kept += e; used += e.length + 1
-    }
-    val qs = kept.mkString("{", ",", "}")
-    // r12 verdict #1 — the driver-visible contract: the one-line JSON
-    // must be the process's LAST stdout line, unprefixed. It is
-    // therefore printed AFTER spark.stop() (Spark's shutdown chatter
-    // goes to stderr/log4j, never stdout) straight to System.out and
-    // flushed; build.sbt's StdoutOutput + showSuccess := false keep
-    // sbt from prefixing it or appending a [success] banner after it.
-    // The measurement methodology is untouched — only the emission
-    // point moved.
-    val line = s"""{"metric":"total","value":${sec(total)},"unit":"sec","n_queries":${ok.size},"calibration_s":${sec(calibration)},"calibration_io_s":$ioJson,"floor_s":${sec(floor)},"ratios":$ratiosJson,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
+    // The driver-visible contract: the one-line JSON must be the
+    // process's LAST stdout line, unprefixed. It is therefore printed
+    // AFTER spark.stop() (Spark's shutdown chatter goes to stderr/log4j,
+    // never stdout) straight to System.out and flushed; build.sbt's
+    // StdoutOutput + showSuccess := false keep sbt from prefixing it or
+    // appending a [success] banner after it.
+    val line = jsonLine(run, full = false)
     spark.stop()
     System.out.println(line)
     System.out.flush()

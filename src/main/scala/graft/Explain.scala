@@ -16,7 +16,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * Usage: sbt "runMain graft.Explain <outDir> [suffix] [name1 name2 ...]"
   * (suffix e.g. `_before` / `_after`; files land as
-  * `<outDir>/<query><suffix>.txt`). No names = all declared queries.
+  * `<outDir>/<query><suffix>.txt`), in name order. No names = all
+  * declared queries; an unknown name fails before the session starts.
   * Env: SPARK_GRAFT_SF_DIR (data dir), SPARK_GRAFT_CPUS (cores).
   */
 object Explain {
@@ -29,17 +30,13 @@ object Explain {
     val outDir = args(0)
     val suffix = args.lift(1).getOrElse("")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val names =
-      if (args.length > 2) args.drop(2).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val qs = SparkEntry.select(args.drop(2).mkString(","))
     val spark = Bench.session()
     Files.createDirectories(Paths.get(outDir))
-    for (n <- names) {
+    for (q <- qs; n = q.name) {
       val txt =
         try {
-          val qe = SparkEntry.queries(n)(spark, sfDir).queryExecution
+          val qe = q.fn(spark, sfDir).queryExecution
           val formatted = qe.explainString(ExplainMode.fromString("formatted"))
           val plan = qe.executedPlan.toString.linesIterator.toSeq
           def nodes(s: String) = plan.count(_.contains(s))

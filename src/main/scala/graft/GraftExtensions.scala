@@ -17,9 +17,9 @@ import graft.plans.{AsOfJoinStrategy, BandedRangeJoinRule, BitmapDistinctRule}
   *    single-merge-pass AsOfJoinExec
   *  - BandedRangeJoinRule: optimizer rewrite of naive bounded
   *    time-range joins into the banded equi-join shape
-  *  - BitmapDistinctRule (opt-in via
-  *    spark.graft.bitmapDistinct.enabled): COUNT(DISTINCT intcol) →
-  *    bitmap-aggregation form, distinct values shuffled as bitmaps
+  *  - BitmapDistinctRule: COUNT(DISTINCT intcol) → bitmap-aggregation
+  *    form, distinct values shuffled as bitmaps (loading this extension
+  *    is the opt-in)
   * (Programmatic alternatives exist too: DotF32.register /
   * WordNgrams.register / AsOf.ensureRegistered /
   * `spark.experimental.extraOptimizations = Seq(BandedRangeJoinRule)`.)
@@ -30,7 +30,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((
       new FunctionIdentifier("dot_f32"),
       new ExpressionInfo(classOf[DotF32].getName, "dot_f32"),
-      (exprs: Seq[Expression]) => DotF32(exprs.head, exprs(1))))
+      (exprs: Seq[Expression]) => DotF32.builder(exprs)))
     ext.injectFunction((
       new FunctionIdentifier("word_ngrams"),
       new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),

@@ -32,4 +32,18 @@ object SparkEntry {
     * the same parquet tables. */
   def oracleSql: Map[String, String] =
     all.map(q => q.name -> q.sql).toMap
+
+  /** The tool mains' query subset: the declared queries named in the
+    * comma-separated `names` (blank entries ignored), in name order; all
+    * of them when it names none. An unknown name throws
+    * IllegalArgumentException naming every unknown one, so a main that
+    * selects before it builds its session fails before any Spark work. */
+  def select(names: String): Seq[Q] = {
+    val wanted = names.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val qs = all.sortBy(_.name)
+    val unknown = wanted -- qs.map(_.name)
+    require(unknown.isEmpty,
+      s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    if (wanted.isEmpty) qs else qs.filter(q => wanted(q.name))
+  }
 }

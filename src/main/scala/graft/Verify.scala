@@ -7,30 +7,21 @@ import org.json4s.jackson.Serialization
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Builder-side fast path: SPARK_GRAFT_ONLY=q_a,q_b runs a subset; an
+    // unknown name fails here, before any Spark work. The driver sets no
+    // such env var and always gets the full sweep.
+    val qs = SparkEntry.select(sys.env.getOrElse("SPARK_GRAFT_ONLY", ""))
     val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
-    // Builder-side fast path: SPARK_GRAFT_ONLY=q_a,q_b runs a subset.
-    // The driver sets no such env var and always gets the full sweep.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only.fold(SparkEntry.queries)(
-      keep => SparkEntry.queries.filter(kv => keep(kv._1)))
-    selected.foreach { case (name, fn) =>
+    qs.foreach { q =>
       // delete any previous run's output FIRST: if this query now fails,
       // stale parquet from an earlier round must not survive for the
       // comparator to silently PASS against
-      val dest = new java.io.File(s"$outDir/$name")
-      if (dest.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(dest)
-      }
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      graft.ops.rmTree(new java.io.File(s"$outDir/${q.name}"))
+      try q.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
       // drop the query's rank/CDF pins and dead localCheckpoint
       // blocks so a full sweep never accumulates storage

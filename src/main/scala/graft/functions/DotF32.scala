@@ -73,8 +73,15 @@ case class DotF32(left: Expression, right: Expression)
 }
 
 object DotF32 {
+  /** THE builder for `dot_f32(a, b)`, shared by register() and
+    * GraftExtensions. */
+  private[graft] def builder(exprs: Seq[Expression]): DotF32 = {
+    require(exprs.length == 2, "dot_f32(a, b) takes two arguments")
+    DotF32(exprs.head, exprs(1))
+  }
+
   /** Register `dot_f32(a, b)` so SQL/selectExpr can call it. */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f32", exprs => DotF32(exprs.head, exprs(1)), "scala_udf")
+      "dot_f32", builder, "scala_udf")
 }

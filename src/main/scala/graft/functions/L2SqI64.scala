@@ -72,8 +72,13 @@ case class L2SqI64(left: Expression, right: Expression)
 }
 
 object L2SqI64 {
+  private def builder(exprs: Seq[Expression]): L2SqI64 = {
+    require(exprs.length == 2, "l2sq_i64(a, b) takes two arguments")
+    L2SqI64(exprs.head, exprs(1))
+  }
+
   /** Register `l2sq_i64(a, b)` so SQL/selectExpr can call it. */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2sq_i64", exprs => L2SqI64(exprs.head, exprs(1)), "scala_udf")
+      "l2sq_i64", builder, "scala_udf")
 }

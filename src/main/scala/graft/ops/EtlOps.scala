@@ -17,26 +17,6 @@ object EtlOps extends OpGroup {
 
   private val DayUs = 86400000000L
 
-  /** Fresh-per-construction TxTable dir for q_etl_snapshot_diff, at a
-    * FIXED per-sfDir path (LlmOps.sigStorePath discipline): wiped on
-    * each construction so bench/verify reps never accumulate commits,
-    * removed on JVM exit by a one-time shutdown hook. */
-  private val txDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[ops] def txDiffPath(sfDir: String): String = {
-    val p = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_txdiff_" + Integer.toHexString(sfDir.hashCode)).toString
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(new java.io.File(p))
-    if (txDirs.add(p)) Runtime.getRuntime.addShutdownHook(new Thread {
-      override def run(): Unit = rm(new java.io.File(p))
-    })
-    p
-  }
-
   def qs: Seq[Q] = Seq(
     Q(
       // keep-latest order per customer — api.Dedup.keepLatest: ONE
@@ -519,7 +499,9 @@ object EtlOps extends OpGroup {
             when(pmod(col("o_orderkey"), lit(7)) === 0,
                  col("cents") - 100).otherwise(col("cents")))
         val newDef = o.filter(pmod(col("o_orderkey"), lit(13)) =!= 0)
-        val tx = graft.model.TxTable(s, EtlOps.txDiffPath(d))
+        // wiped per construction: reps never accumulate commits
+        val tx = graft.model.TxTable(s,
+          scratchDir("graft_txdiff_", d, wipe = true))
         val v1 = tx.overwrite(oldDef)   // snapshot 1: the stale table
         val v2 = tx.overwrite(newDef)   // snapshot 2: after the loads
         graft.api.Etl.snapshotDiff(

@@ -34,27 +34,6 @@ object LlmOps extends OpGroup {
 
   private val K = 16 // minhash signature length
 
-  /** Fixed per-sfDir signature-store path with a ONE-TIME recursive
-    * shutdown-hook cleanup: overwrite-to-same-path bounds disk across
-    * verify/bench reps (File.deleteOnExit can't remove non-empty
-    * parquet dirs, hence the hook; registered once per distinct path). */
-  private val sigStores =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[ops] def sigStorePath(sfDir: String): String = {
-    val p = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_sigstore_" + Integer.toHexString(sfDir.hashCode)).toString
-    if (sigStores.add(p)) Runtime.getRuntime.addShutdownHook(new Thread {
-      override def run(): Unit = {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(p))
-      }
-    })
-    p
-  }
-
   /** MinHash/LSH near-dup candidate pairs (doc_a < doc_b, n_match) —
     * shared by q_dedup_near_minhash and q_dedup_cluster; delegates to
     * the public parameterized API (graft.api.Dedup.minhashPairs). Shape
@@ -327,7 +306,7 @@ object LlmOps extends OpGroup {
         // disk stays bounded across verify/bench reps, and a one-time
         // shutdown hook removes it — a fresh createTempDirectory per
         // construction leaked one full signature copy per rep
-        val store = LlmOps.sigStorePath(d)
+        val store = scratchDir("graft_sigstore_", d)
         graft.api.Dedup.minhashSignatures(
             Tables.documents(s, d), col("doc_id"), col("text"))
           .write.mode("overwrite").partitionBy("k").parquet(store)

@@ -37,24 +37,6 @@ object TrainOps extends OpGroup {
     s"(CASE WHEN ($num) >= 0 THEN (2*($num) + ($den)) // (2*($den)) " +
       s"ELSE -((2*(-($num)) + ($den)) // (2*($den))) END)"
 
-  /** Fixed per-sfDir scratch dir for the TxTable time-travel demo
-    * (the q_dedup_from_signatures discipline: same path every rep so
-    * disk stays bounded, one shutdown hook removes it). */
-  private val txDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[ops] def txDemoPath(sfDir: String, tag: String = ""): String = {
-    val p = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_txdemo_" + tag + Integer.toHexString(sfDir.hashCode)).toString
-    if (txDirs.add(p)) Runtime.getRuntime.addShutdownHook(new Thread {
-      override def run(): Unit = TrainOps.rmTree(new java.io.File(p))
-    })
-    p
-  }
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(): Unit
-  }
-
   def qs: Seq[Q] = Seq(
 
     Q(
@@ -223,8 +205,7 @@ object TrainOps extends OpGroup {
       // (bounded disk, shutdown-hook cleaned).
       "q_etl_time_travel",
       (s, d) => {
-        val dir = txDemoPath(d)
-        rmTree(new java.io.File(dir))
+        val dir = scratchDir("graft_txdemo_", d, wipe = true)
         val t = graft.model.TxTable(s, dir)
         val o = Tables.orders(s, d)
           .select(col("o_orderkey"),
@@ -686,8 +667,7 @@ object TrainOps extends OpGroup {
       // deltas never shuffle the whole table.
       "q_etl_merge_upsert",
       (s, d) => {
-        val dir = txDemoPath(d, "m")
-        rmTree(new java.io.File(dir))
+        val dir = scratchDir("graft_txdemo_m", d, wipe = true)
         val t = graft.model.TxTable(s, dir)
         // r13 (guide §3.3): `o` feeds the seed overwrite AND both batch
         // filters — three orders scans per invocation without a seam
@@ -740,8 +720,7 @@ object TrainOps extends OpGroup {
       // files-invisible-until-manifest property under the hash gate.
       "q_etl_wap",
       (s, d) => {
-        val dir = txDemoPath(d, "w")
-        rmTree(new java.io.File(dir))
+        val dir = scratchDir("graft_txdemo_w", d, wipe = true)
         val t = graft.model.TxTable(s, dir)
         // r13 (guide §3.3): `o` feeds the seed overwrite and `late`
         // feeds BOTH WAP attempts (each stages its own data files) —
@@ -817,8 +796,7 @@ object TrainOps extends OpGroup {
       // whole year band lands in the wrong bucket and the hash flips.
       "q_etl_vacuum_audit",
       (s, d) => {
-        val dir = txDemoPath(d, "v")
-        rmTree(new java.io.File(dir))
+        val dir = scratchDir("graft_txdemo_v", d, wipe = true)
         val t = graft.model.TxTable(s, dir)
         // r13 (guide §3.3): `o` feeds three commit writes — three
         // orders scans per invocation without a seam
@@ -884,8 +862,7 @@ object TrainOps extends OpGroup {
       // would flip the hash.
       "q_etl_compact_tx",
       (s, d) => {
-        val dir = txDemoPath(d, "c")
-        rmTree(new java.io.File(dir))
+        val dir = scratchDir("graft_txdemo_c", d, wipe = true)
         val t = graft.model.TxTable(s, dir)
         // r13 (guide §3.3): `o` feeds three appends — three orders
         // scans per invocation without a seam

@@ -18,6 +18,31 @@ package object ops {
     def qs: Seq[Q]
   }
 
+  /** Recursive delete of a file or directory tree; a missing path is a
+    * no-op. */
+  private[graft] def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(): Unit
+  }
+
+  private val scratchDirs =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** A query's fixed scratch dir, `<java.io.tmpdir>/<prefix><hex hash of
+    * sfDir>`: the same path every rep, so bench/verify reps overwrite it
+    * instead of accumulating copies, and one shutdown hook per distinct
+    * path removes it at JVM exit (File.deleteOnExit cannot remove a
+    * non-empty dir). `wipe` deletes what an earlier construction left,
+    * for a query that must start from no table at all. */
+  private[graft] def scratchDir(prefix: String, sfDir: String,
+                                wipe: Boolean = false): String = {
+    val p = new java.io.File(sys.props("java.io.tmpdir"),
+      prefix + Integer.toHexString(sfDir.hashCode))
+    if (wipe) rmTree(p)
+    if (scratchDirs.add(p.toString))
+      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(p)))
+    p.toString
+  }
+
   /** DuckDB twin of `graft.api.Dedup.tokens` — THE oracle-side
     * tokenizer for the n-gram/shingle family. The explicit character
     * class equals Java regex `\s` (RE2's `\s` omits `\x0B`), and the

@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Optimizer rule: rewrite `COUNT(DISTINCT intcol)` into the
@@ -31,7 +30,9 @@ import org.apache.spark.sql.types._
   * distinct) leaves the whole Aggregate untouched.
   *
   * Scope (anything else is left untouched):
-  *  - gated off by default — `SET spark.graft.bitmapDistinct.enabled=true`;
+  *  - on wherever it is injected (GraftExtensions or
+  *    `spark.experimental.extraOptimizations`) — injecting it is the
+  *    opt-in;
   *  - exactly ONE distinct aggregate: a non-FILTERed `Count(e)` with
   *    `e` integral (byte/short/int/long), deterministic, and built only
   *    from the child's output;
@@ -57,22 +58,14 @@ import org.apache.spark.sql.types._
   */
 object BitmapDistinctRule extends Rule[LogicalPlan] {
 
-  private val Flag = "spark.graft.bitmapDistinct.enabled"
-
-  private def enabled: Boolean =
-    SQLConf.get.getConfString(Flag, "false").equalsIgnoreCase("true")
-
   private def isIntegral(t: DataType): Boolean = t match {
     case ByteType | ShortType | IntegerType | LongType => true
     case _ => false
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
-    plan transform {
-      case agg @ Aggregate(grouping, aggExprs, child, _) if agg.resolved =>
-        rewrite(grouping, aggExprs, child).getOrElse(agg)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
+    case agg @ Aggregate(grouping, aggExprs, child, _) if agg.resolved =>
+      rewrite(grouping, aggExprs, child).getOrElse(agg)
   }
 
   /** Inner partial + outer merge for a splittable companion, or None. */

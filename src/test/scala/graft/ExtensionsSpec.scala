@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{GraftBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 import graft.plans.AsOfJoinStrategy
 
@@ -27,5 +29,19 @@ class ExtensionsSpec extends SparkSpec {
     // the bare AggregateFunction) — regressions here would only hit
     // spark.sql.extensions users, invisible to register()-path tests
     assert(reg.functionExists(new FunctionIdentifier("topk_by_long")))
+  }
+
+  test("the injected dot_f32 takes exactly two arguments") {
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val reg = GraftBridge.registerFunctions(
+      ext, GraftBridge.freshFunctionRegistry())
+    val a = Literal.create(Array(1.0f), ArrayType(FloatType))
+    for (args <- Seq(Seq(a), Seq(a, a, a))) {
+      val e = intercept[IllegalArgumentException](
+        reg.lookupFunction(new FunctionIdentifier("dot_f32"), args))
+      assert(e.getMessage.contains("dot_f32(a, b) takes two arguments"),
+        e.getMessage)
+    }
   }
 }

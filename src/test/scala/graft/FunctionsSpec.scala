@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.functions.{DotF32, WordNgrams}
+import graft.functions.{DotF32, L2SqI64, WordNgrams}
 
 /** Custom Catalyst surface: the DotF32 native expression and the
   * WordNgrams generator — null handling, edge cases, and interpreted vs
@@ -18,6 +18,21 @@ class FunctionsSpec extends SparkSpec {
       (Seq(1.0f, 2.0f, 3.0f), Seq(4.0f, 5.0f, 6.0f))).toDF("a", "b")
     val got = df.selectExpr("dot_f32(a, b) AS d").head().getDouble(0)
     assert(got == (4.0 + 10.0 + 18.0))
+  }
+
+  test("dot_f32 and l2sq_i64 take exactly two arguments, else fail naming the function") {
+    DotF32.register(spark)
+    L2SqI64.register(spark)
+    val df = Seq((Seq(1.0f), Seq(2.0f), Seq(1L), Seq(2L))).toDF("a", "b", "x", "y")
+    for ((fn, args) <- Seq("dot_f32" -> Seq("a", "b"), "l2sq_i64" -> Seq("x", "y"));
+         call <- Seq(args.take(1), args :+ args.head)) {
+      val e = intercept[Exception](
+        df.selectExpr(s"$fn(${call.mkString(", ")}) AS d").collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains(s"$fn(a, b) takes two arguments")),
+        s"$fn(${call.mkString(", ")}): ${msgs.mkString(" / ")}")
+    }
   }
 
   test("dot_f32 agrees bit-for-bit with the lambda formulation") {

@@ -35,25 +35,6 @@ class PlanAuditSpec extends SparkSpec {
 
   private val auditDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_SF", sfDir)
 
-  /** Queries whose CONSTRUCTION runs Spark jobs (iterative CC loops,
-    * k-means fits, BPE training, signature-store writes). They are
-    * audited like the rest at the suite fixture; at a scaled dir their
-    * construction cost is the bench's, so the env-var sweep may skip
-    * them with SPARK_GRAFT_PLAN_SKIP_EAGER=1 (their *final* plans are
-    * still pinned by PlanSpec + this spec at the base SF, and their
-    * scaled behavior is measured by the sf1/sf10 benches instead). */
-  private val eagerConstruction: Set[String] = Set(
-    "q_dedup_cluster", "q_dedup_cluster_sizes", "q_dedup_canonical",
-    "q_dedup_soft_weights", "q_dedup_lang_purity", "q_dedup_semantic",
-    "q_dedup_from_signatures", "q_dedup_incremental",
-    "q_dedup_pr_report", "q_split_leakage_safe", "q_mix_dedup_budget",
-    "q_curate_funnel", "q_sim_ann_ivf", "q_sim_ann_ivfpq",
-    "q_sim_ann_pq", "q_sim_quantized_topk", "q_sim_prefix_rerank",
-    "q_sim_recall_report", "q_embed_centroid_coherence",
-    "q_embed_silhouette", "q_text_bpe_pairs", "q_curate_lm_gate",
-    "q_graph_kcore", "q_graph_lpa", "q_graph_modularity",
-    "q_etl_snapshot_diff", "q_embed_mmr")
-
   /** A Cross-join side the author has bounded. Three recognized forms,
     * in decreasing strength: (a) the OPTIMIZER bounds it (maxRows ≤ 64
     * — limits, single-row aggregates); (b) it is an AGGREGATE rollup
@@ -77,9 +58,7 @@ class PlanAuditSpec extends SparkSpec {
     p.isInstanceOf[Aggregate] || p.children.exists(hasAggBelow)
 
   test(s"all declared queries: no unbounded cross, no unpartitioned per-row window [$auditDir]") {
-    val skipEager = sys.env.contains("SPARK_GRAFT_PLAN_SKIP_EAGER")
     val names = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(n => skipEager && eagerConstruction(n))
     val bad = scala.collection.mutable.ArrayBuffer.empty[String]
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, auditDir)
@@ -108,8 +87,7 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(bad.isEmpty,
       s"${bad.size} scale anti-patterns:\n${bad.mkString("\n---\n")}")
-    info(s"audited ${names.size} query plans at $auditDir" +
-      (if (skipEager) s" (skipped ${eagerConstruction.size} eager)" else ""))
+    info(s"audited ${names.size} query plans at $auditDir")
   }
 
   test(s"hinted join strategies survive at any SF [$auditDir]") {

@@ -127,12 +127,8 @@ class RuleSpec extends SparkSpec {
 
   private def withBitmapRule[T](body: => T): T = {
     spark.experimental.extraOptimizations = Seq(graft.plans.BitmapDistinctRule)
-    spark.conf.set("spark.graft.bitmapDistinct.enabled", "true")
     try body
-    finally {
-      spark.conf.unset("spark.graft.bitmapDistinct.enabled")
-      spark.experimental.extraOptimizations = Nil
-    }
+    finally spark.experimental.extraOptimizations = Nil
   }
 
   private lazy val cd = Seq[(String, java.lang.Long)](
@@ -206,11 +202,6 @@ class RuleSpec extends SparkSpec {
         .agg(countDistinct(col("v")).as("c1"),
              countDistinct(col("v") + 1).as("c2"))
       assert(!twoD.queryExecution.optimizedPlan.toString
-        .contains("bitmap_construct_agg"))
-      // flag off: no rewrite even with the rule injected
-      spark.conf.set("spark.graft.bitmapDistinct.enabled", "false")
-      val q = cd.groupBy(col("g")).agg(countDistinct(col("v")).as("c"))
-      assert(!q.queryExecution.optimizedPlan.toString
         .contains("bitmap_construct_agg"))
     }
   }
