@@ -1,21 +1,22 @@
 package graft.model
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.EnumSet
 
-import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StructField, StructType}
+
+import graft.streaming.NioCheckpointFileManager
 
 /** Self-describing topic↔table catalog (SURVEY §1.1/§2.9): the analog of
   * the reference's `ros_sql_metadata` tables
   * [upstream: ros_sql/models.py], persisted as one small JSON document
   * (`catalog.json` under `path`) that the driver reads and writes through
-  * the Hadoop FileContext API — no Spark job per call, and the same
-  * local/HDFS/S3 reach as any other path. One row per recorded (topic,
-  * schema version): topic name, mangled table name, message type name,
-  * schema fingerprint, schema DDL, version number, and the FINGERPRINT
-  * CHAIN — a hash chain
+  * the recorder's [[NioCheckpointFileManager]] — no Spark job per call,
+  * no forked process on a local path, and Spark's own file manager on
+  * HDFS/S3. One row per recorded (topic, schema version): topic name,
+  * mangled table name, message type name, schema fingerprint, schema
+  * DDL, version number, and the FINGERPRINT CHAIN — a hash chain
   * (chain₁ = fp₁, chainₖ = md5(chainₖ₋₁ ‖ fpₖ)) over the topic's schema
   * history, so the whole evolution lineage is summarized by one
   * tamper-evident value and two catalogs that agree on the latest chain
@@ -24,9 +25,9 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * performs in sql2msg — and names the matching historical version when
   * a stale reader shows up.
   *
-  * Every write replaces the document atomically: write a hidden temp
-  * file, then rename it over the old one (Spark's CheckpointFileManager
-  * discipline), so a crash mid-write leaves the previous catalog intact.
+  * Every write replaces the document atomically (`createAtomic` with
+  * overwrite: a hidden temp file renamed over the old one), so a crash
+  * mid-write leaves the previous catalog intact.
   * A `path` still holding the earlier parquet-table layout fails loudly
   * instead of reading as empty.
   *
@@ -55,11 +56,8 @@ final class Catalog(spark: SparkSession, path: String) {
 
   private val dir = new Path(path)
   private val doc = new Path(dir, Catalog.DocName)
-  private val fc: FileContext = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (dir.toUri.getScheme == null) FileContext.getFileContext(conf)
-    else FileContext.getFileContext(dir.toUri, conf)
-  }
+  private val files =
+    new NioCheckpointFileManager(dir, spark.sparkContext.hadoopConfiguration)
 
   def register(topic: String, msgType: String, schema: StructType): TopicMeta = {
     val fp = SchemaMapper.fingerprint(schema)
@@ -96,15 +94,13 @@ final class Catalog(spark: SparkSession, path: String) {
     meta
   }
 
-  /** Write `rows` to a hidden temp file, then rename it over the
-    * document: readers see the old catalog or the new one, never a
-    * partial or missing one. */
+  /** Replace the document with `rows`: readers see the old catalog or
+    * the new one, never a partial or missing one. */
   private def replace(rows: Seq[TopicMeta]): Unit = {
-    val tmp = new Path(dir, s".${Catalog.DocName}.${java.util.UUID.randomUUID()}.tmp")
-    val out = fc.create(tmp, EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
-      Options.CreateOpts.createParent())
-    try out.write(JsonDoc.write(rows).getBytes(UTF_8)) finally out.close()
-    fc.rename(tmp, doc, Options.Rename.OVERWRITE)
+    val out = files.createAtomic(doc, overwriteIfPossible = true)
+    try out.write(JsonDoc.write(rows).getBytes(UTF_8))
+    catch { case e: Throwable => out.cancel(); throw e }
+    out.close()
   }
 
   /** Every (topic, version) row. Empty ONLY when the catalog doesn't
@@ -116,8 +112,8 @@ final class Catalog(spark: SparkSession, path: String) {
     * concurrent registrations — callers must serialize (the recorder
     * registers topics one at a time from the driver). */
   def allVersions(): Seq[TopicMeta] =
-    if (fc.util.exists(doc)) {
-      val in = fc.open(doc)
+    if (files.exists(doc)) {
+      val in = files.open(doc)
       val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
       JsonDoc.objs(text, s"catalog $doc").map(f => TopicMeta(
         f.str("topic"), f.str("table"), f.str("msgType"),
@@ -126,8 +122,8 @@ final class Catalog(spark: SparkSession, path: String) {
     } else {
       // temp files of an interrupted write are hidden; anything else
       // means `path` is not an (empty) catalog
-      val found = if (!fc.util.exists(dir)) Seq.empty[String]
-        else fc.util.listStatus(dir).toSeq.map(_.getPath.getName)
+      val found = if (!files.exists(dir)) Seq.empty[String]
+        else files.list(dir).toSeq.map(_.getPath.getName)
           .filterNot(_.startsWith("."))
       if (found.exists(n => n.endsWith(".parquet") || n == "_SUCCESS"))
         throw new IllegalStateException(

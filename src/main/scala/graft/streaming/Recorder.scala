@@ -4,7 +4,7 @@ import java.util.Properties
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.model.{Catalog, SchemaMapper, TopicMeta}
@@ -24,14 +24,28 @@ import graft.model.{Catalog, SchemaMapper, TopicMeta}
   * reference has. Parquet commits each trigger's file through the
   * FileStreamSink manifest, and `readback` reads only what it committed.
   *
+  * Logs: every trigger publishes three exactly-once logs, the query's
+  * offsets and commits and (parquet) the sink's `_spark_metadata`
+  * manifest. Both recorders start their query with
+  * [[NioCheckpointFileManager]] as Spark's checkpoint file manager, so on
+  * a local path each log file is a java.nio temp file published by
+  * link(2), with no forked process (Spark's default forks `readlink`
+  * 8 times and `chmod` twice per log write when Hadoop has no native
+  * library). Other schemes keep Spark's default manager. The session's
+  * `spark.sql.streaming.checkpointFileManagerClass` is set only while
+  * `start()` runs and is unset again; a value the caller set is used
+  * and kept.
+  *
   * Scale: the JDBC sink is the bottleneck by construction (same as the
   * reference); `numPartitions` controls sink-side write parallelism, and
   * the parquet path is the 100 TB-rated alternative. The parquet sink
   * writes one file per trigger from ONE writer task, which bounds a
   * single recording to one task's throughput: RecorderSpec's sustained
-  * ingest (8-partition rate source, local[4]) measured a median 207k
-  * events/s over 4 runs (184k–221k), against 230k (195k–252k) with one
-  * writer per input partition, interleaved on the same 4-core box.
+  * ingest (8-partition rate source, 1 s triggers, local[4]) measured a
+  * median 204k events/s over 4 runs (189k–215k), against 195k
+  * (185k–199k) with Spark's default log manager, interleaved on the same
+  * 4-core box. (An earlier interleaved pair of medians put one writer
+  * per input partition at 230k against 207k for the one writer.)
   */
 object Recorder {
 
@@ -52,7 +66,7 @@ object Recorder {
       checkpointDir: String,
       props: Properties = new Properties()): (TopicMeta, StreamingQuery) = {
     val meta = catalog.register(topic, msgType, stream.schema)
-    val q = stream.toDF().writeStream
+    val w = stream.toDF().writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -60,8 +74,7 @@ object Recorder {
         SchemaMapper.flatten(withReceipt(batch))
           .write.mode(SaveMode.Append).jdbc(url, meta.table, props)
       }
-      .start()
-    (meta, q)
+    (meta, start(stream.sparkSession, w))
   }
 
   /** Record a typed stream into parquet, one file per trigger — the
@@ -96,15 +109,33 @@ object Recorder {
     // part file per input partition per trigger — a small-file tail that
     // every later scan and replay pays for in file opens and listing.
     // The manifest still commits each trigger's file exactly once.
-    val q = withReceipt(stream.toDF()).coalesce(1).writeStream
+    val w = withReceipt(stream.toDF()).coalesce(1).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .option("path", s"$baseDir/${meta.table}/v${meta.version}")
       .trigger(trigger)
       .format("parquet")
-      .start()
-    (meta, q)
+    (meta, start(stream.sparkSession, w))
   }
+
+  /** Spark's key for the class that writes a query's offsets, commits
+    * and sink logs (`SQLConf.STREAMING_CHECKPOINT_FILE_MANAGER_CLASS`). */
+  private val FileManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Start `w` with its logs published by [[NioCheckpointFileManager]],
+    * leaving `spark`'s conf as it was. A query clones its session's conf
+    * in `start()`, and its offsets and commits logs take their manager
+    * from that clone (the sink log is built in `start()` itself), so the
+    * key need only be set while `start()` runs. The lock keeps two
+    * recordings from unsetting the key under each other. */
+  private def start[T](spark: SparkSession, w: DataStreamWriter[T]): StreamingQuery =
+    synchronized {
+      if (spark.conf.getOption(FileManagerKey).isDefined) w.start()
+      else {
+        spark.conf.set(FileManagerKey, classOf[NioCheckpointFileManager].getName)
+        try w.start() finally spark.conf.unset(FileManagerKey)
+      }
+    }
 
   /** Readback: table rows → typed objects (the reference's sql2msg,
     * without the N+1 child-table fetches — nesting is native). Fails on

@@ -138,6 +138,103 @@ class RecorderSpec extends SparkSpec {
     assert(back.sortBy(_.x) == msgs)
   }
 
+  /** Spark's key for a query's log file manager. */
+  private val FileManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val SparkDefault = classOf[org.apache.spark.sql.execution.streaming
+    .checkpointing.FileContextBasedCheckpointFileManager].getName
+
+  /** Runs `body` with the session's log file manager set to `cls`. */
+  private def withManager[A](cls: String)(body: => A): A = {
+    spark.conf.set(FileManagerKey, cls)
+    try body finally spark.conf.unset(FileManagerKey)
+  }
+
+  test("recordParquet publishes offsets, commits and the sink manifest " +
+       "without Hadoop checksums, and leaves the session conf unset") {
+    implicit val ctx = spark.sqlContext
+    val base = tmpDir("nio-logs")
+    val cat = new Catalog(spark, s"$base/_metadata")
+    val in = MemoryStream[Pose]
+    assert(spark.conf.getOption(FileManagerKey).isEmpty)
+    val (meta, q) = Recorder.recordParquet(in.toDS(), "/robot1/pose",
+      "geometry_msgs/Pose", cat, base, s"$base/_ckpt",
+      Trigger.ProcessingTime(0))
+    assert(spark.conf.getOption(FileManagerKey).isEmpty)
+    try (1 to 3).foreach { i =>
+      in.addData(Pose(i, i, i, Stamp(i.toLong, 0L))); q.processAllAvailable()
+    } finally q.stop()
+    for (dir <- Seq(s"$base/_ckpt/offsets", s"$base/_ckpt/commits",
+                    s"$base/${meta.table}/v1/_spark_metadata")) {
+      val names = entries(dir)
+      assert(names.count(_.forall(_.isDigit)) >= 3, s"$dir: $names")
+      assert(!names.exists(n => n.endsWith(".crc") || n.endsWith(".tmp")),
+        s"$dir: $names")
+    }
+    assert(entries(s"$base/_metadata") == Seq("catalog.json"))
+    // the JDBC recorder takes the same path
+    val url = s"jdbc:derby:$base/db;create=true"
+    val jin = MemoryStream[Pose]
+    jin.addData(Pose(1, 1, 1, Stamp(1L, 0L)))
+    val (_, jq) = Recorder.recordJdbc(jin.toDS(), "/cam/pose",
+      "geometry_msgs/Pose", cat, url, s"$base/_jckpt")
+    jq.awaitTermination()
+    assert(spark.conf.getOption(FileManagerKey).isEmpty)
+    assert(!entries(s"$base/_jckpt/offsets").exists(_.endsWith(".crc")))
+    assert(!entries(s"$base/_jckpt/commits").exists(_.endsWith(".crc")))
+  }
+
+  test("a log file manager the caller set is used and kept") {
+    implicit val ctx = spark.sqlContext
+    val base = tmpDir("own-manager")
+    val cat = new Catalog(spark, s"$base/_metadata")
+    val in = MemoryStream[Pose]
+    in.addData(Pose(1, 1, 1, Stamp(1L, 0L)))
+    withManager(SparkDefault) {
+      val (_, q) = Recorder.recordParquet(in.toDS(), "/robot1/pose",
+        "geometry_msgs/Pose", cat, base, s"$base/_ckpt")
+      q.awaitTermination()
+      assert(spark.conf.get(FileManagerKey) == SparkDefault)
+    }
+    // Spark's default manager writes a checksum beside each log file
+    assert(entries(s"$base/_ckpt/offsets").contains(".0.crc"))
+    assert(entries(s"$base/_ckpt/commits").contains(".0.crc"))
+  }
+
+  test("a checkpoint moves between Spark's default log manager and the " +
+       "recorder's, both ways, with exactly the input read back") {
+    implicit val ctx = spark.sqlContext
+    val k = 6 // two runs of k triggers pass the sink log's compaction at 10
+    def record(base: String, in: MemoryStream[Pose], from: Int): Unit = {
+      val cat = new Catalog(spark, s"$base/_metadata")
+      val (_, q) = Recorder.recordParquet(in.toDS(), "/robot1/pose",
+        "geometry_msgs/Pose", cat, base, s"$base/_ckpt",
+        Trigger.ProcessingTime(0))
+      try (from until from + k).foreach { i =>
+        in.addData(Pose(i, i, i, Stamp(i.toLong, 0L))); q.processAllAvailable()
+      } finally q.stop()
+    }
+    def readBack(base: String): Seq[Pose] =
+      Recorder.readback[Pose](spark, "/robot1/pose",
+        new Catalog(spark, s"$base/_metadata"), base).collect().toSeq
+    val all = (0 until 2 * k).map(i => Pose(i, i, i, Stamp(i.toLong, 0L)))
+    // default first, then the recorder's
+    val a = tmpDir("interop-a")
+    val inA = MemoryStream[Pose]
+    withManager(SparkDefault)(record(a, inA, 0))
+    record(a, inA, k)
+    assert(readBack(a).sortBy(_.x) == all)
+    val logA = entries(s"$a/_ckpt/offsets")
+    assert(logA.contains(s".${k - 1}.crc") && !logA.contains(s".$k.crc"), logA)
+    // the recorder's first, then the default
+    val b = tmpDir("interop-b")
+    val inB = MemoryStream[Pose]
+    record(b, inB, 0)
+    withManager(SparkDefault)(record(b, inB, k))
+    assert(readBack(b).sortBy(_.x) == all)
+    val logB = entries(s"$b/_ckpt/offsets")
+    assert(!logB.contains(s".${k - 1}.crc") && logB.contains(s".$k.crc"), logB)
+  }
+
   test("readback fails fast on schema drift (md5-check analog)") {
     val base = tmpDir("drift")
     val cat = new Catalog(spark, s"$base/_metadata")

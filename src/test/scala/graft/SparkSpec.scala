@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -48,5 +50,11 @@ trait SparkSpec extends AnyFunSuite {
     val p = java.nio.file.Files.createTempDirectory(s"graft-$name")
     SparkSpec.cleanupOnExit(p)
     p.toString
+  }
+  /** Every entry of `dir`, hidden ones included, sorted. */
+  def entries(dir: String): Seq[String] = {
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try ls.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    finally ls.close()
   }
 }
