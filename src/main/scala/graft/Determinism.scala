@@ -89,16 +89,24 @@ object Determinism {
     * 2·|num| + den < 2⁶³ — callers whose scaled numerator can exceed
     * that (ratios of 38-digit decimal sums) use [[intRatio4Wide]]. */
   def intRatio4(num: Column, den: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    def halfUp(n: Column): Column = GraftBridge.column(
-      new org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-        GraftBridge.expression(n * 2 + den),
-        GraftBridge.expression(den.cast("long") * 2)))
     val n = num.cast("long")
     when(den > 0,
-      when(n >= 0, halfUp(n)).otherwise(-halfUp(-n))
+      when(n >= 0, halfUpDivLong(n, den))
+        .otherwise(-halfUpDivLong(-n, den))
         .cast("double") / 10000.0)
       .otherwise(raise_error(lit("intRatio4: den must be > 0")))
+  }
+
+  /** Exact HALF-UP long quotient round(num/den) = ⌊(2·num+den)/(2·den)⌋
+    * in TRUE long integral division (Catalyst IntegralDivide, the SQL
+    * `div`) — the integer core of [[intRatio4]]. Domain: num ≥ 0,
+    * den > 0, 2·num + den < 2⁶³; oracle twin `(2*num + den) // (2*den)`. */
+  def halfUpDivLong(num: Column, den: Column): Column = {
+    import org.apache.spark.sql.GraftBridge
+    GraftBridge.column(
+      new org.apache.spark.sql.catalyst.expressions.IntegralDivide(
+        GraftBridge.expression(num * 2 + den),
+        GraftBridge.expression(den.cast("long") * 2)))
   }
 
   /** [[intRatio4]] over DECIMAL(38,0) operands — for scaled numerators
@@ -194,6 +202,17 @@ object Determinism {
     val b = (den.cast(D) * 2).cast(D)
     ((a - pmod(a, b)) / b).cast(D)
   }
+
+  /** Sign-mirrored [[halfUpDivWideDec]] (num may be negative; den > 0):
+    * round-half-away-from-zero, the round()-family convention. */
+  def sHalfUp(num: Column, den: Column): Column =
+    when(num >= 0, halfUpDivWideDec(num, den))
+      .otherwise(-halfUpDivWideDec(-num, den))
+
+  /** Oracle twin of [[sHalfUp]] on HUGEINT operands. */
+  def sHalfUpSql(num: String, den: String): String =
+    s"(CASE WHEN ($num) >= 0 THEN (2*($num) + ($den)) // (2*($den)) " +
+      s"ELSE -((2*(-($num)) + ($den)) // (2*($den))) END)"
 
   /** TRUE long integral division `a div b` (Catalyst IntegralDivide —
     * Column algebra has no `div`, and double `/`+floor misbins at

@@ -493,7 +493,7 @@ object Dedup {
     * an empty array emits no rows, so the hash-agg never sees them. */
   private def simhashVotes(
       df: DataFrame, id: Column, text: Column, bits: Int,
-      fastHash: Boolean = false): DataFrame = {
+      fastHash: Boolean): DataFrame = {
     // fastHash: bit k of one codegen'd xxhash64(token) replaces the
     // parity of md5 hex digit k — same independent-fair-coin property
     // per bit, same votes shape, not cross-engine portable (the

@@ -56,7 +56,7 @@ object Sim {
     * Null ords (null embeddings) never enter the heap.
     * Returns (q_id, cand_id, _ord, rn). */
   private def heapRank(scored: DataFrame, ord: Column, k: Int): DataFrame = {
-    graft.functions.TopKByLong.register(scored.sparkSession)
+    graft.functions.register(scored.sparkSession)
     scored.withColumn("_ord", ord)
       .groupBy(col("q_id"))
       .agg(expr(s"topk_pairs_by_long(cand_id, _ord, $k)").as("_t"))
@@ -86,7 +86,7 @@ object Sim {
     * original frame, not just the post-projection names. */
   private def withNorm(df: DataFrame, id: Column, emb: Column,
                        flags: Seq[(String, Column)] = Nil): DataFrame = {
-    graft.functions.DotF32.register(df.sparkSession)
+    graft.functions.register(df.sparkSession)
     df.select((Seq(id.as("vec_id"), emb.as("embedding")) ++
         flags.map { case (n, c) => c.as(n) }): _*)
       .withColumn("nrm", sqrt(expr("dot_f32(embedding, embedding)")))
@@ -482,7 +482,7 @@ object Sim {
       isQuery: Column, isCodebook: Column,
       m: Int, k: Int): DataFrame = {
     require(m >= 1, "pqTopK: m must be >= 1")
-    graft.functions.L2SqI64.register(df.sparkSession)
+    graft.functions.register(df.sparkSession)
     // r13 (guide §3.3): base feeds the codebook, encode, and LUT
     // branches — each re-planned the scan + grid64 quantization (6
     // parquet scans in plans/r13/q_sim_ann_pq_before.txt). One
@@ -533,7 +533,7 @@ object Sim {
       m: Int, nprobe: Int, k: Int): DataFrame = {
     require(m >= 1, "ivfPqTopK: m must be >= 1")
     require(nprobe >= 1, "ivfPqTopK: nprobe must be >= 1")
-    graft.functions.L2SqI64.register(df.sparkSession)
+    graft.functions.register(df.sparkSession)
     // r13 (guide §1.1, TRIED AND REVERTED): base feeds centroids,
     // assignment, probes, codebook, encode, and LUT — 8 embeddings
     // scans in plans/r13/q_sim_ann_ivfpq_before.txt — but the §3.3
@@ -929,7 +929,7 @@ object Sim {
   def silhouette(
       df: DataFrame, id: Column, emb: Column,
       centroids: DataFrame): DataFrame = {
-    graft.functions.L2SqI64.register(df.sparkSession)
+    graft.functions.register(df.sparkSession)
     val e = df.filter(emb.isNotNull)
       .select(id.as("vec_id"), grid64(emb).as("q64"))
     val c = centroids.select(col("cell"), grid64(col("centroid")).as("c64"))
@@ -941,15 +941,11 @@ object Sim {
       .filter(size(col("a")) >= 2)
       .select(col("vec_id"), col("a")(0)("cell").as("cell"),
               col("a")(0)("d").as("a2"), col("a")(1)("d").as("b2"))
-    import org.apache.spark.sql.GraftBridge
-    def halfUp(num: Column, den: Column): Column = GraftBridge.column(
-      new org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-        GraftBridge.expression(num * 2 + den),
-        GraftBridge.expression(den * 2)))
     arr
       .withColumn("s_e4",
         when(col("b2") > 0,
-             halfUp((col("b2") - col("a2")) * 10000L, col("b2")))
+             graft.Determinism.halfUpDivLong(
+               (col("b2") - col("a2")) * 10000L, col("b2")))
           .otherwise(lit(0L)))
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n"),

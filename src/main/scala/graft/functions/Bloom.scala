@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
@@ -34,12 +33,5 @@ object Bloom {
     case Seq(bloom, value) => BloomFilterMightContain(bloom, value)
     case _ => throw new IllegalArgumentException(
       "bloom_might_contain(bloom, hashed_item)")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg", aggBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain", probeBuilder, "scala_udf")
   }
 }

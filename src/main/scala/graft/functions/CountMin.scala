@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -67,13 +66,6 @@ object CountMin {
     require(exprs.length == 2,
       "count_min_estimate(sketch, item) takes two arguments")
     CountMinEstimate(exprs.head, exprs(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "count_min_agg", aggBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "count_min_estimate", probeBuilder, "scala_udf")
   }
 }
 

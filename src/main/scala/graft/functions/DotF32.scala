@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -73,15 +72,9 @@ case class DotF32(left: Expression, right: Expression)
 }
 
 object DotF32 {
-  /** THE builder for `dot_f32(a, b)`, shared by register() and
-    * GraftExtensions. */
+  /** THE builder for `dot_f32(a, b)`; [[graft.functions.table]] lists it. */
   private[graft] def builder(exprs: Seq[Expression]): DotF32 = {
     require(exprs.length == 2, "dot_f32(a, b) takes two arguments")
     DotF32(exprs.head, exprs(1))
   }
-
-  /** Register `dot_f32(a, b)` so SQL/selectExpr can call it. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f32", builder, "scala_udf")
 }

@@ -3,7 +3,6 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -175,8 +174,4 @@ object HeavyHitters {
     }
     HeavyHitters(exprs.head, k)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "heavy_hitters", builder, "scala_udf")
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -123,8 +122,4 @@ object KmvKth {
     }
     KmvKth(exprs.head, k)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_kth", builder, "scala_udf")
 }

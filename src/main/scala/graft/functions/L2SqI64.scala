@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -72,13 +71,8 @@ case class L2SqI64(left: Expression, right: Expression)
 }
 
 object L2SqI64 {
-  private def builder(exprs: Seq[Expression]): L2SqI64 = {
+  private[graft] def builder(exprs: Seq[Expression]): L2SqI64 = {
     require(exprs.length == 2, "l2sq_i64(a, b) takes two arguments")
     L2SqI64(exprs.head, exprs(1))
   }
-
-  /** Register `l2sq_i64(a, b)` so SQL/selectExpr can call it. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2sq_i64", builder, "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
@@ -92,8 +91,4 @@ object SumLongDec38 {
       "sum_long_dec38(value) takes exactly one argument")
     SumLongDec38(exprs.head)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sum_long_dec38", builder, "scala_udf")
 }

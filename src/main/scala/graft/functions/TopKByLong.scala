@@ -3,7 +3,6 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.util.PriorityQueue
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -176,14 +175,5 @@ object TopKByLong {
         s"topk_by_long: k must be a constant integer, got $other")
     }
     TopKByLong(exprs.head, exprs(1), k, pairs)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by_long", builder(pairs = false), "scala_udf")
-    // the (value, ord) struct form, for top-k paths that must also
-    // OUTPUT the ordering score (ANN serving: cand_id + cosine)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_pairs_by_long", builder(pairs = true), "scala_udf")
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
@@ -58,9 +57,9 @@ case class WordNgrams(child: Expression, n: Int)
 }
 
 object WordNgrams {
-  /** THE builder for `word_ngrams(col, n)` — shared by register() and
-    * GraftExtensions so argument validation can't drift between the
-    * programmatic and extension-injected registration paths. Accepts any
+  /** THE builder for `word_ngrams(col, n)`, the entry in
+    * [[graft.functions.table]] that both the session extension and
+    * `graft.functions.register` read. Accepts any
     * constant integral n; anything else gets a clear analysis-time error
     * instead of a ClassCastException / unbound-reference crash. */
   def builder(exprs: Seq[Expression]): WordNgrams = {
@@ -84,10 +83,4 @@ object WordNgrams {
     }
     WordNgrams(exprs.head, n)
   }
-
-  /** Register `word_ngrams(col, n)` in the session's function registry so
-    * it is callable from SQL/selectExpr like any built-in generator. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_ngrams", builder, "scala_udf")
 }

@@ -1,0 +1,48 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+
+/** graft's SQL functions, listed once. */
+package object functions {
+
+  private def entry(name: String, cls: Class[_], builder: FunctionBuilder)
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+
+  /** Every graft SQL function, one `(name, info, builder)` entry each:
+    * Spark's `FunctionDescription`, the triple a session extension
+    * injects. [[graft.GraftExtensions]] injects it into each session it
+    * configures, and [[register]] writes it into one session. */
+  val table: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    entry("dot_f32", classOf[DotF32], DotF32.builder),
+    entry("l2sq_i64", classOf[L2SqI64], L2SqI64.builder),
+    entry("word_ngrams", classOf[WordNgrams], WordNgrams.builder),
+    entry("topk_by_long", classOf[TopKByLong],
+      TopKByLong.builder(pairs = false)),
+    // the (value, ord) struct form, for top-k paths that must also
+    // OUTPUT the ordering score (ANN serving: cand_id + cosine)
+    entry("topk_pairs_by_long", classOf[TopKByLong],
+      TopKByLong.builder(pairs = true)),
+    entry("heavy_hitters", classOf[HeavyHitters], HeavyHitters.builder),
+    entry("kmv_kth", classOf[KmvKth], KmvKth.builder),
+    entry("sum_long_dec38", classOf[SumLongDec38], SumLongDec38.builder),
+    entry("count_min_agg", classOf[CountMinAgg], CountMin.aggBuilder),
+    entry("count_min_estimate", classOf[CountMinEstimate],
+      CountMin.probeBuilder),
+    entry("bloom_agg", Bloom.getClass, Bloom.aggBuilder),
+    entry("bloom_might_contain", Bloom.getClass, Bloom.probeBuilder))
+
+  /** Writes [[table]] into `spark`'s function registry, so SQL and
+    * `selectExpr` there can call every graft function. Library code
+    * calls it before it builds a query that names one; a session
+    * configured with [[graft.GraftExtensions]] has them already. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    table.foreach { case (name, info, builder) =>
+      registry.registerFunction(name, info, builder)
+    }
+  }
+}

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.streaming.NioCheckpointFileManager
+
 /** Minimal ACID table format over parquet — the commit-log layer the
   * r5 verdict ranked first among real-user gaps: the compaction / CDC /
   * SCD2 / snapshot-diff operators ran over PLAIN parquet paths, where
@@ -535,11 +537,8 @@ private[graft] object TxLog {
   private def publish(target: Path, doc: AnyRef): Boolean = {
     if (Files.exists(target)) return false
     val tmp = Files.createTempFile(target.getParent, ".tx", ".tmp")
-    try {
-      Files.write(tmp, JsonDoc.write(doc).getBytes(UTF_8))
-      try { Files.createLink(target, tmp); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } finally { Files.deleteIfExists(tmp): Unit }
+    NioCheckpointFileManager.publishLocal(tmp, target, overwrite = false)(
+      Files.write(tmp, JsonDoc.write(doc).getBytes(UTF_8)): Unit)
   }
 
   def readHorizon(dir: String): Long = {
@@ -555,9 +554,7 @@ private[graft] object TxLog {
     val cur = readHorizon(dir)
     if (v <= cur) return
     val tmp = Files.createTempFile(p.getParent, ".hz", ".tmp")
-    Files.write(tmp, v.toString.getBytes(UTF_8))
-    Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+    NioCheckpointFileManager.publishLocal(tmp, p, overwrite = true)(
+      Files.write(tmp, v.toString.getBytes(UTF_8)): Unit): Unit
   }
 }

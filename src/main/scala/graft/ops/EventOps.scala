@@ -1599,7 +1599,7 @@ object EventOps extends OpGroup {
       // never O(users²), and per-bucket work is now O(cap²).
       "q_events_copresence",
       (s, d) => {
-        graft.functions.TopKByLong.register(s)
+        graft.functions.register(s)
         val sess = graft.api.Events.sessionize(
             Tables.events(s, d)
               .select(col("user_id"), col("event_id"), col("ts_us")),

@@ -29,15 +29,6 @@ object InferOps extends OpGroup {
 
   private val D38 = DecimalType(38, 0)
 
-  /** Sign-mirrored halfUpDivWideDec (num signed, den > 0). */
-  private def sHalfUp(num: Column, den: Column): Column =
-    when(num >= 0, halfUpDivWideDec(num, den))
-      .otherwise(-halfUpDivWideDec(-num, den))
-
-  private def sHalfUpSql(num: String, den: String): String =
-    s"(CASE WHEN ($num) >= 0 THEN (2*($num) + ($den)) // (2*($den)) " +
-      s"ELSE -((2*(-($num)) + ($den)) // (2*($den))) END)"
-
   /** Abramowitz–Stegun 7.1.26 complementary error function — the SAME
     * literal polynomial rendered on both engines, so the two-sided
     * normal p-value 2·(1−Φ(|z|)) = erfc(|z|/√2) is computed by an

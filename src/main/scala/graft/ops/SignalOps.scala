@@ -49,18 +49,6 @@ object SignalOps extends OpGroup {
     (0 until taps).map(j => math.round(math.pow(keep, j) * 1e9))
   }
 
-  /** Sign-mirrored halfUpDivWideDec (num may be negative; den > 0):
-    * round-half-away-from-zero, the round()-family convention. */
-  private def sHalfUp(num: org.apache.spark.sql.Column,
-                      den: org.apache.spark.sql.Column) =
-    when(num >= 0, halfUpDivWideDec(num, den))
-      .otherwise(-halfUpDivWideDec(-num, den))
-
-  /** Oracle twin of [[sHalfUp]] on HUGEINT operands. */
-  private def sHalfUpSql(num: String, den: String): String =
-    s"(CASE WHEN ($num) >= 0 THEN (2*($num) + ($den)) // (2*($den)) " +
-      s"ELSE -((2*(-($num)) + ($den)) // (2*($den))) END)"
-
   def qs: Seq[Q] = Seq(
 
     Q(

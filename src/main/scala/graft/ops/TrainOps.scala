@@ -27,16 +27,6 @@ object TrainOps extends OpGroup {
 
   private val D38 = DecimalType(38, 0)
 
-  /** Sign-mirrored halfUpDivWideDec (num signed, den > 0). */
-  private def sHalfUp(num: org.apache.spark.sql.Column,
-                      den: org.apache.spark.sql.Column) =
-    when(num >= 0, halfUpDivWideDec(num, den))
-      .otherwise(-halfUpDivWideDec(-num, den))
-
-  private def sHalfUpSql(num: String, den: String): String =
-    s"(CASE WHEN ($num) >= 0 THEN (2*($num) + ($den)) // (2*($den)) " +
-      s"ELSE -((2*(-($num)) + ($den)) // (2*($den))) END)"
-
   def qs: Seq[Q] = Seq(
 
     Q(

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import graft.Determinism._
-import graft.functions.{GeoMean, TopKByLong, WordNgrams}
+import graft.functions.GeoMean
 import graft.io.Tables
 
 /** SURVEY §2.8 — user-defined function surface: scalar UDF, typed UDAF
@@ -60,7 +60,7 @@ object Udx extends OpGroup {
       // slice: the hash match proves heap and sort agree, ties included.
       "q_agg_topk_by",
       (s, d) => {
-        TopKByLong.register(s)
+        graft.functions.register(s)
         Tables.orders(s, d)
           .select(col("o_custkey"), col("o_orderkey"),
                   (money("o_totalprice") * 100).cast("long").as("cents"))
@@ -89,7 +89,7 @@ object Udx extends OpGroup {
     Q(
       "q_udtf_ngrams",
       (s, d) => {
-        WordNgrams.register(s)
+        graft.functions.register(s)
         Tables.documents(s, d)
           .filter(col("doc_id") < 20)
           .selectExpr("word_ngrams(text, 2) AS bigram")
@@ -122,7 +122,7 @@ object Udx extends OpGroup {
       // k survivors) is the documented production path.
       "q_agg_heavy_hitters",
       (s, d) => {
-        graft.functions.HeavyHitters.register(s)
+        graft.functions.register(s)
         Tables.documents(s, d)
           .groupBy(col("source"))
           .agg(expr("heavy_hitters(lang, 16)").as("_hh"))

@@ -22,9 +22,10 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *
   * On a local path `createAtomic` writes the hidden temp file
   * `.<name>.<uuid>.tmp` (no Hadoop checksum, no `chmod`) and publishes it
-  * on close:
+  * on close, through [[NioCheckpointFileManager.publishLocal]], the step
+  * `TxLog`'s manifests and horizon also publish with:
   *  - without overwrite, by `link(2)` then deleting the temp file — the
-  *    no-clobber commit `TxLog.publish` uses. An existing target throws
+  *    no-clobber commit. An existing target throws
   *    Hadoop's `FileAlreadyExistsException`, so `HDFSMetadataLog` still
   *    detects a second writer on the same log;
   *  - with overwrite, by an atomic `rename(2)` over the target.
@@ -80,6 +81,24 @@ final class NioCheckpointFileManager(path: Path, hadoopConf: Configuration)
 
 object NioCheckpointFileManager {
 
+  /** The one local publish step: `write` finishes the temp file `tmp`,
+    * which is then published as `target` and deleted, whatever happens.
+    * Without `overwrite` it publishes by `link(2)`, which fails when
+    * `target` exists (the no-clobber commit of a log): false then. With
+    * `overwrite`, by an atomic `rename(2)` over `target`. */
+  private[graft] def publishLocal(tmp: JPath, target: JPath,
+      overwrite: Boolean)(write: => Unit): Boolean =
+    try {
+      write
+      if (overwrite) {
+        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+        true
+      } else
+        try { Files.createLink(target, tmp); true }
+        catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    } finally Files.deleteIfExists(tmp): Unit
+
   /** Writes `tmp`; `close()` publishes it as `target`, `cancel()` drops
     * it. Neither leaves `tmp` behind. */
   private final class LinkOnClose(
@@ -92,19 +111,9 @@ object NioCheckpointFileManager {
     override def close(): Unit = synchronized {
       if (!finished) {
         finished = true
-        try {
-          underlyingStream.close()
-          if (overwrite)
-            Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-              StandardCopyOption.REPLACE_EXISTING)
-          else
-            try Files.createLink(target, tmp)
-            catch {
-              case _: java.nio.file.FileAlreadyExistsException =>
-                throw new FileAlreadyExistsException(s"$target already exists")
-            }
-          Files.deleteIfExists(crc): Unit
-        } finally Files.deleteIfExists(tmp): Unit
+        if (!publishLocal(tmp, target, overwrite)(underlyingStream.close()))
+          throw new FileAlreadyExistsException(s"$target already exists")
+        Files.deleteIfExists(crc): Unit
       }
     }
 

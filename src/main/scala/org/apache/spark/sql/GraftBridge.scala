@@ -25,22 +25,4 @@ object GraftBridge {
     * in Determinism.intRatio4). */
   def column(e: catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
-
-  /** Test access to the private[sql] extension build steps, so the
-    * session-extension wiring can be asserted without tearing down the
-    * shared test session. */
-  def plannerStrategies(ext: SparkSessionExtensions,
-                        spark: SparkSession): Seq[execution.SparkStrategy] =
-    ext.buildPlannerStrategies(spark)
-
-  def registerFunctions(ext: SparkSessionExtensions,
-      reg: catalyst.analysis.FunctionRegistry): catalyst.analysis.FunctionRegistry =
-    ext.registerFunctions(reg)
-
-  def freshFunctionRegistry(): catalyst.analysis.FunctionRegistry =
-    new catalyst.analysis.SimpleFunctionRegistry
-
-  def optimizerRules(ext: SparkSessionExtensions,
-      spark: SparkSession): Seq[catalyst.rules.Rule[LogicalPlan]] =
-    ext.buildOptimizerRules(spark)
 }

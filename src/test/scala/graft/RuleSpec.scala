@@ -117,9 +117,9 @@ class RuleSpec extends SparkSpec {
   test("GraftExtensions injects the rule") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext)
-    assert(org.apache.spark.sql.GraftBridge
+    assert(org.apache.spark.sql.ExtensionBridge
       .optimizerRules(ext, spark).contains(BandedRangeJoinRule))
-    assert(org.apache.spark.sql.GraftBridge
+    assert(org.apache.spark.sql.ExtensionBridge
       .optimizerRules(ext, spark).contains(graft.plans.BitmapDistinctRule))
   }
 
