@@ -6,8 +6,10 @@ import java.util.Properties
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{Encoders, SaveMode}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{LongType, StructField}
 
 import graft.model.{Catalog, SchemaMapper}
 import graft.streaming.Recorder
@@ -274,6 +276,99 @@ class RecorderSpec extends SparkSpec {
     val df = Recorder.withReceipt(Seq((1, "a")).toDF("id", "v"))
     val recv = df.collect().head.getAs[Long]("_recv_us")
     assert(recv > 1600000000000000L) // sane epoch-µs
+  }
+
+  /** Janino compiles so far in this JVM: Spark times each one into this
+    * histogram. */
+  private def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("a parquet recording compiles its write plan once: after the first " +
+       "trigger, no trigger compiles") {
+    implicit val ctx = spark.sqlContext
+    val base = tmpDir("compile-once")
+    val cat = new Catalog(spark, s"$base/_metadata")
+    val in = MemoryStream[Pose](3)
+    val (_, q) = Recorder.recordParquet(in.toDS(), "/robot1/pose",
+      "geometry_msgs/Pose", cat, base, s"$base/_ckpt",
+      Trigger.ProcessingTime(0))
+    val k = 7
+    // compiles so far, read after each trigger has committed
+    val counts = try (0 until k).map { i =>
+      in.addData((0 until 6).map(j => Pose(i, j, 0, Stamp(i.toLong, 0L))))
+      q.processAllAvailable()
+      compiles()
+    } finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == k)
+    assert(counts.forall(_ == counts.head),
+      s"compiles after each of $k triggers: $counts")
+  }
+
+  test("a JDBC recording compiles its batch write once: four batches " +
+       "compile what one batch does") {
+    val base = tmpDir("compile-once-jdbc")
+    val cat = new Catalog(spark, s"$base/_metadata")
+    val url = s"jdbc:derby:$base/db;create=true"
+    // records `n` source files as `n` batches (one file per batch) into
+    // a table of its own; returns the compiles the recording did. Spark
+    // keys its compiled classes by the class loader of the query's own
+    // session, so each recording compiles its plan once; the first
+    // recording in the JVM also compiles what every query shares.
+    def record(topic: String, n: Int): Long = {
+      val src = s"$base/src$topic"
+      (0 until n).foreach { i =>
+        Seq(Pose(i, i, i, Stamp(i.toLong, 0L))).toDS().coalesce(1)
+          .write.mode(SaveMode.Append).parquet(src)
+      }
+      val stream = spark.readStream.schema(Encoders.product[Pose].schema)
+        .option("maxFilesPerTrigger", 1).parquet(src).as[Pose]
+      val before = compiles()
+      val (meta, q) = Recorder.recordJdbc(stream, s"/cam/pose$topic",
+        "geometry_msgs/Pose", cat, url, s"$base/_ckpt$topic")
+      q.awaitTermination()
+      val done = compiles() - before
+      assert(q.recentProgress.count(_.numInputRows > 0) == n)
+      assert(spark.read.jdbc(url, meta.table, new Properties()).count() == n)
+      done
+    }
+    record("0", 1)
+    val one = record("1", 1)
+    val four = record("4", 4)
+    assert(four == one, s"one batch compiled $one classes, four batches $four")
+  }
+
+  test("each trigger's part file holds one receipt: its batch's " +
+       "batchTimestampMs x 1000 from the offsets log") {
+    implicit val ctx = spark.sqlContext
+    val base = tmpDir("receipt")
+    val cat = new Catalog(spark, s"$base/_metadata")
+    val in = MemoryStream[Pose](3)
+    val (meta, q) = Recorder.recordParquet(in.toDS(), "/robot1/pose",
+      "geometry_msgs/Pose", cat, base, s"$base/_ckpt",
+      Trigger.ProcessingTime(0))
+    val k = 4
+    try (0 until k).foreach { i =>
+      in.addData((0 until 6).map(j => Pose(i, j, 0, Stamp(i.toLong, 0L))))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == k)
+    def text(p: String): String = Files.readString(Paths.get(p))
+    val TimestampMs = "\"batchTimestampMs\":(\\d+)".r
+    val FilePath = "\"path\":\"([^\"]+)\"".r
+    val receipts = (0 until k).map { id =>
+      val ms = TimestampMs.findFirstMatchIn(text(s"$base/_ckpt/offsets/$id"))
+        .get.group(1).toLong
+      val files = FilePath.findAllMatchIn(
+        text(s"$base/${meta.table}/v1/_spark_metadata/$id")).map(_.group(1)).toSeq
+      assert(files.size == 1, s"batch $id: $files")
+      val recv = spark.read.parquet(files.head).select("_recv_us")
+        .distinct().as[Long].collect().toSeq
+      assert(recv == Seq(ms * 1000), s"batch $id at $ms ms: $recv")
+      recv.head
+    }
+    assert(receipts.distinct.size == k, receipts)
+    assert(Recorder.withReceipt(Seq(1).toDF("id")).schema("_recv_us") ==
+      StructField("_recv_us", LongType, nullable = false))
   }
 
   test("end-to-end: two topics, one catalog, analytics over the log") {
