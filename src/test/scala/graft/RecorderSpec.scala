@@ -1,18 +1,22 @@
 package graft
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 import java.util.Properties
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.{Encoders, SaveMode}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.model.{Catalog, SchemaMapper}
-import graft.streaming.Recorder
+import graft.streaming.{ParquetLogWriter, Recorder}
 
 /** Top-level message fixtures (encoder derivation). */
 case class Stamp(secs: Long, nanos: Long)
@@ -235,6 +239,162 @@ class RecorderSpec extends SparkSpec {
     assert(readBack(b).sortBy(_.x) == all)
     val logB = entries(s"$b/_ckpt/offsets")
     assert(!logB.contains(s".${k - 1}.crc") && logB.contains(s".$k.crc"), logB)
+  }
+
+  /** The files batch `id`'s manifest entry under `dir` commits. */
+  private def committed(dir: String, id: Long): Seq[String] =
+    "\"path\":\"([^\"]+)\"".r.findAllMatchIn(Files.readString(
+      Paths.get(dir, "_spark_metadata", id.toString))).map(_.group(1)).toSeq
+
+  /** Records `batches` as one trigger each into a running `q`, then stops it. */
+  private def feed(in: MemoryStream[Pose], q: StreamingQuery,
+      batches: Seq[Seq[Pose]]): Unit =
+    try batches.foreach { b => in.addData(b); q.processAllAvailable() }
+    finally q.stop()
+
+  private def poses(from: Int, until: Int): Seq[Pose] =
+    (from until until).map(i => Pose(i, i, i, Stamp(i.toLong, 0L)))
+
+  test("a replayed batch is not written twice: a batch re-run after its " +
+       "commit was lost finds its manifest entry and writes nothing") {
+    implicit val ctx = spark.sqlContext
+    val base = tmpDir("replay")
+    val cat = new Catalog(spark, s"$base/_metadata")
+    val in = MemoryStream[Pose](3)
+    def record(): StreamingQuery = Recorder.recordParquet(in.toDS(),
+      "/robot1/pose", "geometry_msgs/Pose", cat, base, s"$base/_ckpt",
+      Trigger.ProcessingTime(0))._2
+    val k = 4
+    val msgs = poses(0, 6 * k)
+    feed(in, record(), msgs.grouped(6).toSeq)
+    // the crash: batch k-1's files are in the manifest, its commit is not
+    val last = k - 1
+    Files.delete(Paths.get(base, "_ckpt", "commits", last.toString))
+    Files.deleteIfExists(Paths.get(base, "_ckpt", "commits", s".$last.crc"))
+    val again = record()
+    try again.processAllAvailable() finally again.stop()
+    assert(again.recentProgress.map(_.batchId).contains(last),
+      again.recentProgress.map(_.batchId).toSeq)
+    val v1 = s"$base/robot1_pose/v1"
+    assert(entries(s"$v1/_spark_metadata") == (0 until k).map(_.toString))
+    assert((0 until k).map(committed(v1, _).size) == Seq.fill(k)(1))
+    assert(parquetFiles(Paths.get(v1)).size == k)
+    val back = Recorder.readback[Pose](spark, "/robot1/pose", cat, base)
+      .collect().toSeq
+    assert(back.sortBy(_.x) == msgs)
+  }
+
+  test("a task that throws mid-write leaves neither a part file nor a " +
+       "manifest entry for its batch") {
+    implicit val ctx = spark.sqlContext
+    val base = tmpDir("task-fails")
+    val cat = new Catalog(spark, s"$base/_metadata")
+    val in = MemoryStream[Pose](3)
+    // the marked message comes last, after the task has opened its file
+    val marked = Pose(-1, -1, -1, Stamp(0L, 0L))
+    val stream = in.toDS().map { p =>
+      if (p.x == -1) throw new IllegalStateException("marked message")
+      p
+    }
+    val (meta, q) = Recorder.recordParquet(stream, "/robot1/pose",
+      "geometry_msgs/Pose", cat, base, s"$base/_ckpt",
+      Trigger.ProcessingTime(0))
+    val ok = poses(0, 6)
+    try {
+      in.addData(ok); q.processAllAvailable()
+      in.addData(poses(6, 11) :+ marked)
+      val err = intercept[StreamingQueryException](q.processAllAvailable())
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("marked message")), err)
+    } finally q.stop()
+    val v1 = s"$base/${meta.table}/v1"
+    assert(entries(s"$v1/_spark_metadata") == Seq("0"))
+    val files = parquetFiles(Paths.get(v1)).map(_.getFileName.toString)
+    assert(files.size == 1 && committed(v1, 0).head.endsWith(files.head), files)
+    // nothing else of a part file, its checksum included, is left
+    assert(entries(v1).filter(_.contains("part-")).forall(_.contains(files.head)),
+      entries(v1))
+    val back = Recorder.readback[Pose](spark, "/robot1/pose", cat, base)
+      .collect().toSeq
+    assert(back.sortBy(_.x) == ok)
+  }
+
+  test("a version directory and checkpoint Spark's own file sink wrote " +
+       "resume under recordParquet, with exactly the input read back") {
+    implicit val ctx = spark.sqlContext
+    val base = tmpDir("from-file-sink")
+    val cat = new Catalog(spark, s"$base/_metadata")
+    val in = MemoryStream[Pose](3)
+    val meta = cat.register("/robot1/pose", "geometry_msgs/Pose", in.toDS().schema)
+    val v1 = s"$base/${meta.table}/v1"
+    val k = 6 // two runs of k triggers pass the manifest's compaction at 10
+    val all = poses(0, 2 * k)
+    feed(in, Recorder.withReceipt(in.toDS().toDF()).coalesce(1).writeStream
+      .option("checkpointLocation", s"$base/_ckpt")
+      .option("path", v1)
+      .trigger(Trigger.ProcessingTime(0))
+      .format("parquet").start(), all.take(k).map(Seq(_)))
+    val (resumed, q) = Recorder.recordParquet(in.toDS(), "/robot1/pose",
+      "geometry_msgs/Pose", cat, base, s"$base/_ckpt",
+      Trigger.ProcessingTime(0))
+    assert(resumed == meta)
+    feed(in, q, all.drop(k).map(Seq(_)))
+    assert(q.recentProgress.map(_.batchId).filter(_ >= 0).min == k)
+    assert(entries(s"$v1/_spark_metadata").contains("9.compact"))
+    assert(parquetFiles(Paths.get(v1)).size == 2 * k)
+    val back = Recorder.readback[Pose](spark, "/robot1/pose", cat, base)
+      .collect().toSeq
+    assert(back.sortBy(_.x) == all)
+  }
+
+  test("Spark's file source streams exactly the committed rows of a " +
+       "recorded directory, not a stray part file in it") {
+    implicit val ctx = spark.sqlContext
+    val base = tmpDir("file-source")
+    val cat = new Catalog(spark, s"$base/_metadata")
+    val in = MemoryStream[Pose](3)
+    val (meta, q) = Recorder.recordParquet(in.toDS(), "/robot1/pose",
+      "geometry_msgs/Pose", cat, base, s"$base/_ckpt",
+      Trigger.ProcessingTime(0))
+    val msgs = poses(0, 12)
+    feed(in, q, msgs.grouped(4).toSeq)
+    // a copy of a committed file under a name no manifest entry holds,
+    // as an attempt that failed before its commit leaves one
+    val v1 = Paths.get(base, meta.table, "v1")
+    Files.copy(parquetFiles(v1).head, v1.resolve("part-00000-stray-c000.snappy.parquet"))
+    assert(spark.read.parquet(s"$v1/*.parquet").count() > msgs.size)
+    val replay = spark.readStream.schema(Encoders.product[Pose].schema)
+      .parquet(v1.toString).writeStream.format("memory")
+      .queryName("recorded_replay").trigger(Trigger.AvailableNow()).start()
+    replay.awaitTermination()
+    val back = spark.table("recorded_replay").as[Pose].collect().toSeq
+    assert(back.sortBy(_.x) == msgs)
+  }
+
+  test("a parquet write task carries the Hadoop configuration as a " +
+       "broadcast handle, not by value") {
+    val base = tmpDir("task-bytes")
+    val writer = new ParquetLogWriter(spark, s"$base/v1")
+    val msgs = poses(0, 5)
+    writer(Recorder.withReceipt(msgs.toDF()).coalesce(1), 0L)
+    def serialized(o: AnyRef): Array[Byte] = {
+      val b = SparkEnv.get.closureSerializer.newInstance().serialize(o)
+      val a = new Array[Byte](b.remaining)
+      b.get(a)
+      a
+    }
+    val task = serialized(writer.task)
+    assert(!new String(task, StandardCharsets.ISO_8859_1)
+      .contains(classOf[Configuration].getName))
+    // a configuration by value (a `SerializableConfiguration` writes its
+    // entries, not a class descriptor) is more than ten times the bound
+    val bound = 8 * 1024
+    assert(task.length < bound, s"${task.length} bytes")
+    val conf = serialized(new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+    assert(conf.length > 10 * bound, s"${conf.length} bytes")
+    info(s"write task ${task.length} B; one configuration by value ${conf.length} B")
+    assert(committed(s"$base/v1", 0).size == 1)
+    assert(spark.read.parquet(s"$base/v1").as[Pose].collect().toSeq.sortBy(_.x) == msgs)
   }
 
   test("readback fails fast on schema drift (md5-check analog)") {
