@@ -15,9 +15,26 @@ import org.apache.spark.sql.types.DecimalType
 object Determinism {
   val Money: DecimalType = DecimalType(18, 2)
 
+  /** Exact integer accumulation past int64: sums of cents, squares and
+    * cross products (DuckDB twin `HUGEINT`). */
+  val D38: DecimalType = DecimalType(38, 0)
+
+  /** R4's µs day: `ts_us div DayUs` is the epoch day of an epoch-µs
+    * timestamp (DuckDB twin `// 86400000000`). */
+  val DayUs: Long = 86400000000L
+
   /** Cast an input double to exact money before aggregating (R2). */
   def money(c: Column): Column = c.cast(Money)
   def money(name: String): Column = money(col(name))
+
+  /** A money input as exact integer cents (R2). Oracle twin:
+    * `CAST(CAST(x AS DECIMAL(18,2)) * 100 AS BIGINT)`. */
+  def cents(c: Column): Column = (money(c) * 100).cast("long")
+  def cents(name: String): Column = cents(col(name))
+
+  /** A money column's exact sum in integer cents (R2). Oracle twin:
+    * `CAST(SUM(CAST(x AS DECIMAL(18,2))) * 100 AS BIGINT)`. */
+  def sumCents(name: String): Column = (sum(money(name)) * 100).cast("long")
 
   /** Final projection of a decimal aggregate: round to cents, then emit
     * as DOUBLE. MUST round explicitly before casting: Spark's decimal
@@ -122,13 +139,12 @@ object Determinism {
     * operands (DuckDB's 128-bit `//` is exact over the same range). */
   def intRatio4Wide(num: Column, den: Column): Column = {
     import org.apache.spark.sql.GraftBridge
-    val D = DecimalType(38, 0)
-    val d = den.cast(D)
+    val d = den.cast(D38)
     def halfUp(n: Column): Column = GraftBridge.column(
       new org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-        GraftBridge.expression((n * 2 + d).cast(D)),
-        GraftBridge.expression((d * 2).cast(D))))
-    val n = num.cast(D)
+        GraftBridge.expression((n * 2 + d).cast(D38)),
+        GraftBridge.expression((d * 2).cast(D38))))
+    val n = num.cast(D38)
     when(d > 0,
       when(n >= 0, halfUp(n)).otherwise(-halfUp(-n))
         .cast("double") / 10000.0)
@@ -151,7 +167,7 @@ object Determinism {
     * loudly). Exact to 10³⁴ of summed units per group. Oracle twin:
     * the avgExact4 formula with `CAST(… AS HUGEINT)` operands. */
   def avgExact4Wide(sumDec: Column, cnt: Column): Column =
-    intRatio4Wide((sumDec * 10000).cast(DecimalType(38, 0)), cnt)
+    intRatio4Wide((sumDec * 10000).cast(D38), cnt)
 
   /** Scale-4 revenue share m/t of two money aggregates, cent-exact at
     * any magnitude: both sides round to cents first, then num = m·10⁶
@@ -162,8 +178,8 @@ object Determinism {
     * `CAST(ROUND(m,2)*1000000 AS HUGEINT)` / `CAST(ROUND(t,2)*100 AS
     * HUGEINT)` operands. */
   def shareRatio4Wide(m: Column, t: Column): Column =
-    intRatio4Wide((round(m, 2) * 1000000).cast(DecimalType(38, 0)),
-                  (round(t, 2) * 100).cast(DecimalType(38, 0)))
+    intRatio4Wide((round(m, 2) * 1000000).cast(D38),
+                  (round(t, 2) * 100).cast(D38))
 
   /** Exact HALF-UP integer quotient round(num/den) over DECIMAL(38,0)
     * operands — the integer-valued core of [[intRatio4Wide]] exposed
@@ -175,12 +191,11 @@ object Determinism {
     * oracle twin `(2*num + den) // (2*den)` on HUGEINT operands. */
   def halfUpDivWide(num: Column, den: Column): Column = {
     import org.apache.spark.sql.GraftBridge
-    val D = DecimalType(38, 0)
-    val d = den.cast(D)
+    val d = den.cast(D38)
     GraftBridge.column(
       new org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-        GraftBridge.expression((num.cast(D) * 2 + d).cast(D)),
-        GraftBridge.expression((d * 2).cast(D))))
+        GraftBridge.expression((num.cast(D38) * 2 + d).cast(D38)),
+        GraftBridge.expression((d * 2).cast(D38))))
   }
 
   /** [[halfUpDivWide]] for quotients that can THEMSELVES exceed int64
@@ -197,10 +212,9 @@ object Determinism {
     * Same num ≥ 0, den > 0 domain and HUGEINT oracle twin as
     * [[halfUpDivWide]]. */
   def halfUpDivWideDec(num: Column, den: Column): Column = {
-    val D = DecimalType(38, 0)
-    val a = (num.cast(D) * 2 + den.cast(D)).cast(D)
-    val b = (den.cast(D) * 2).cast(D)
-    ((a - pmod(a, b)) / b).cast(D)
+    val a = (num.cast(D38) * 2 + den.cast(D38)).cast(D38)
+    val b = (den.cast(D38) * 2).cast(D38)
+    ((a - pmod(a, b)) / b).cast(D38)
   }
 
   /** Sign-mirrored [[halfUpDivWideDec]] (num may be negative; den > 0):
@@ -228,6 +242,13 @@ object Determinism {
         GraftBridge.expression(a.cast("long")),
         GraftBridge.expression(b.cast("long"))))
   }
+
+  /** Epoch day of a DATE or TIMESTAMP column (R4): its epoch-µs value
+    * `div` [[DayUs]], in true long division. Oracle twin
+    * `epoch_us(c) // 86400000000`. */
+  def epochDay(c: Column): Column =
+    ldiv(unix_micros(c.cast("timestamp")), lit(DayUs))
+  def epochDay(name: String): Column = epochDay(col(name))
 
   /** Distributed inclusive prefix sums over a COLLAPSED (one row per
     * distinct `v`) frame — the scale-safe replacement for the

@@ -252,7 +252,7 @@ object Dedup {
     val capped = capHotShingles(exploded, col("s"),
         maxShingleDocFreq, maxShingleDocFrac,
         df.select(count(lit(1)).as("_n_docs")))
-    if (!fastHash)
+    val (hs, mins) = if (!fastHash)
       // r12 note: converting the slot minima to LONGs via
       // min(conv(w, 16, 10) cast long) was tried (to turn the
       // SortAggregate into a HashAggregate — fixed-width lowercase hex
@@ -275,15 +275,8 @@ object Dedup {
         // and therefore every signature, is bit-identical.
         val hs = (0 to 3).map(j =>
           md5(concat(col("s"), lit(s"#$j"))).as(s"_h$j"))
-        val mins = for { j <- 0 to 3; w <- 0 to 3 } yield
-          min(substring(col(s"_h$j"), 1 + 8 * w, 8)).as(s"m${j * 4 + w}")
-        val stackArgs = (0 to 15).map(k => s"$k, m$k").mkString(", ")
-        capped
-          .select(col("doc_id") +: hs: _*)
-          .groupBy(col("doc_id"))
-          .agg(mins.head, mins.tail: _*)
-          .select(col("doc_id"),
-                  expr(s"stack(16, $stackArgs) AS (k, mh)"))
+        (hs, for { j <- 0 to 3; w <- 0 to 3 } yield
+          min(substring(col(s"_h$j"), 1 + 8 * w, 8)).as(s"m${j * 4 + w}"))
       }
     else
       // PRODUCTION slot hash: one codegen'd xxhash64 per (shingle,
@@ -302,17 +295,16 @@ object Dedup {
         // through the agg), identical (k, mh) values
         val hs = (0 to 7).map(j =>
           xxhash64(col("s"), lit(j)).as(s"_h$j"))
-        val mins = for { j <- 0 to 7; w <- 0 to 1 } yield
+        (hs, for { j <- 0 to 7; w <- 0 to 1 } yield
           min(expr(if (w == 0) s"_h$j >> 32" else s"_h$j & 4294967295"))
-            .as(s"m${j * 2 + w}")
-        val stackArgs = (0 to 15).map(k => s"$k, m$k").mkString(", ")
-        capped
-          .select(col("doc_id") +: hs: _*)
-          .groupBy(col("doc_id"))
-          .agg(mins.head, mins.tail: _*)
-          .select(col("doc_id"),
-                  expr(s"stack(16, $stackArgs) AS (k, mh)"))
+            .as(s"m${j * 2 + w}"))
       }
+    val stackArgs = (0 to 15).map(k => s"$k, m$k").mkString(", ")
+    capped
+      .select(col("doc_id") +: hs: _*)
+      .groupBy(col("doc_id"))
+      .agg(mins.head, mins.tail: _*)
+      .select(col("doc_id"), expr(s"stack(16, $stackArgs) AS (k, mh)"))
   }
 
   /** Cross-corpus MinHash matching: (doc_a from `sigA`, doc_b from
@@ -592,23 +584,7 @@ object Dedup {
     val bands = sig.select(col("doc_id"), col("sig"),
         explode(expr("sequence(0, 3)")).as("b"))
       .withColumn("bv", expr("(sig div shiftleft(1L, 8 * b)) % 256"))
-    val a = bands.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
-                         col("b"), col("bv"))
-    val bb = bands.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
-                          col("b").as("b2"), col("bv").as("bv2"))
-    // confirm with bit_count IN THE JOIN STAGE, before the pair-dedup
-    // groupBy: when band selectivity degrades (saturated signature
-    // space), the candidate fan-out is large, and filtering map-side
-    // means only true near-dup pairs ever shuffle (measured 2× at
-    // sf0.1 vs grouping all candidates first)
-    a.join(bb.hint("MERGE"),
-           col("b") === col("b2") && col("bv") === col("bv2") &&
-           col("doc_a") < col("doc_b"))
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(min(col("hamming")).as("hamming"))
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
+    bandPairs(bands, maxHamming)
   }
 
   /** Corpus-scale SimHash Hamming pairs: the SAME 4-band pigeonhole
@@ -630,10 +606,22 @@ object Dedup {
       // arithmetic >> sign-extends for band 3 of a negative sig; the
       // & 65535 mask keeps exactly bits 16b..16b+15 either way
       .withColumn("bv", expr("(sig >> (16 * b)) & 65535"))
+    bandPairs(bands, maxHamming)
+  }
+
+  /** Pairs (doc_a < doc_b) of `bands` rows (doc_id, sig, b, bv) that
+    * share a band value, with their signatures' Hamming distance when
+    * it is ≤ `maxHamming`. */
+  private def bandPairs(bands: DataFrame, maxHamming: Int): DataFrame = {
     val a = bands.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
                          col("b"), col("bv"))
     val bb = bands.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
                           col("b").as("b2"), col("bv").as("bv2"))
+    // confirm with bit_count IN THE JOIN STAGE, before the pair-dedup
+    // groupBy: when band selectivity degrades (saturated signature
+    // space), the candidate fan-out is large, and filtering map-side
+    // means only true near-dup pairs ever shuffle (measured 2× at
+    // sf0.1 vs grouping all candidates first)
     a.join(bb.hint("MERGE"),
            col("b") === col("b2") && col("bv") === col("bv2") &&
            col("doc_a") < col("doc_b"))
@@ -781,21 +769,11 @@ object Dedup {
   def sharedNgramSpans(
       df: DataFrame, id: Column, text: Column, n: Int): DataFrame = {
     require(n >= 1, "sharedNgramSpans: n must be >= 1")
-    val toks = df.select(id.as("__doc"), tokens(text).as("w"))
-      .filter(size(col("w")) >= n)
-    val parts = (0 until n).map(j => s"w[p+$j]").mkString(", ")
-    val sh = toks.select(
-      col("__doc"),
-      posexplode(expr(
-        s"transform(sequence(0, size(w) - $n), p -> " +
-          s"concat_ws(' ', $parts))")).as(Seq("pos", "g")))
+    val sh = ngramGrid(df, id, text, n)
       // r12 (guide §3.3): feeds the shared-gram agg AND the semi-join
       // probe — materialize the gram grid once per invocation
       .localCheckpoint()
-    val shared = sh.groupBy(col("g"))
-      .agg(countDistinct(col("__doc")).as("df"))
-      .filter(col("df") >= 2).select(col("g"))
-    val cov = sh.join(shared, Seq("g"), "left_semi")
+    val cov = sharedOnly(sh)
     val w = Window.partitionBy(col("__doc")).orderBy(col("pos"))
     cov.withColumn("grp", col("pos") - row_number().over(w))
       .groupBy(col("__doc"), col("grp"))
@@ -804,6 +782,28 @@ object Dedup {
       .select(col("__doc").as("doc"), col("span_start"),
               col("span_end"),
               (col("span_end") - col("span_start") + n).as("n_tokens"))
+  }
+
+  /** Every word n-gram of each doc with ≥ n tokens: (__doc, pos, g),
+    * `g` the n-gram starting at token `pos`, space-joined. */
+  private def ngramGrid(df: DataFrame, id: Column, text: Column,
+                        n: Int): DataFrame = {
+    val toks = df.select(id.as("__doc"), tokens(text).as("w"))
+      .filter(size(col("w")) >= n)
+    val parts = (0 until n).map(j => s"w[p+$j]").mkString(", ")
+    toks.select(
+      col("__doc"),
+      posexplode(expr(
+        s"transform(sequence(0, size(w) - $n), p -> " +
+          s"concat_ws(' ', $parts))")).as(Seq("pos", "g")))
+  }
+
+  /** The rows of an [[ngramGrid]] whose n-gram occurs in ≥ 2 docs. */
+  private def sharedOnly(sh: DataFrame): DataFrame = {
+    val shared = sh.groupBy(col("g"))
+      .agg(countDistinct(col("__doc")).as("df"))
+      .filter(col("df") >= 2).select(col("g"))
+    sh.join(shared, Seq("g"), "left_semi")
   }
 
   /** Per-document COVERED-TOKEN mass under [[sharedNgramSpans]]'
@@ -826,22 +826,11 @@ object Dedup {
   def coveredTokenMass(
       df: DataFrame, id: Column, text: Column, n: Int): DataFrame = {
     require(n >= 1, "coveredTokenMass: n must be >= 1")
-    val toks = df.select(id.as("__doc"), tokens(text).as("w"))
-      .filter(size(col("w")) >= n)
-    val parts = (0 until n).map(j => s"w[p+$j]").mkString(", ")
-    val sh = toks.select(
-      col("__doc"),
-      posexplode(expr(
-        s"transform(sequence(0, size(w) - $n), p -> " +
-          s"concat_ws(' ', $parts))")).as(Seq("pos", "g")))
-      // r12: the sharedNgramSpans materialization was tried here too
-      // and MEASURED 3x SLOWER (0.28 -> 0.84 s A/B at sf0.1): this
-      // query's downstream work is too small to amortize storing the
-      // gram grid. Left recomputed deliberately.
-    val shared = sh.groupBy(col("g"))
-      .agg(countDistinct(col("__doc")).as("df"))
-      .filter(col("df") >= 2).select(col("g"))
-    val cov = sh.join(shared, Seq("g"), "left_semi")
+    // r12: the sharedNgramSpans materialization was tried here too
+    // and MEASURED 3x SLOWER (0.28 -> 0.84 s A/B at sf0.1): this
+    // query's downstream work is too small to amortize storing the
+    // gram grid. Left recomputed deliberately.
+    val cov = sharedOnly(ngramGrid(df, id, text, n))
       .select(col("__doc"), col("pos"))
     val w = Window.partitionBy(col("__doc")).orderBy(col("pos"))
     val wc = Window.partitionBy(col("__doc")).orderBy(col("pos"))

@@ -3,6 +3,8 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Determinism.D38
+
 /** Warehouse-maintenance operators: the table-to-table reconciliation
   * jobs every recorder deployment (the reference's domain: long-lived
   * logged tables) eventually runs.
@@ -27,7 +29,6 @@ object Etl {
   def tableChecksum(df: DataFrame, grp: Column, rowRepr: Column,
                     mod: Long = 2305843009213693951L): DataFrame = {
     require(mod > 1, "tableChecksum: mod must be > 1")
-    val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val v = conv(substring(md5(rowRepr), 1, 15), 16, 10).cast(D38)
     df.select(grp.as("_g"), v.as("_v"))
       .groupBy(col("_g"))

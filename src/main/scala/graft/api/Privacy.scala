@@ -3,6 +3,8 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Determinism.D38
+
 /** Privacy auditing for training-data release — the gate a corpus passes
   * BEFORE export, alongside the PII redaction of ops/ScrubOps: k-anonymity
   * equivalence-class profiling, l-diversity of a sensitive attribute, and
@@ -71,7 +73,6 @@ object Privacy {
     * everything after is class×domain-sized. */
   def tCloseness(df: DataFrame, qi: Seq[Column],
                  sensitive: Column): DataFrame = {
-    val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val b = df.select((qi :+ sensitive.as("_s")): _*)
     val qn = b.columns.dropRight(1).toSeq
     val cells = b.groupBy((qn.map(col) :+ col("_s")): _*)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Determinism.D38
+
 /** Public, parameterized similarity-search API over an embedding column
   * (`array<float>`) — exact brute-force baseline plus two ANN scale
   * paths (SRP-LSH sign buckets, IVF cells). The `q_sim_*` operators
@@ -98,7 +100,13 @@ object Sim {
     * of the collection. Returns (q_id, cand_id, cos, rn). */
   def cosineTopK(
       df: DataFrame, id: Column, emb: Column, isQuery: Column,
-      k: Int): DataFrame = {
+      k: Int): DataFrame =
+    heapRankCos(queryCosines(df, id, emb, isQuery), k)
+
+  /** Every (query, other vector) pair's R3-rounded cosine: (q_id,
+    * cand_id, cos). Queries broadcast, one candidate scan. */
+  private def queryCosines(df: DataFrame, id: Column, emb: Column,
+                           isQuery: Column): DataFrame = {
     // zero-norm vectors have no defined cosine — and under ANSI mode
     // (Spark 4 default) the division RAISES rather than yielding NaN,
     // so they are excluded up front, exactly as kmeansFit does
@@ -113,12 +121,10 @@ object Sim {
               col("nrm").as("q_nrm"))
     val c = e.select(col("vec_id").as("cand_id"),
                      col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
-
-    val scored = broadcast(q).join(c, col("q_id") =!= col("cand_id"))
+    broadcast(q).join(c, col("q_id") =!= col("cand_id"))
       .select(col("q_id"), col("cand_id"),
               round(dot("q_emb", "c_emb") / (col("q_nrm") * col("c_nrm")), 4)
                 .as("cos"))
-    heapRankCos(scored, k)
   }
 
   /** Cosine radius (range) search: every candidate within cosine ≥
@@ -134,24 +140,8 @@ object Sim {
     * embeddingNearDupPairs. Returns (q_id, cand_id, cos). */
   def cosineRadius(
       df: DataFrame, id: Column, emb: Column, isQuery: Column,
-      minCos: Double): DataFrame = {
-    // r12 (guide §3.3): e feeds the broadcast query side AND the
-    // candidate scan — materialize the normed collection once per
-    // invocation instead of planning the norm pipeline twice
-    val e = withNorm(df, id, emb, Seq("_isq" -> isQuery))
-      .filter(col("embedding").isNotNull && col("nrm") > 0)
-      .localCheckpoint()
-    val q = e.filter(col("_isq"))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-              col("nrm").as("q_nrm"))
-    val c = e.select(col("vec_id").as("cand_id"),
-                     col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
-    broadcast(q).join(c, col("q_id") =!= col("cand_id"))
-      .select(col("q_id"), col("cand_id"),
-              round(dot("q_emb", "c_emb") / (col("q_nrm") * col("c_nrm")),
-                    4).as("cos"))
-      .filter(col("cos") >= minCos)
-  }
+      minCos: Double): DataFrame =
+    queryCosines(df, id, emb, isQuery).filter(col("cos") >= minCos)
 
   /** Mutual-kNN graph: undirected edges (a, b), a < b, where each
     * endpoint sits in the other's EXACT top-k cosine neighbour list —
@@ -163,7 +153,12 @@ object Sim {
     * neighbour frame. Returns (node_a, node_b, cos). */
   def knnGraph(df: DataFrame, id: Column, emb: Column, k: Int)
       : DataFrame = {
-    val top = cosineTopK(df, id, emb, isQuery = lit(true), k)
+    mutualEdges(cosineTopK(df, id, emb, isQuery = lit(true), k))
+  }
+
+  /** The pairs of a top-k frame (q_id, cand_id, cos) that are in each
+    * other's lists, once each: (node_a < node_b, cos). */
+  private def mutualEdges(top: DataFrame): DataFrame = {
     val rev = top.select(col("q_id").as("b_id"), col("cand_id").as("a_id"))
     top.filter(col("q_id") < col("cand_id"))
       .join(rev, col("q_id") === col("a_id") &&
@@ -222,13 +217,7 @@ object Sim {
         round(dot("qe", "ce") / (col("qn") * col("cn")), 4))
     // r12: the mutual-kNN semi-join consumes `top` twice — materialize
     // the n×k ranked frame once per invocation
-    val top = heapRankCos(scored, k).localCheckpoint()
-    val rev = top.select(col("q_id").as("b_id"), col("cand_id").as("a_id"))
-    top.filter(col("q_id") < col("cand_id"))
-      .join(rev, col("q_id") === col("a_id") &&
-                 col("cand_id") === col("b_id"), "left_semi")
-      .select(col("q_id").as("node_a"), col("cand_id").as("node_b"),
-              col("cos"))
+    mutualEdges(heapRankCos(scored, k).localCheckpoint())
   }
 
   /** LSH-bucketed approximate top-k: queries only scan their own
@@ -501,8 +490,14 @@ object Sim {
     val cb = pqCodebook(sub)
     val enc = pqEncode(sub, cb)
     val lut = pqLut(sub, cb)
-    val scored = enc
-      .join(broadcast(lut), Seq("j", "code"))
+    adcTopK(enc.join(broadcast(lut), Seq("j", "code")), k)
+  }
+
+  /** The k nearest candidates per query by summed per-subvector
+    * distance `d` of (q_id, cand_id, d) rows, self excluded: (q_id,
+    * cand_id, adc_dist, rn). */
+  private def adcTopK(dists: DataFrame, k: Int): DataFrame = {
+    val scored = dists
       .filter(col("cand_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("cand_id"))
       .agg(sum(col("d")).as("adc"))
@@ -570,15 +565,9 @@ object Sim {
     val cb = pqCodebook(sub)
     val enc = pqEncode(sub, cb).join(assign, "cand_id")
     val lut = pqLut(sub, cb)
-    val scored = enc
+    adcTopK(enc
       .join(broadcast(probes), Seq("cell"))
-      .join(broadcast(lut), Seq("q_id", "j", "code"))
-      .filter(col("cand_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("cand_id"))
-      .agg(sum(col("d")).as("adc"))
-    heapRank(scored, -col("adc"), k)
-      .select(col("q_id"), col("cand_id"),
-              (-col("_ord")).as("adc_dist"), col("rn"))
+      .join(broadcast(lut), Seq("q_id", "j", "code")), k)
   }
 
   /** Spherical k-means (Lloyd's) over an `array<float>` embedding
@@ -838,7 +827,6 @@ object Sim {
   def gramMatrix(df: DataFrame, emb: Column, dims: Int): DataFrame = {
     require(dims >= 1 && dims <= 64,
       s"gramMatrix: dims must be in [1, 64], got $dims")
-    val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val base = df
       .filter(emb.isNotNull && size(emb) >= dims)
       .select((0 until dims).map(i =>
@@ -869,7 +857,6 @@ object Sim {
       df: DataFrame, emb: Column, grp: Column, dims: Int): DataFrame = {
     require(dims >= 1 && dims <= 64,
       s"pairwiseDiversity: dims must be in [1, 64], got $dims")
-    val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val base = df
       .filter(emb.isNotNull && size(emb) >= dims)
       .select(grp.as("_g") +: (0 until dims).map(i =>

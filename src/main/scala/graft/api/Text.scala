@@ -143,6 +143,17 @@ object Text {
     concat(head, path, regexp_replace(stripped, "^&", "?"))
   }
 
+  /** Each doc's distinct word n-gram shingles: (doc_id, sh). */
+  private def docShingles(df: DataFrame, id: Column, text: Column,
+                          n: Int): DataFrame =
+    df.select(id.as("doc_id"), Dedup.tokens(text).as("w"))
+      .filter(size(col("w")) >= n)
+      // explode_outer + null filter, NOT explode: InferFiltersFromGenerate
+      // would push the shingle expression into the scan 3× (SCALE.md)
+      .select(col("doc_id"),
+              explode_outer(expr(Dedup.shingleExpr(n))).as("sh"))
+      .filter(col("sh").isNotNull)
+
   /** Per-document boilerplate measurement (the line-frequency idea of
     * CCNet/RefinedWeb, expressed over the canonical shingle space): a
     * shingle is "boilerplate" when its document frequency exceeds
@@ -159,14 +170,7 @@ object Text {
       df: DataFrame, id: Column, text: Column,
       n: Int = 2, minDocFrac: Double = 0.07): DataFrame = {
     require(n >= 1, "boilerplateStats: n must be >= 1")
-    val exploded = df
-      .select(id.as("doc_id"), Dedup.tokens(text).as("w"))
-      .filter(size(col("w")) >= n)
-      // explode_outer + null filter, NOT explode: InferFiltersFromGenerate
-      // would push the shingle expression into the scan 3× (SCALE.md)
-      .select(col("doc_id"),
-              explode_outer(expr(Dedup.shingleExpr(n))).as("sh"))
-      .filter(col("sh").isNotNull)
+    val exploded = docShingles(df, id, text, n)
     val nDocs = df.select(count(lit(1)).as("_n_docs"))
     val hot = exploded.groupBy(col("sh"))
       .agg(count(lit(1)).as("_dfreq"))
@@ -345,12 +349,7 @@ object Text {
       df: DataFrame, id: Column, text: Column,
       n: Int = 3, minDf: Int = 2): DataFrame = {
     require(n >= 1 && minDf >= 1, "dupNgramStats: n and minDf must be >= 1")
-    val exploded = df
-      .select(id.as("doc_id"), Dedup.tokens(text).as("w"))
-      .filter(size(col("w")) >= n)
-      .select(col("doc_id"),
-              explode_outer(expr(Dedup.shingleExpr(n))).as("sh"))
-      .filter(col("sh").isNotNull)
+    val exploded = docShingles(df, id, text, n)
     // shingleExpr is per-doc distinct, so count(*) per shingle IS the
     // document frequency — no distinct shuffle needed
     exploded

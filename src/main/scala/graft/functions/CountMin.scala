@@ -49,17 +49,8 @@ object CountMin {
   private[graft] def aggBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3,
       "count_min_agg(item, depth, width) takes three arguments")
-    def const(e: Expression, name: String): Int = e match {
-      case c if c.foldable => c.eval() match {
-        case i: java.lang.Integer => i.intValue
-        case l: java.lang.Long if l > 0 && l <= Int.MaxValue => l.intValue
-        case other => throw new IllegalArgumentException(
-          s"count_min_agg: $name must be a constant integer, got $other")
-      }
-      case other => throw new IllegalArgumentException(
-        s"count_min_agg: $name must be a constant integer, got $other")
-    }
-    CountMinAgg(exprs.head, const(exprs(1), "depth"), const(exprs(2), "width"))
+    CountMinAgg(exprs.head, constInt(exprs(1), "count_min_agg", "depth"),
+      constInt(exprs(2), "count_min_agg", "width"))
   }
 
   private[graft] def probeBuilder(exprs: Seq[Expression]): Expression = {

@@ -161,17 +161,6 @@ object HeavyHitters {
     * within Int range — no silent Long truncation. */
   def builder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2, "heavy_hitters(item, k) takes two arguments")
-    val k = exprs(1) match {
-      case e if e.foldable => e.eval() match {
-        case i: java.lang.Integer => i.intValue
-        case l: java.lang.Long if l >= Int.MinValue && l <= Int.MaxValue =>
-          l.intValue
-        case other => throw new IllegalArgumentException(
-          s"heavy_hitters: k must be a constant integer, got $other")
-      }
-      case other => throw new IllegalArgumentException(
-        s"heavy_hitters: k must be a constant integer, got $other")
-    }
-    HeavyHitters(exprs.head, k)
+    HeavyHitters(exprs.head, constInt(exprs(1), "heavy_hitters", "k"))
   }
 }

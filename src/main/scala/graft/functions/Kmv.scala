@@ -109,17 +109,6 @@ object KmvKth {
   /** k must be a constant integer (TopKByLong/HeavyHitters discipline). */
   private[graft] def builder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2, "kmv_kth(hash, k) takes two arguments")
-    val k = exprs(1) match {
-      case e if e.foldable => e.eval() match {
-        case i: java.lang.Integer => i.intValue
-        case l: java.lang.Long if l >= Int.MinValue && l <= Int.MaxValue =>
-          l.intValue
-        case other => throw new IllegalArgumentException(
-          s"kmv_kth: k must be a constant integer, got $other")
-      }
-      case other => throw new IllegalArgumentException(
-        s"kmv_kth: k must be a constant integer, got $other")
-    }
-    KmvKth(exprs.head, k)
+    KmvKth(exprs.head, constInt(exprs(1), "kmv_kth", "k"))
   }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
+import graft.Determinism.D38
+
 /** Exact `SUM(BIGINT) → DECIMAL(38,0)` with a two-level buffer:
   * per-row accumulation is ONE long add + one compare, and decimal
   * arithmetic happens only on flush (when the long partial nears
@@ -36,8 +38,6 @@ import org.apache.spark.sql.types._
   */
 case class SumLongDec38(child: Expression)
   extends DeclarativeAggregate with UnaryLike[Expression] {
-
-  private def D38: DecimalType = DecimalType(38, 0)
 
   /** flush threshold: after every update |partial| ≤ Flush, so the
     * next `partial + child` cannot leave the long range while

@@ -160,20 +160,7 @@ object TopKByLong {
   def builder(pairs: Boolean)(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3,
       "topk_by_long(value, ord, k) takes three arguments")
-    val k = exprs(2) match {
-      case e if e.foldable => e.eval() match {
-        case i: java.lang.Integer => i.intValue
-        // range-check BEFORE intValue: a silent Long truncation would
-        // wrap an out-of-range k to an arbitrary small k that passes
-        // the require (review r4 full-repo pass)
-        case l: java.lang.Long if l >= Int.MinValue && l <= Int.MaxValue =>
-          l.intValue
-        case other => throw new IllegalArgumentException(
-          s"topk_by_long: k must be a constant integer, got $other")
-      }
-      case other => throw new IllegalArgumentException(
-        s"topk_by_long: k must be a constant integer, got $other")
-    }
-    TopKByLong(exprs.head, exprs(1), k, pairs)
+    TopKByLong(exprs.head, exprs(1),
+      constInt(exprs(2), "topk_by_long", "k"), pairs)
   }
 }

@@ -64,23 +64,7 @@ object WordNgrams {
     * instead of a ClassCastException / unbound-reference crash. */
   def builder(exprs: Seq[Expression]): WordNgrams = {
     require(exprs.length == 2, "word_ngrams(col, n) takes two arguments")
-    // the builder runs at analysis time, BEFORE constant folding —
-    // accept any foldable integral expression (a bare literal, a CAST
-    // of one, …), not just Literal[Int]
-    val n = exprs(1) match {
-      case e if e.foldable => e.eval() match {
-        case i: java.lang.Integer => i.intValue
-        // range-check BEFORE intValue (same rule as TopKByLong.builder)
-        case l: java.lang.Long if l >= Int.MinValue && l <= Int.MaxValue =>
-          l.intValue
-        case s: java.lang.Short  => s.intValue
-        case b: java.lang.Byte   => b.intValue
-        case other => throw new IllegalArgumentException(
-          s"word_ngrams: n must be a constant integer, got $other")
-      }
-      case other => throw new IllegalArgumentException(
-        s"word_ngrams: n must be a constant integer, got ${other.sql}")
-    }
-    WordNgrams(exprs.head, n)
+    WordNgrams(exprs.head,
+      constInt(exprs(1), "word_ngrams", "n", smallInts = true))
   }
 }

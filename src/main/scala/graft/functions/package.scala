@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** graft's SQL functions, listed once. */
 package object functions {
@@ -34,6 +34,29 @@ package object functions {
       CountMin.probeBuilder),
     entry("bloom_agg", Bloom.getClass, Bloom.aggBuilder),
     entry("bloom_might_contain", Bloom.getClass, Bloom.probeBuilder))
+
+  /** The value of a SQL function's constant integer argument, read by
+    * its builder at analysis time, before constant folding (so any
+    * foldable expression counts, not just a literal): an INT, or a
+    * BIGINT inside the INT range. The range is checked before
+    * narrowing, so an out-of-range value is refused, never wrapped to
+    * an arbitrary small one. `smallInts` also accepts SMALLINT and
+    * TINYINT. Anything else is refused with an error naming the
+    * function `fn` and its argument `arg`. */
+  private[functions] def constInt(e: Expression, fn: String, arg: String,
+                                  smallInts: Boolean = false): Int = {
+    def refuse(got: Any): Nothing = throw new IllegalArgumentException(
+      s"$fn: $arg must be a constant integer, got $got")
+    if (!e.foldable) refuse(e.sql)
+    e.eval() match {
+      case i: java.lang.Integer => i.intValue
+      case l: java.lang.Long if l >= Int.MinValue && l <= Int.MaxValue =>
+        l.intValue
+      case s: java.lang.Short if smallInts => s.intValue
+      case b: java.lang.Byte if smallInts => b.intValue
+      case other => refuse(other)
+    }
+  }
 
   /** Writes [[table]] into `spark`'s function registry, so SQL and
     * `selectExpr` there can call every graft function. Library code

@@ -58,8 +58,20 @@ final class Catalog(spark: SparkSession, path: String) {
   private val doc = new Path(dir, Catalog.DocName)
   private val files =
     new NioCheckpointFileManager(dir, spark.sparkContext.hadoopConfiguration)
+  private val lockKey = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    .makeQualified(dir).toString
 
-  def register(topic: String, msgType: String, schema: StructType): TopicMeta = {
+  /** Registers `schema` as `topic`'s current version and returns its
+    * row (the current row, unchanged, when the schema is). Registrations
+    * on one catalog path are serialized within this JVM, across every
+    * `Catalog` instance on that path. */
+  def register(topic: String, msgType: String, schema: StructType): TopicMeta =
+    Catalog.lockFor(lockKey).synchronized {
+      registerLocked(topic, msgType, schema)
+    }
+
+  private def registerLocked(topic: String, msgType: String,
+                             schema: StructType): TopicMeta = {
     val fp = SchemaMapper.fingerprint(schema)
     val table = SchemaMapper.namify(topic)
     val rows = allVersions()
@@ -108,9 +120,9 @@ final class Catalog(spark: SparkSession, path: String) {
     * a document that is not a list of complete rows included:
     * swallowing it here would let register() overwrite the catalog with
     * a single topic, silently dropping every other topic's metadata.
-    * register() is read-then-replace and therefore not safe under
-    * concurrent registrations — callers must serialize (the recorder
-    * registers topics one at a time from the driver). */
+    * register() is read-then-replace: it holds a lock per catalog path
+    * within one JVM, and callers in separate processes must serialize
+    * themselves. */
   def allVersions(): Seq[TopicMeta] =
     if (files.exists(doc)) {
       val in = files.open(doc)
@@ -178,6 +190,12 @@ final class Catalog(spark: SparkSession, path: String) {
 object Catalog {
   /** The catalog document's file name under the catalog path. */
   private val DocName = "catalog.json"
+
+  /** One lock per qualified catalog path, shared by every instance. */
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  private def lockFor(path: String): AnyRef =
+    locks.computeIfAbsent(path, _ => new AnyRef)
 
   /** One hash-chain step: chainₖ = md5(chainₖ₋₁ ‖ '→' ‖ fpₖ). */
   def chainStep(prevChain: String, fp: String): String = {

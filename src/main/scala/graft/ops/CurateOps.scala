@@ -110,7 +110,7 @@ object CurateOps extends OpGroup {
         val e = Tables.events(s, d)
           .select(col("user_id"), col("event_id"), col("ts_us"),
                   col("event_type"),
-                  (money("value") * 100).cast("long").as("vc"))
+                  cents("value").as("vc"))
         val wPrev = Window.partitionBy(col("user_id"))
           .orderBy(col("ts_us"), col("event_id"))
           .rowsBetween(Window.unboundedPreceding, -1)
@@ -209,7 +209,7 @@ object CurateOps extends OpGroup {
       "q_agg_histogram_eqdepth",
       (s, d) => Pipeline.equiDepthHistogram(
           Tables.lineitem(s, d),
-          (money("l_extendedprice") * 100).cast("long"), buckets = 8)
+          cents("l_extendedprice"), buckets = 8)
         .withColumn("bucket", col("bucket").cast("int"))
         .orderBy(col("bucket")),
       """WITH v AS (
@@ -273,7 +273,7 @@ object CurateOps extends OpGroup {
           .orderBy(col("ts").asc, col("event_id").asc)
         val e = Tables.events(s, d)
           .select(col("event_type"), col("event_id"), col("ts"),
-                  (money("value") * 100).cast("long").as("vc"))
+                  cents("value").as("vc"))
         val lags = (1 to 7).map(j => lag(col("vc"), j).over(w))
         val weights = (1 to 7).map(j => 1L << (7 - j))
         val num = lags.zip(weights)
@@ -399,7 +399,7 @@ object CurateOps extends OpGroup {
           .groupBy(col("user_id"))
           .agg(max(col("ts_us")).as("r"),
                count(lit(1)).as("f"),
-               (sum(money("value")) * 100).cast("long").as("m"))
+               sumCents("value").as("m"))
         val qd = (c: String, p: String) =>
           expr(s"percentile_disc($p) WITHIN GROUP (ORDER BY $c)")
             .cast("long")
@@ -904,16 +904,10 @@ object CurateOps extends OpGroup {
       // allocation math on the k-row frame.
       "q_sample_neyman",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
         val budget = 1000L
-        val e = Tables.events(s, d)
-          .select(col("event_type"),
-                  (money("value") * 100).cast("long").as("vc"))
-        val anchors = e.groupBy(col("event_type"))
-          .agg(min(col("vc")).as("a"))
-          .select(col("event_type").as("t1"), col("a"))
-        val dd = (col("vc") - col("a")).cast(D38)
-        val st = e.join(broadcast(anchors), col("event_type") === col("t1"))
+        val e = Frames.eventCents(s, d)
+        val dd = Frames.centered
+        val st = Frames.minAnchored(e)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("nh"),
                sum(dd).cast("double").as("sv"),

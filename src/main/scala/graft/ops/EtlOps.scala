@@ -15,8 +15,6 @@ import graft.io.Tables
   */
 object EtlOps extends OpGroup {
 
-  private val DayUs = 86400000000L
-
   def qs: Seq[Q] = Seq(
     Q(
       // keep-latest order per customer — api.Dedup.keepLatest: ONE
@@ -355,7 +353,6 @@ object EtlOps extends OpGroup {
       // hash-aggs + a broadcast 1-row moments join.
       "q_etl_dq_anomaly",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
         val daily = Tables.orders(s, d)
           .groupBy(to_date(col("o_orderdate")).as("dy"))
           .agg(count(lit(1)).as("c"))
@@ -492,7 +489,7 @@ object EtlOps extends OpGroup {
         // committed by its own write — two orders scans without a seam
         val o = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"),
-                  (money("o_totalprice") * 100).cast("long").as("cents"))
+                  cents("o_totalprice").as("cents"))
           .localCheckpoint()
         val oldDef = o.filter(pmod(col("o_orderkey"), lit(11)) =!= 0)
           .withColumn("cents",
@@ -739,7 +736,7 @@ object EtlOps extends OpGroup {
       (s, d) => {
         val rowStr = concat_ws("|",
           col("l_orderkey"), col("l_linenumber"),
-          (money("l_extendedprice") * 100).cast("long"),
+          cents("l_extendedprice"),
           col("l_returnflag"))
         graft.api.Etl.tableChecksum(
             Tables.lineitem(s, d), col("l_returnflag"), rowStr)
@@ -774,8 +771,7 @@ object EtlOps extends OpGroup {
       "q_etl_compaction_plan",
       (s, d) => {
         val files = Tables.lineitem(s, d)
-          .groupBy(ldiv(unix_micros(col("l_shipdate").cast("timestamp")),
-                        lit(86400000000L)).as("day"))
+          .groupBy(epochDay("l_shipdate").as("day"))
           .agg(count(lit(1)).as("nr"))
         graft.api.Etl.compactionPlan(
             files, col("day"), col("nr"), targetRows = 5000L)
@@ -821,7 +817,7 @@ object EtlOps extends OpGroup {
           graft.api.Etl.tableChecksum(
             df, ldiv(col("o_orderkey"), lit(512L)),
             concat_ws("|", col("o_orderkey"),
-                      (money("o_totalprice") * 100).cast("long")))
+                      cents("o_totalprice")))
         digest(a).select(col("_g").as("blk"), col("n_rows").as("rows_a"),
                          col("checksum").as("ck_a"))
           .join(digest(b).select(col("_g").as("_b"),
@@ -882,11 +878,11 @@ object EtlOps extends OpGroup {
       (s, d) => {
         val det = Tables.lineitem(s, d)
           .groupBy(col("l_orderkey"))
-          .agg((sum(money("l_extendedprice")) * 100).cast("long")
+          .agg(sumCents("l_extendedprice")
                  .as("dc"))
         val hdr = Tables.orders(s, d)
           .select(col("o_orderkey"),
-                  (money("o_totalprice") * 100).cast("long").as("hc"))
+                  cents("o_totalprice").as("hc"))
         val diff = abs(col("hc") - col("dc"))
         val band = when(col("dc").isNull, "z_missing_detail")
           .when(diff * 100 <= col("hc"), "a_within_1pct")
@@ -1000,7 +996,6 @@ object EtlOps extends OpGroup {
       // domain; O(1) after.
       "q_etl_key_collisions",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val keys = Tables.documents(s, d)
           .select(graft.api.Pipeline.hash16(col("text")).as("k"))
           .groupBy(col("k")).agg(count(lit(1)).as("c"))
@@ -1012,12 +1007,12 @@ object EtlOps extends OpGroup {
         g.select(col("n"), col("n_keys"),
                  col("obs").as("observed_pairs"),
                  intRatio4Wide(
-                   (col("n").cast(D) * (col("n") - 1)) * 10000,
-                   lit(2L).cast(D) * 65536).as("expected4"),
+                   (col("n").cast(D38) * (col("n") - 1)) * 10000,
+                   lit(2L).cast(D38) * 65536).as("expected4"),
                  when(col("n") >= 2,
                    intRatio4Wide(
-                     col("obs").cast(D) * 2 * 65536 * 10000,
-                     col("n").cast(D) * (col("n") - 1)))
+                     col("obs").cast(D38) * 2 * 65536 * 10000,
+                     col("n").cast(D38) * (col("n") - 1)))
                    .as("obs_exp_ratio4"))
       },
       s"""WITH k AS (

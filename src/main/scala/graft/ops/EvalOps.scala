@@ -280,12 +280,11 @@ object EvalOps extends OpGroup {
                  .as("r2p"),
                sum(col("pos")).as("n_pos"),
                sum(col("cnt") - col("pos")).as("n_neg"))
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         g.filter(col("n_pos") > 0 && col("n_neg") > 0)
           .select(col("source"), col("n_pos"), col("n_neg"),
                   intRatio4Wide(
                     (col("r2p") - col("n_pos") * (col("n_pos") + 1))
-                      .cast(D) * 10000,
+                      .cast(D38) * 10000,
                     col("n_pos") * 2 * col("n_neg")).as("auc4"))
           .orderBy(col("source"))
       },
@@ -474,7 +473,6 @@ object EvalOps extends OpGroup {
       // after; marginals join on the ≤5-row class dimension.
       "q_eval_kappa",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val docs = Tables.documents(s, d)
         val pred = graft.api.Text.languageId(
           docs, col("doc_id"), col("text"), col("lang"),
@@ -502,7 +500,7 @@ object EvalOps extends OpGroup {
         val cols = conf.groupBy(col("predicted").as("_p"))
           .agg(sum(col("n")).as("sp"))
         val marg = rows.join(cols, col("_t") === col("_p"))
-          .agg(sum(col("rt").cast(D) * col("sp")).as("src"))
+          .agg(sum(col("rt").cast(D38) * col("sp")).as("src"))
         val tot = conf.agg(
           sum(col("n")).as("nn"),
           sum(when(col("lang") === col("predicted"), col("n"))
@@ -511,9 +509,9 @@ object EvalOps extends OpGroup {
           .select(col("nn").as("n_scored"), col("n_abstained"),
                   col("diag").as("n_agree"),
                   intRatio4Wide(
-                    (col("nn").cast(D) * col("diag") - col("src"))
+                    (col("nn").cast(D38) * col("diag") - col("src"))
                       * 10000,
-                    col("nn").cast(D) * col("nn") - col("src"))
+                    col("nn").cast(D38) * col("nn") - col("src"))
                     .as("kappa4"))
       },
       """WITH tokens AS (
@@ -584,7 +582,6 @@ object EvalOps extends OpGroup {
       // Scale shape: one confusion hash-agg to 4 counts; O(1) after.
       "q_eval_mcc",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val docs = Tables.documents(s, d)
         val pred = graft.api.Text.languageId(
           docs, col("doc_id"), col("text"), col("lang"),
@@ -599,9 +596,9 @@ object EvalOps extends OpGroup {
           sum(when(!col("t") && !col("p"), 1L).otherwise(0L)).as("tn"),
           sum(when(!col("t") && col("p"), 1L).otherwise(0L)).as("fp"),
           sum(when(col("t") && !col("p"), 1L).otherwise(0L)).as("fn"))
-        val num = col("tp").cast(D) * col("tn") -
-                  col("fp").cast(D) * col("fn")
-        val den = (col("tp") + col("fp")).cast(D) *
+        val num = col("tp").cast(D38) * col("tn") -
+                  col("fp").cast(D38) * col("fn")
+        val den = (col("tp") + col("fp")).cast(D38) *
                   (col("tp") + col("fn")) *
                   (col("tn") + col("fp")) * (col("tn") + col("fn"))
         g.select(col("tp"), col("tn"), col("fp"), col("fn"),
@@ -707,7 +704,6 @@ object EvalOps extends OpGroup {
       // [0, 10⁴]; |num| ≤ 10⁴·n_tok ≤ ~10⁹ fits long with 10⁵× room.
       "q_eval_lift",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val w = split(col("text"), " ")
         val scored = Tables.documents(s, d)
           .select(col("doc_id"),
@@ -752,9 +748,9 @@ object EvalOps extends OpGroup {
         dec.withColumn("cpos", sum(col("pos")).over(wc))
           .select(col("decile"), col("n"), col("pos"),
                   intRatio4Wide(
-                    col("pos").cast(D) * col("_N") * 10000,
-                    col("n").cast(D) * col("_P")).as("lift4"),
-                  intRatio4Wide(col("cpos").cast(D) * 10000,
+                    col("pos").cast(D38) * col("_N") * 10000,
+                    col("n").cast(D38) * col("_P")).as("lift4"),
+                  intRatio4Wide(col("cpos").cast(D38) * 10000,
                                 col("_P")).as("gains4"))
           .orderBy(col("decile"))
       },
@@ -817,7 +813,6 @@ object EvalOps extends OpGroup {
       // O(1) after.
       "q_eval_brier",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val scored = graft.api.Text.qualityScore(
             Tables.documents(s, d), col("text"), col("n_chars"))
           .select((least(floor(col("score") * 10), lit(9)) * 2 + 1)
@@ -828,13 +823,13 @@ object EvalOps extends OpGroup {
           sum((col("m20") - col("y") * 20) *
               (col("m20") - col("y") * 20)).as("ss"))
         g.select(col("n"), col("p"),
-                 intRatio4Wide(col("ss").cast(D) * 10000,
-                               col("n").cast(D) * 400).as("brier4"),
+                 intRatio4Wide(col("ss").cast(D38) * 10000,
+                               col("n").cast(D38) * 400).as("brier4"),
                  // reference: predict the base rate p̂=P/N for all →
                  // Brier_ref = p̂(1−p̂) = P(N−P)/N² exactly
                  intRatio4Wide(
-                   col("p").cast(D) * (col("n") - col("p")) * 10000,
-                   col("n").cast(D) * col("n")).as("brier_ref4"))
+                   col("p").cast(D38) * (col("n") - col("p")) * 10000,
+                   col("n").cast(D38) * col("n")).as("brier_ref4"))
       },
       """WITH f AS (
         |  SELECT lang,

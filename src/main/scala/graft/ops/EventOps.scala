@@ -15,6 +15,17 @@ import graft.io.Tables
   */
 object EventOps extends OpGroup {
 
+  /** Events as (user_id, event_id, ts_us, event_type) with `sess`, the
+    * user's session number at an 8-hour gap (api.Events.sessionize). */
+  private def sessions(s: org.apache.spark.sql.SparkSession,
+                       d: String): org.apache.spark.sql.DataFrame =
+    graft.api.Events.sessionize(
+      Tables.events(s, d)
+        .select(col("user_id"), col("event_id"), col("ts_us"),
+                col("event_type")),
+      key = col("user_id"), timeUs = col("ts_us"),
+      tieBreak = Seq(col("event_id")), gapUs = 28800000000L)
+
   def qs: Seq[Q] = Seq(
     Q(
       // ordered funnel signup → click → purchase: each stage's timestamp
@@ -141,19 +152,10 @@ object EventOps extends OpGroup {
       // anchor pass over the corpus — correctness over a scan.
       "q_events_outliers",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
         val e = Tables.events(s, d)
           .select(col("event_type"), col("event_id"),
-                  (money("value") * 100).cast("long").as("vc"))
-        val anchors = e.groupBy(col("event_type"))
-          .agg(min(col("vc")).as("a"))
-          .select(col("event_type").as("t1"), col("a"))
-        val dd = (col("vc") - col("a")).cast(D38)
-        val st = e.join(broadcast(anchors), col("event_type") === col("t1"))
-          .groupBy(col("event_type"), col("a"))
-          .agg(sum(dd).cast("double").as("sv"),
-               sum(dd * dd).cast("double").as("s2"),
-               count(lit(1)).as("n"))
+                  cents("value").as("vc"))
+        val st = Frames.anchoredSums(e)
           // n >= 2: a single-row type has no sample variance — without
           // the guard (n-1)=0 rides 0/0 -> NaN and the type silently
           // vanishes from detection; greatest(...,0) clamps the tiny
@@ -452,8 +454,8 @@ object EventOps extends OpGroup {
       (s, d) => {
         val days = Tables.events(s, d)
           .select(col("user_id"),
-                  expr("""(ts_us div 86400000000) -
-                          (CASE WHEN ts_us % 86400000000 < 0
+                  expr(s"""(ts_us div $DayUs) -
+                          (CASE WHEN ts_us % $DayUs < 0
                            THEN 1 ELSE 0 END)""").as("day"))
           .distinct()
         val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
@@ -506,7 +508,7 @@ object EventOps extends OpGroup {
       (s, d) => {
         val e = Tables.events(s, d)
           .select(col("event_type"), col("event_id"),
-                  (money("value") * 100).cast("long").as("vc"))
+                  cents("value").as("vc"))
         val med = e.groupBy(col("event_type"))
           .agg(percentile(col("vc"), lit(0.5)).as("med"))
           .select(col("event_type").as("t1"), col("med"))
@@ -558,20 +560,8 @@ object EventOps extends OpGroup {
       // conditional-agg scan; output is a single row.
       "q_events_ab_ttest",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val e = Tables.events(s, d)
-          .filter(col("event_type").isin("click", "view"))
-          .select(col("event_type"),
-                  (money("value") * 100).cast("long").as("vc"))
-        val anchors = e.groupBy(col("event_type"))
-          .agg(min(col("vc")).as("a"))
-          .select(col("event_type").as("t1"), col("a"))
-        val dd = (col("vc") - col("a")).cast(D38)
-        val st = e.join(broadcast(anchors), col("event_type") === col("t1"))
-          .groupBy(col("event_type"), col("a"))
-          .agg(sum(dd).cast("double").as("sv"),
-               sum(dd * dd).cast("double").as("s2"),
-               count(lit(1)).as("n"))
+        val e = Frames.eventCents(s, d, "click", "view")
+        val st = Frames.anchoredSums(e)
           .select(col("event_type"), col("n"),
                   (col("a").cast("double") + col("sv") / col("n"))
                     .as("mc"),
@@ -634,15 +624,7 @@ object EventOps extends OpGroup {
       // DOMAIN (≤ ~50k rows) — constant in SF, not corpus-sized.
       "q_events_mannwhitney",
       (s, d) => {
-        val e = Tables.events(s, d)
-          .filter(col("event_type").isin("click", "view"))
-          .select(col("event_type"),
-                  (money("value") * 100).cast("long").as("vc"))
-        val byVal = e.groupBy(col("vc"))
-          .agg(sum(when(col("event_type") === "click", 1L)
-                 .otherwise(0L)).as("nc"),
-               sum(when(col("event_type") === "view", 1L)
-                 .otherwise(0L)).as("nv"))
+        val byVal = Frames.clickViewByCents(s, d)
           .withColumn("nt", col("nc") + col("nv"))
         // distributed rank map (r8): the distinct-cents frame grows
         // with the corpus on diverse data (diversity-sweep finding),
@@ -718,16 +700,7 @@ object EventOps extends OpGroup {
       // mannwhitney — bounded by the cent domain, constant in SF.
       "q_events_ks",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val e = Tables.events(s, d)
-          .filter(col("event_type").isin("click", "view"))
-          .select(col("event_type"),
-                  (money("value") * 100).cast("long").as("vc"))
-        val byVal = e.groupBy(col("vc"))
-          .agg(sum(when(col("event_type") === "click", 1L)
-                 .otherwise(0L)).as("nc"),
-               sum(when(col("event_type") === "view", 1L)
-                 .otherwise(0L)).as("nv"))
+        val byVal = Frames.clickViewByCents(s, d)
         // distributed CDFs (r8): both cumulative counts AND the grand
         // totals come from the range-partitioned two-pass prefix sum
         // (totals derive from its ≤64-row per-partition offsets frame
@@ -794,10 +767,9 @@ object EventOps extends OpGroup {
       // the per-type totals — the same one-pass shape as q_events_mad.
       "q_events_cusum",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
         val e = Tables.events(s, d)
           .select(col("event_type"), col("event_id"), col("ts_us"),
-                  (money("value") * 100).cast("long").as("vc"))
+                  cents("value").as("vc"))
         val tot = e.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
                sum(col("vc").cast(D38)).as("tot"))
@@ -877,12 +849,7 @@ object EventOps extends OpGroup {
       // never a non-deterministic collect_list order.
       "q_events_paths",
       (s, d) => {
-        val e = Tables.events(s, d)
-          .select(col("user_id"), col("event_id"), col("ts_us"),
-                  col("event_type"))
-        val sess = graft.api.Events.sessionize(
-          e, key = col("user_id"), timeUs = col("ts_us"),
-          tieBreak = Seq(col("event_id")), gapUs = 28800000000L)
+        val sess = sessions(s, d)
         val w = Window.partitionBy(col("user_id"), col("sess"))
           .orderBy(col("ts_us").asc, col("event_id").asc)
         val firstK = sess.withColumn("rn", row_number().over(w))
@@ -942,12 +909,7 @@ object EventOps extends OpGroup {
       // break.
       "q_events_seq_pattern",
       (s, d) => {
-        val e = Tables.events(s, d)
-          .select(col("user_id"), col("event_id"), col("ts_us"),
-                  col("event_type"))
-        val sess = graft.api.Events.sessionize(
-          e, key = col("user_id"), timeUs = col("ts_us"),
-          tieBreak = Seq(col("event_id")), gapUs = 28800000000L)
+        val sess = sessions(s, d)
         val w = Window.partitionBy(col("user_id"), col("sess"))
           .orderBy(col("ts_us").asc, col("event_id").asc)
         sess
@@ -1011,10 +973,7 @@ object EventOps extends OpGroup {
       // cross the driver.
       "q_events_anova",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val e = Tables.events(s, d)
-          .select(col("event_type"),
-                  (money("value") * 100).cast("long").as("vc"))
+        val e = Frames.eventCents(s, d)
         val ga = e.agg(min(col("vc")).as("a"))
         val dd = (col("vc") - col("a")).cast(D38)
         val grp = e.crossJoin(broadcast(ga))
@@ -1022,21 +981,7 @@ object EventOps extends OpGroup {
           .agg(count(lit(1)).as("ng"),
                sum(col("vc") - col("a")).as("sg"),
                (sum(dd * dd) * 10000).cast(D38).as("ss4"))
-          .select(col("ng"), col("sg"), col("ss4"),
-                  halfUpDivWideDec(col("sg").cast(D38) * col("sg") * 10000,
-                                   col("ng")).as("tg"))
-        grp.agg(count(lit(1)).as("k"), sum(col("ng")).as("n"),
-                sum(col("sg")).as("st"), sum(col("ss4")).as("sss4"),
-                sum(col("tg")).as("sumt"))
-          .select(col("k"), col("n"), col("st"), col("sss4"),
-                  col("sumt"),
-                  halfUpDivWideDec(col("st").cast(D38) * col("st") * 10000,
-                                   col("n")).as("tall"))
-          .select(col("k").as("n_groups"), col("n"),
-                  greatest(col("sumt") - col("tall"), lit(0L))
-                    .cast(D38).as("ssb4"),
-                  greatest(col("sss4") - col("sumt").cast(D38),
-                           lit(0L).cast(D38)).as("ssw4"))
+        Frames.anovaSS4(grp)
           .select(col("n_groups"), col("n"),
                   (col("ssb4").cast("double") / 10000.0).as("ssb"),
                   (col("ssw4").cast("double") / 10000.0).as("ssw"),
@@ -1104,10 +1049,7 @@ object EventOps extends OpGroup {
       // constant in SF), not the corpus.
       "q_events_kruskal",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val e = Tables.events(s, d)
-          .select(col("event_type"),
-                  (money("value") * 100).cast("long").as("vc"))
+        val e = Frames.eventCents(s, d)
         val bvt = e.groupBy(col("vc"), col("event_type"))
           .agg(count(lit(1)).as("cnt"))
         val bv = boundedDomain(
@@ -1206,8 +1148,8 @@ object EventOps extends OpGroup {
       (s, d) => {
         val e = Tables.events(s, d)
           .select(col("user_id"), col("event_type"),
-                  ldiv(col("ts_us"), lit(86400000000L)).as("day"),
-                  (money("value") * 100).cast("long").as("vc"))
+                  ldiv(col("ts_us"), lit(DayUs)).as("day"),
+                  cents("value").as("vc"))
         val first = e.groupBy(col("user_id"))
           .agg(min(col("day")).as("fd"))
           .select(col("user_id").as("_u"),
@@ -1330,7 +1272,7 @@ object EventOps extends OpGroup {
       "q_events_stickiness",
       (s, d) => {
         val ev = Tables.events(s, d)
-          .select(expr("ts_us div 86400000000").as("day"),
+          .select(expr(s"ts_us div $DayUs").as("day"),
                   expr("bitmap_bucket_number(user_id)").as("bkt"),
                   expr("bitmap_bit_position(user_id)").as("pos"))
         val perDay = ev.groupBy(col("day"), col("bkt"))
@@ -1403,8 +1345,8 @@ object EventOps extends OpGroup {
           .withColumn("conv", col("pp").isNotNull)
           .withColumn("t",
             when(col("conv"),
-              expr("(pp - mv) div 86400000000"))
-            .otherwise(expr("(h - mv) div 86400000000")))
+              expr(s"(pp - mv) div $DayUs"))
+            .otherwise(expr(s"(h - mv) div $DayUs")))
         val byT = ut.groupBy(col("t"))
           .agg(count(lit(1)).as("nt"),
                sum(when(col("conv"), 1L).otherwise(0L)).as("dt"))
@@ -1490,19 +1432,18 @@ object EventOps extends OpGroup {
       "q_events_did",
       (s, d) => {
         val e = Tables.events(s, d)
-        val anchor = e.agg(min(expr("ts_us div 86400000000")).as("d0"))
+        val anchor = e.agg(min(expr(s"ts_us div $DayUs")).as("d0"))
         val p = e.filter(col("event_type") === "purchase")
           .crossJoin(broadcast(anchor))
           .select((pmod(graft.api.Pipeline.hash16(
                     col("user_id").cast("string")), lit(2)) === 0)
                     .as("tr"),
-                  (expr("ts_us div 86400000000") >= col("d0") + 15)
+                  (expr(s"ts_us div $DayUs") >= col("d0") + 15)
                     .as("post"),
-                  (money("value") * 100).cast("long").as("vc"))
+                  cents("value").as("vc"))
         def m(tr: Boolean, post: Boolean) = halfUpDivWide(
           sum(when(col("tr") === tr && col("post") === post, col("vc"))
-            .otherwise(0L)).cast(
-              org.apache.spark.sql.types.DecimalType(38, 0)) * 100,
+            .otherwise(0L)).cast(D38) * 100,
           sum(when(col("tr") === tr && col("post") === post, 1L)
             .otherwise(0L)))
         p.agg(m(true, false).as("t_pre"), m(true, true).as("t_post"),

@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
+
+import graft.Determinism.D38
 import graft.io.Tables
 
 /** SURVEY §2 — iterative graph traversal, oracle-checked against DuckDB's
@@ -13,16 +15,25 @@ import graft.io.Tables
   */
 object GraphOps extends OpGroup {
 
+  /** Distinct (l_orderkey, l_suppkey) of the orders of the 1997-01-01
+    * week. */
+  private def weekSupplies(s: org.apache.spark.sql.SparkSession,
+                           d: String): org.apache.spark.sql.DataFrame = {
+    val wk = Tables.orders(s, d)
+      .filter(col("o_orderdate") >= lit("1997-01-01") &&
+              col("o_orderdate") < lit("1997-01-08"))
+      .select(col("o_orderkey"))
+    Tables.lineitem(s, d)
+      .join(wk, col("l_orderkey") === col("o_orderkey"), "left_semi")
+      .select(col("l_orderkey"), col("l_suppkey")).distinct()
+  }
+
   /** The shared co-supply graph (suppliers linked iff they appear in
     * the same order of the 1997-01-01 week): one Spark builder + one
     * SQL CTE string, used by BOTH declared queries so the graph
     * definition cannot drift between BFS and PageRank. */
   private def coSupplyEdges(s: org.apache.spark.sql.SparkSession,
                             d: String): org.apache.spark.sql.DataFrame = {
-    val wk = Tables.orders(s, d)
-      .filter(col("o_orderdate") >= lit("1997-01-01") &&
-              col("o_orderdate") < lit("1997-01-08"))
-      .select(col("o_orderkey"))
     // r12 (guide §3.3): `ls` feeds both sides of the co-occurrence
     // self-join, and the returned edge list is referenced several
     // times by every consumer (degree frame + pair join + node set +
@@ -31,10 +42,7 @@ object GraphOps extends OpGroup {
     // Materialize both once per invocation (localCheckpoint — never
     // CacheManager-registered, so every bench/verify rep recomputes
     // from parquet).
-    val ls = Tables.lineitem(s, d)
-      .join(wk, col("l_orderkey") === col("o_orderkey"), "left_semi")
-      .select(col("l_orderkey"), col("l_suppkey")).distinct()
-      .localCheckpoint()
+    val ls = weekSupplies(s, d).localCheckpoint()
     ls.alias("a")
       .join(ls.alias("b"), col("a.l_orderkey") === col("b.l_orderkey"))
       .filter(col("a.l_suppkey") =!= col("b.l_suppkey"))
@@ -130,13 +138,7 @@ object GraphOps extends OpGroup {
       // minimum the oracle's recursive CTE computes.
       "q_graph_sssp",
       (s, d) => {
-        val wk = Tables.orders(s, d)
-          .filter(col("o_orderdate") >= lit("1997-01-01") &&
-                  col("o_orderdate") < lit("1997-01-08"))
-          .select(col("o_orderkey"))
-        val ls = Tables.lineitem(s, d)
-          .join(wk, col("l_orderkey") === col("o_orderkey"), "left_semi")
-          .select(col("l_orderkey"), col("l_suppkey")).distinct()
+        val ls = weekSupplies(s, d)
           .localCheckpoint() // r12: shared by both self-join sides
         val ew = ls.alias("a")
           .join(ls.alias("b"), col("a.l_orderkey") === col("b.l_orderkey"))
@@ -263,7 +265,6 @@ object GraphOps extends OpGroup {
       // map joins back to the edge list twice on its equi key.
       "q_graph_assortativity",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
         val e = coSupplyEdges(s, d)
         val deg = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
         val pairs = e
@@ -271,24 +272,8 @@ object GraphOps extends OpGroup {
                 col("src") === col("_s"))
           .join(deg.select(col("src").as("_t"), col("dg").as("dy")),
                 col("dst") === col("_t"))
-        val m = pairs.agg(
-          count(lit(1)).cast("long").as("n"),
-          sum(col("dx").cast(D38)).as("sx"),
-          sum(col("dy").cast(D38)).as("sy"),
-          sum((col("dx").cast(D38) * col("dy").cast(D38)).cast(D38))
-            .as("sxy"),
-          sum((col("dx").cast(D38) * col("dx").cast(D38)).cast(D38))
-            .as("sxx"),
-          sum((col("dy").cast(D38) * col("dy").cast(D38)).cast(D38))
-            .as("syy"))
-        val nD = col("n").cast(D38)
-        m.select(col("n").as("n_edges"),
-                 round((nD * col("sxy") - col("sx") * col("sy"))
-                         .cast("double") /
-                       sqrt((nD * col("sxx") - col("sx") * col("sx"))
-                              .cast("double") *
-                            (nD * col("syy") - col("sy") * col("sy"))
-                              .cast("double")), 4).as("r_assort"))
+        Frames.pearsonSums(pairs.groupBy(), col("dx"), col("dy"))
+          .select(col("n").as("n_edges"), Frames.pearsonR4.as("r_assort"))
       },
       s"""WITH $coSupplyEdgesSql,
         |dg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
@@ -672,7 +657,6 @@ object GraphOps extends OpGroup {
       // community-sized hash-aggs.
       "q_graph_modularity",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
         val e = coSupplyEdges(s, d)
         val lbl = graft.api.Graph.labelPropagation(s, e, iterations = 2)
         val within = e

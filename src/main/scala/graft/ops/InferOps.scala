@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Determinism._
 import graft.io.Tables
@@ -26,8 +25,6 @@ import graft.io.Tables
   * are r4-rounded.
   */
 object InferOps extends OpGroup {
-
-  private val D38 = DecimalType(38, 0)
 
   /** Abramowitz–Stegun 7.1.26 complementary error function — the SAME
     * literal polynomial rendered on both engines, so the two-sided
@@ -224,25 +221,9 @@ object InferOps extends OpGroup {
       // documented) is the one final double.
       "q_stats_page_trend",
       (s, d) => {
-        val cell = Tables.orders(s, d)
-          .select((year(col("o_orderdate").cast("timestamp")) * 100 +
-                   month(col("o_orderdate").cast("timestamp"))).as("ym"),
-                  substring(col("o_orderpriority"), 1, 1).cast("long")
-                    .as("j"),
-                  (money("o_totalprice") * 100).cast("long").as("vc"))
-          .groupBy(col("ym"), col("j"))
-          .agg(sum(col("vc")).as("v"))
-        val full = cell.groupBy(col("ym"))
-          .agg(count(lit(1)).as("kk")).filter(col("kk") === 5)
-          .select(col("ym").as("_fym"))
-        val inFull = cell.join(broadcast(full),
-                               col("ym") === col("_fym"), "left_semi")
-        val wR = Window.partitionBy(col("ym")).orderBy(col("v"))
-        val wT = Window.partitionBy(col("ym"), col("v"))
-        val ranked = inFull
-          .withColumn("rk", rank().over(wR).cast("long"))
-          .withColumn("ties", count(lit(1)).over(wT).cast("long"))
-          .withColumn("r2", col("rk") * 2 + col("ties") - 1)
+        val Frames.MonthBlocks(full, ranked) = Frames.monthBlocks(s, d,
+          substring(col("o_orderpriority"), 1, 1).cast("long").as("j"),
+          "j")
         val l2 = ranked.agg(sum(col("j") * col("r2")).as("L2"))
         val nb = full.agg(count(lit(1)).as("b"))
         l2.crossJoin(broadcast(nb))
@@ -367,10 +348,7 @@ object InferOps extends OpGroup {
       // identical formula shapes.
       "q_ts_granger",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .select(ldiv(unix_micros(col("o_orderdate").cast("timestamp")),
-                       lit(86400000000L)).as("dday"),
-                  (money("o_totalprice") * 100).cast("long").as("vc"))
+        val daily = Frames.orderDayCents(s, d)
           .groupBy(col("dday"))
           .agg(count(lit(1)).as("x"), sum(col("vc")).as("y"))
         val lagd = daily.select(col("dday").as("dl"),
@@ -471,10 +449,7 @@ object InferOps extends OpGroup {
       // final double.
       "q_ts_ljung_box",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .select(ldiv(unix_micros(col("o_orderdate").cast("timestamp")),
-                       lit(86400000000L)).as("dday"),
-                  (money("o_totalprice") * 100).cast("long").as("vc"))
+        val daily = Frames.orderDayCents(s, d)
           .groupBy(col("dday")).agg(sum(col("vc")).as("y"))
         val tot = daily.agg(count(lit(1)).as("n"),
                             sum(col("y").cast(D38)).as("sv"),
@@ -631,10 +606,9 @@ object InferOps extends OpGroup {
       "q_stats_seasonal_mk",
       (s, d) => {
         val daily = Tables.orders(s, d)
-          .select(ldiv(unix_micros(col("o_orderdate").cast("timestamp")),
-                       lit(86400000000L)).as("x"),
+          .select(epochDay("o_orderdate").as("x"),
                   month(col("o_orderdate").cast("timestamp")).as("m"),
-                  (money("o_totalprice") * 100).cast("long").as("vc"))
+                  cents("o_totalprice").as("vc"))
           .groupBy(col("x"), col("m")).agg(sum(col("vc")).as("y"))
         val a = daily.select(col("m").as("ma"), col("x").as("xi"),
                              col("y").as("yi"))
@@ -642,9 +616,7 @@ object InferOps extends OpGroup {
                              col("y").as("yj"))
         val sStat = a.join(b, col("ma") === col("mb") &&
                               col("xj") > col("xi"))
-          .agg(sum(when(col("yj") > col("yi"), 1L)
-                     .when(col("yj") < col("yi"), -1L)
-                     .otherwise(0L)).as("s_stat"))
+          .agg(Frames.kendallS.as("s_stat"))
         val perSeason = daily.groupBy(col("m"), col("y"))
           .agg(count(lit(1)).as("t"))
           .groupBy(col("m"))
@@ -658,13 +630,7 @@ object InferOps extends OpGroup {
         sStat.crossJoin(broadcast(perSeason))
           .select(col("n_days"), col("n_seasons"), col("s_stat"),
                   col("var18"),
-                  r4(when(col("s_stat") > 0,
-                       (col("s_stat") - 1).cast("double") /
-                         sqrt(col("var18").cast("double") / 18.0))
-                     .when(col("s_stat") < 0,
-                       (col("s_stat") + 1).cast("double") /
-                         sqrt(col("var18").cast("double") / 18.0))
-                     .otherwise(lit(0.0))).as("z4"))
+                  Frames.kendallZ4.as("z4"))
       },
       """WITH daily AS (
         |  SELECT epoch_us(o_orderdate) // 86400000000 AS x,

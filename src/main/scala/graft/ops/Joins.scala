@@ -30,6 +30,33 @@ object Joins extends OpGroup {
       | AND epoch_us(b.ts) <= epoch_us(a.ts) + 60000000
       |ORDER BY a_id, b_id""".stripMargin
 
+  /** Each purchase's latest prior click (strictly earlier; within
+    * `toleranceUs` when ≥ 0) through the native as-of operator, as
+    * (purchase_id, user_id, ts_us, prev_click_id, prev_click_us), -1
+    * when none. */
+  private def nativeAsOf(s: org.apache.spark.sql.SparkSession, d: String,
+                         toleranceUs: Long = -1L)
+      : org.apache.spark.sql.DataFrame = {
+    val e = graft.io.Tables.events(s, d)
+    val purchases = e.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id"),
+              col("ts_us"))
+    val clicks = e.filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"),
+              col("user_id").as("c_user"), col("ts_us").as("click_us"))
+    graft.plans.AsOf.join(purchases, clicks,
+        Seq(purchases("user_id")), Seq(clicks("c_user")),
+        purchases("ts_us"), clicks("click_us"),
+        toleranceUs = toleranceUs,
+        // deterministic even if equal-ts clicks ever appear: largest
+        // click_id wins, matching the oracle's last_value emulation
+        rightTieBreak = Seq(clicks("click_id")))
+      .select(col("purchase_id"), col("user_id"), col("ts_us"),
+              coalesce(col("click_id"), lit(-1L)).as("prev_click_id"),
+              coalesce(col("click_us"), lit(-1L)).as("prev_click_us"))
+      .orderBy(col("purchase_id"))
+  }
+
   def qs: Seq[Q] = Seq(
     Q(
       "q_join_inner",
@@ -273,15 +300,8 @@ object Joins extends OpGroup {
       // same as any asof engine).
       "q_join_asof",
       (s, d) => {
-        val e = Tables.events(s, d)
-          .filter(col("event_type").isin("purchase", "click"))
-          .select(
-            col("event_id"), col("user_id"), col("ts_us"),
-            when(col("event_type") === "purchase", 0).otherwise(1).as("kind"),
-            when(col("event_type") === "click", col("ts_us")).as("click_us"),
-            when(col("event_type") === "click", col("event_id")).as("click_id"))
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts_us").asc, col("kind").asc, col("event_id").asc)
+        val e = Frames.purchasesAndClicks(s, d)
+        val w = Frames.asOfOrder
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         e.withColumn("prev_click_id",
                      last(col("click_id"), ignoreNulls = true).over(w))
@@ -322,25 +342,7 @@ object Joins extends OpGroup {
       // duplicate (user, ts_us) clicks exist at any fixture scale, so
       // the match is unique (DeterminismSpec double-runs would flag it).
       "q_join_asof_native",
-      (s, d) => {
-        val e = graft.io.Tables.events(s, d)
-        val purchases = e.filter(col("event_type") === "purchase")
-          .select(col("event_id").as("purchase_id"), col("user_id"),
-                  col("ts_us"))
-        val clicks = e.filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"),
-                  col("user_id").as("c_user"), col("ts_us").as("click_us"))
-        graft.plans.AsOf.join(purchases, clicks,
-            Seq(purchases("user_id")), Seq(clicks("c_user")),
-            purchases("ts_us"), clicks("click_us"),
-            // deterministic even if equal-ts clicks ever appear: largest
-            // click_id wins, matching the oracle's last_value emulation
-            rightTieBreak = Seq(clicks("click_id")))
-          .select(col("purchase_id"), col("user_id"), col("ts_us"),
-                  coalesce(col("click_id"), lit(-1L)).as("prev_click_id"),
-                  coalesce(col("click_us"), lit(-1L)).as("prev_click_us"))
-          .orderBy(col("purchase_id"))
-      },
+      (s, d) => nativeAsOf(s, d),
       """WITH t AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS ts_us,
         |    CASE WHEN event_type = 'purchase' THEN 0 ELSE 1 END AS kind,
@@ -369,25 +371,7 @@ object Joins extends OpGroup {
       // Oracle: the window emulation's latest-prior is the unique
       // candidate, post-filtered by the same bound.
       "q_join_asof_tolerance",
-      (s, d) => {
-        val hourUs = 3600000000L
-        val e = graft.io.Tables.events(s, d)
-        val purchases = e.filter(col("event_type") === "purchase")
-          .select(col("event_id").as("purchase_id"), col("user_id"),
-                  col("ts_us"))
-        val clicks = e.filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"),
-                  col("user_id").as("c_user"), col("ts_us").as("click_us"))
-        graft.plans.AsOf.join(purchases, clicks,
-            Seq(purchases("user_id")), Seq(clicks("c_user")),
-            purchases("ts_us"), clicks("click_us"),
-            toleranceUs = hourUs,
-            rightTieBreak = Seq(clicks("click_id")))
-          .select(col("purchase_id"), col("user_id"), col("ts_us"),
-                  coalesce(col("click_id"), lit(-1L)).as("prev_click_id"),
-                  coalesce(col("click_us"), lit(-1L)).as("prev_click_us"))
-          .orderBy(col("purchase_id"))
-      },
+      (s, d) => nativeAsOf(s, d, toleranceUs = 3600000000L),
       """WITH t AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS ts_us,
         |    CASE WHEN event_type = 'purchase' THEN 0 ELSE 1 END AS kind,
@@ -469,15 +453,8 @@ object Joins extends OpGroup {
       // right-to-left. Still zero joins, one user_id exchange.
       "q_join_asof_forward",
       (s, d) => {
-        val e = Tables.events(s, d)
-          .filter(col("event_type").isin("purchase", "click"))
-          .select(
-            col("event_id"), col("user_id"), col("ts_us"),
-            when(col("event_type") === "purchase", 0).otherwise(1).as("kind"),
-            when(col("event_type") === "click", col("ts_us")).as("click_us"),
-            when(col("event_type") === "click", col("event_id")).as("click_id"))
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts_us").asc, col("kind").asc, col("event_id").asc)
+        val e = Frames.purchasesAndClicks(s, d)
+        val w = Frames.asOfOrder
           .rowsBetween(1, Window.unboundedFollowing)
         e.withColumn("next_click_id",
                      first(col("click_id"), ignoreNulls = true).over(w))
@@ -522,15 +499,8 @@ object Joins extends OpGroup {
       // simply loses; no match at all reports -1/'none'.
       "q_join_asof_nearest",
       (s, d) => {
-        val e = Tables.events(s, d)
-          .filter(col("event_type").isin("purchase", "click"))
-          .select(
-            col("event_id"), col("user_id"), col("ts_us"),
-            when(col("event_type") === "purchase", 0).otherwise(1).as("kind"),
-            when(col("event_type") === "click", col("ts_us")).as("click_us"),
-            when(col("event_type") === "click", col("event_id")).as("click_id"))
-        val ord = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts_us").asc, col("kind").asc, col("event_id").asc)
+        val e = Frames.purchasesAndClicks(s, d)
+        val ord = Frames.asOfOrder
         val wb = ord.rowsBetween(Window.unboundedPreceding,
                                  Window.currentRow)
         val wf = ord.rowsBetween(1, Window.unboundedFollowing)
@@ -605,9 +575,9 @@ object Joins extends OpGroup {
         val v = e.filter(col("event_type") === "view")
           .select(col("user_id").as("vu"), col("ts_us").as("vt"))
         p.join(v, col("pu") === col("vu") &&
-                 col("vt") >= col("pt") - lit(86400000000L) &&
+                 col("vt") >= col("pt") - lit(DayUs) &&
                  col("vt") < col("pt"), "left_anti")
-          .groupBy(ldiv(col("pt"), lit(86400000000L)).as("day"))
+          .groupBy(ldiv(col("pt"), lit(DayUs)).as("day"))
           .agg(count(lit(1)).as("n_orphan"))
           .orderBy(col("day"))
       },
@@ -642,10 +612,8 @@ object Joins extends OpGroup {
           .join(Tables.orders(s, d),
                 col("l_orderkey") === col("o_orderkey"))
           .select(col("l_suppkey"),
-                  ldiv(unix_micros(col("o_orderdate").cast("timestamp")),
-                       lit(86400000000L)).as("st"),
-                  ldiv(unix_micros(col("l_shipdate").cast("timestamp")),
-                       lit(86400000000L)).as("en"),
+                  epochDay("o_orderdate").as("st"),
+                  epochDay("l_shipdate").as("en"),
                   col("l_orderkey"), col("l_linenumber"))
         val ord = Window.partitionBy(col("l_suppkey"))
           .orderBy(col("st"), col("en"), col("l_orderkey"),

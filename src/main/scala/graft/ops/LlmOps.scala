@@ -145,6 +145,16 @@ object LlmOps extends OpGroup {
   private[ops] val minhashPairsCappedSql: String = minhashPairsSqlWith(
     "WHERE s NOT IN (SELECT s FROM sh0 GROUP BY s HAVING COUNT(*) > 5)")
 
+  /** One row per connected component of (doc, root) labels: root,
+    * cluster_size and the sorted member ids as a CSV string (R5: array
+    * cells crash the driver comparator, CORRECTNESS_r01 `err`). */
+  private def clusterMembers(labels: DataFrame): DataFrame =
+    labels.groupBy(col("root"))
+      .agg(count(lit(1)).as("cluster_size"),
+           concat_ws(",", sort_array(collect_list(col("doc"))))
+             .as("members"))
+      .orderBy(col("root"))
+
   def qs: Seq[Q] = Seq(
     Q(
       "q_dedup_exact",
@@ -240,13 +250,7 @@ object LlmOps extends OpGroup {
       (s, d) => {
         val labels = graft.api.Dedup.connectedComponents(
           minhashPairs(s, d), "doc_a", "doc_b")
-        labels.groupBy(col("root"))
-          .agg(count(lit(1)).as("cluster_size"),
-               // R5: serialize member list to a CSV string — array cells
-               // crash the driver comparator (CORRECTNESS_r01 `err`)
-               concat_ws(",", sort_array(collect_list(col("doc"))))
-                 .as("members"))
-          .orderBy(col("root"))
+        clusterMembers(labels)
       },
       s"""WITH RECURSIVE $minhashPairsSql,
         |$ccCompSql
@@ -313,12 +317,8 @@ object LlmOps extends OpGroup {
         val stored = s.read.parquet(store)
         val pairs = graft.api.Dedup.minhashPairsFromSignatures(
           stored, minMatch = K / 2)
-        graft.api.Dedup.connectedComponents(pairs, "doc_a", "doc_b")
-          .groupBy(col("root"))
-          .agg(count(lit(1)).as("cluster_size"),
-               concat_ws(",", sort_array(collect_list(col("doc"))))
-                 .as("members"))
-          .orderBy(col("root"))
+        clusterMembers(
+          graft.api.Dedup.connectedComponents(pairs, "doc_a", "doc_b"))
       },
       s"""WITH RECURSIVE $minhashPairsSql,
         |$ccCompSql

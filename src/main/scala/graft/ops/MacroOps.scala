@@ -416,7 +416,7 @@ object MacroOps extends OpGroup {
           .select(col("p_partkey"), col("p_name"), col("p_brand"))
         val win = Tables.lineitem(s, d)
           .select(col("l_partkey"), col("l_suppkey"),
-                  (money("l_extendedprice") * 100).cast("long").as("cents"))
+                  cents("l_extendedprice").as("cents"))
           .join(broadcast(p), col("l_partkey") === col("p_partkey"))
           .groupBy(col("p_partkey"), col("p_name"), col("p_brand"))
           .agg(min(struct(col("cents"), col("l_suppkey"))).as("_w"))

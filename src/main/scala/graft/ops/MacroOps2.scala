@@ -596,7 +596,7 @@ object MacroOps2 extends OpGroup {
                 col("o_custkey") === col("c_custkey"))
           .groupBy(col("c_mktsegment").as("segment"),
                    year(col("o_orderdate")).cast("int").as("yr"))
-          .agg((sum(money("o_totalprice")) * 100).cast("long").as("vc"))
+          .agg(sumCents("o_totalprice").as("vc"))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("segment")).orderBy(col("yr"))
         rev.withColumn("pv", lag(col("vc"), 1).over(w))
@@ -638,10 +638,9 @@ object MacroOps2 extends OpGroup {
       // shares exact cents through intRatio4Wide.
       "q_macro_pareto_share",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
         val cust = Tables.orders(s, d)
           .groupBy(col("o_custkey"))
-          .agg((sum(money("o_totalprice")) * 100).cast("long").as("vc"))
+          .agg(sumCents("o_totalprice").as("vc"))
         val ranked = graft.Determinism.distCumSumsBy(
           cust.withColumn("negv", -col("vc")).withColumn("one", lit(1L)),
           Seq("negv", "o_custkey"), Seq("one"))
@@ -699,7 +698,6 @@ object MacroOps2 extends OpGroup {
       // on the supplier-sized frame.
       "q_macro_hhi",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val rev = money("l_extendedprice") *
           (lit(1).cast(Money) - money("l_discount"))
         val sup = Tables.supplier(s, d)
@@ -711,7 +709,7 @@ object MacroOps2 extends OpGroup {
           .groupBy(col("l_suppkey")).agg(sum(col("rev")).as("srev"))
           .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
           .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-          .select(col("n_name"), (col("srev") * 10000).cast(D).as("c"))
+          .select(col("n_name"), (col("srev") * 10000).cast(D38).as("c"))
           .groupBy(col("n_name"))
           .agg(count(lit(1)).as("n_suppliers"),
                sum(col("c") * col("c")).as("_sq"),
@@ -752,11 +750,10 @@ object MacroOps2 extends OpGroup {
       // hash-agg; the year totals broadcast back to ≤84 rows.
       "q_macro_seasonal_index",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val rev = Tables.orders(s, d)
           .select(year(col("o_orderdate")).as("yr"),
                   month(col("o_orderdate")).as("mo"),
-                  (money("o_totalprice") * 100).cast("long").as("vc"))
+                  cents("o_totalprice").as("vc"))
           .groupBy(col("yr"), col("mo"))
           .agg(sum(col("vc")).as("mrev"))
         val ytot = rev.groupBy(col("yr").as("y2"))
@@ -765,7 +762,7 @@ object MacroOps2 extends OpGroup {
           .select(col("yr"), col("mo"),
                   (col("mrev").cast("double") / 100.0).as("revenue"),
                   intRatio4Wide(
-                    col("mrev").cast(D) * col("nmo") * 10000,
+                    col("mrev").cast(D38) * col("nmo") * 10000,
                     col("ytot")).as("index4"))
           .orderBy(col("yr"), col("mo"))
       },
@@ -840,17 +837,16 @@ object MacroOps2 extends OpGroup {
       // bounded window.
       "q_macro_abc",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val perPart = Tables.lineitem(s, d)
           .select(col("l_partkey"),
                   (money("l_extendedprice") *
                    (lit(1).cast(Money) - money("l_discount")))
                     .as("rev"))
           .groupBy(col("l_partkey"))
-          .agg((sum(col("rev")) * 10000).cast(D).as("c"))
+          .agg((sum(col("rev")) * 10000).cast(D38).as("c"))
         val wAll = Window.partitionBy(lit(1))
         val cls = graft.Determinism.distCumSumsBy(
-            perPart.withColumn("negc", (col("c") * -1).cast(D)),
+            perPart.withColumn("negc", (col("c") * -1).cast(D38)),
             Seq("negc", "l_partkey"), Seq("c"))
           .withColumn("cls",
             when(col("cum_c") * 100 <= col("tot_c") * 80, "A")
@@ -907,23 +903,22 @@ object MacroOps2 extends OpGroup {
       // everything after is brand-sized.
       "q_macro_elasticity",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val li = Tables.lineitem(s, d)
           .join(broadcast(Tables.part(s, d)
                   .select(col("p_partkey"), col("p_brand"))),
                 col("l_partkey") === col("p_partkey"))
           .select(col("p_brand"),
-                  (money("l_discount") * 100).cast("long").as("x"),
+                  cents("l_discount").as("x"),
                   col("l_quantity").cast("long").as("y"))
         val g = li.groupBy(col("p_brand"))
           .agg(count(lit(1)).as("n"),
                sum(col("x")).as("sx"), sum(col("y")).as("sy"),
                sum(col("x") * col("y")).as("sxy"),
                sum(col("x") * col("x")).as("sxx"))
-        val den = (col("n").cast(D) * col("sxx") -
-                   col("sx").cast(D) * col("sx"))
-        val num = (col("n").cast(D) * col("sxy") -
-                   col("sx").cast(D) * col("sy"))
+        val den = (col("n").cast(D38) * col("sxx") -
+                   col("sx").cast(D38) * col("sx"))
+        val num = (col("n").cast(D38) * col("sxy") -
+                   col("sx").cast(D38) * col("sy"))
         g.select(col("p_brand"), col("n"),
                  when(den =!= 0,
                    r4(num.cast("double") / den.cast("double")))
@@ -965,7 +960,6 @@ object MacroOps2 extends OpGroup {
       // rollups of the 25-row nation frame.
       "q_macro_share_nested",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val supN = Tables.supplier(s, d)
           .join(broadcast(Tables.nation(s, d)),
                 col("s_nationkey") === col("n_nationkey"))
@@ -979,7 +973,7 @@ object MacroOps2 extends OpGroup {
                     .as("rev"))
           .join(broadcast(supN), col("l_suppkey") === col("s_suppkey"))
           .groupBy(col("r_name"), col("n_name"))
-          .agg((sum(col("rev")) * 10000).cast(D).as("c"))
+          .agg((sum(col("rev")) * 10000).cast(D38).as("c"))
           // r13 (guide §1.1, TRIED AND REVERTED): nat is re-planned
           // into 12 scans (plans/r13/..._before.txt); the §3.3 seam
           // measured 0.43× at sf0.1 and 0.73× at sf1 (plans/r13/ab/)
@@ -1048,7 +1042,7 @@ object MacroOps2 extends OpGroup {
                     .as("lts"))
           .join(o, col("l_orderkey") === col("o_orderkey"))
           .select(col("o_orderpriority"),
-                  expr("(lts - ots) div 86400000000").as("days"))
+                  expr(s"(lts - ots) div $DayUs").as("days"))
         lag.groupBy(col("o_orderpriority"))
           .agg(count(lit(1)).as("n_lines"),
                expr("percentile_disc(0.5) WITHIN GROUP " +
@@ -1092,14 +1086,13 @@ object MacroOps2 extends OpGroup {
       // sized math after.
       "q_macro_price_volume",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val li = Tables.lineitem(s, d)
           .filter(year(col("l_shipdate")).isin(1997, 1998))
           .join(broadcast(Tables.part(s, d)
                   .select(col("p_partkey"), col("p_brand"))),
                 col("l_partkey") === col("p_partkey"))
           .select(col("p_brand"), year(col("l_shipdate")).as("yr"),
-                  (money("l_extendedprice") * 100).cast("long")
+                  cents("l_extendedprice")
                     .as("rc"),
                   col("l_quantity").cast("long").as("q"))
         val g = li.groupBy(col("p_brand"))
@@ -1116,11 +1109,11 @@ object MacroOps2 extends OpGroup {
                  ((col("r2") - col("r1")).cast("double") / 100.0)
                    .as("delta_rev"),
                  intRatio4Wide(
-                   (col("q2") - col("q1")).cast(D) * col("r1") * 100,
+                   (col("q2") - col("q1")).cast(D38) * col("r1") * 100,
                    col("q1")).as("volume_effect"),
                  intRatio4Wide(
-                   (col("r2").cast(D) * col("q1") -
-                      col("q2").cast(D) * col("r1")) * 100,
+                   (col("r2").cast(D38) * col("q1") -
+                      col("q2").cast(D38) * col("r1")) * 100,
                    col("q1")).as("price_effect"))
           .orderBy(col("p_brand"))
       },
@@ -1174,7 +1167,6 @@ object MacroOps2 extends OpGroup {
       // broadcast); segment-sized math after.
       "q_macro_agg_bias",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val li = Tables.lineitem(s, d)
           .join(Tables.orders(s, d)
                   .select(col("o_orderkey"), col("o_custkey")),
@@ -1183,23 +1175,23 @@ object MacroOps2 extends OpGroup {
                   .select(col("c_custkey"), col("c_mktsegment"))),
                 col("o_custkey") === col("c_custkey"))
           .select(col("c_mktsegment"),
-                  (money("l_discount") * 100).cast("long").as("dc"),
-                  (money("l_extendedprice") * 100).cast("long")
+                  cents("l_discount").as("dc"),
+                  cents("l_extendedprice")
                     .as("pc"))
         val g = li.groupBy(col("c_mktsegment"))
           .agg(count(lit(1)).as("n"),
                sum(col("dc")).as("sd"),
                sum(col("pc")).as("sp"),
-               sum(col("dc").cast(D) * col("pc")).as("sdp"))
+               sum(col("dc").cast(D38) * col("pc")).as("sdp"))
         g.select(col("c_mktsegment"), col("n"),
                  intRatio4Wide(col("sdp") * 100, col("sp"))
                    .as("weighted_rate4"),
-                 intRatio4Wide(col("sd").cast(D) * 100, col("n"))
+                 intRatio4Wide(col("sd").cast(D38) * 100, col("n"))
                    .as("unweighted_rate4"),
                  intRatio4Wide(
                    (col("sdp") * col("n") -
-                    col("sd").cast(D) * col("sp")) * 100,
-                   col("sp").cast(D) * col("n")).as("gap4"))
+                    col("sd").cast(D38) * col("sp")) * 100,
+                   col("sp").cast(D38) * col("n")).as("gap4"))
           .orderBy(col("c_mktsegment"))
       },
       """WITH li AS (

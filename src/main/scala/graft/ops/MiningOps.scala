@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Determinism._
 import graft.io.Tables
@@ -12,8 +11,6 @@ import graft.io.Tables
   * cross-curation pipeline runs over transaction-shaped data.
   */
 object MiningOps extends OpGroup {
-
-  private val D38 = DecimalType(38, 0)
 
   def qs: Seq[Q] = Seq(
     Q(

@@ -178,7 +178,7 @@ object PipelineOps extends OpGroup {
       "q_skyline_pareto",
       (s, d) => {
         val pts = Tables.part(s, d)
-          .select((money("p_retailprice") * 100).cast("long")
+          .select(cents("p_retailprice")
                     .as("price_cents"),
                   col("p_size").cast("long").as("psize"))
         val pairs = pts.groupBy(col("price_cents"), col("psize"))
@@ -950,9 +950,7 @@ object PipelineOps extends OpGroup {
       // conditional hash-agg; the normalize itself is map-side.
       "q_agg_minmax_scale",
       (s, d) => {
-        val e = Tables.events(s, d)
-          .select(col("event_type"),
-                  (money("value") * 100).cast("long").as("vc"))
+        val e = Frames.eventCents(s, d)
         val mm = e.groupBy(col("event_type"))
           .agg(min(col("vc")).as("mn"), max(col("vc")).as("mx"))
           .filter(col("mx") > col("mn"))
@@ -1061,7 +1059,6 @@ object PipelineOps extends OpGroup {
       // two lang-keyed hash-aggs; k-row math after.
       "q_sample_ht_estimate",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val toks = graft.api.Text.tokenCounts(
           Tables.documents(s, d), col("text"))
           .select(col("lang"), col("doc_id"), col("n_bpe"))
@@ -1074,7 +1071,7 @@ object PipelineOps extends OpGroup {
           .agg(sum(col("n_bpe")).as("_ks"), count(lit(1)).as("n_kept"))
           .withColumn("_thr", thr)
           .withColumn("est",
-            halfUpDivWide(col("_ks").cast(D) * 65536, col("_thr"))
+            halfUpDivWide(col("_ks").cast(D38) * 65536, col("_thr"))
               .cast("long"))
         act.join(est, Seq("lang"), "left")
           .select(col("lang"), col("actual"),
@@ -1082,7 +1079,7 @@ object PipelineOps extends OpGroup {
                   coalesce(col("est"), lit(0L)).as("ht_estimate"),
                   intRatio4Wide(
                     abs(coalesce(col("est"), lit(0L)) - col("actual"))
-                      .cast(D) * 10000,
+                      .cast(D38) * 10000,
                     col("actual")).as("rel_err4"))
           .orderBy(col("lang"))
       },

@@ -248,7 +248,7 @@ object Scalars extends OpGroup {
                 to_json(struct(
                   col("o_orderkey").as("k"),
                   col("o_orderstatus").as("st"),
-                  (money("o_totalprice") * 100).cast("long").as("cents"),
+                  cents("o_totalprice").as("cents"),
                   nullif(col("o_orderpriority"), lit("5-LOW")).as("pri")))
                   .as("js"))
         .select(col("o_orderkey"),

@@ -79,9 +79,7 @@ object Scans extends OpGroup {
       "q_layout_minmax_prune",
       (s, d) => {
         val li = Tables.lineitem(s, d).select(
-          graft.Determinism.ldiv(
-            unix_micros(col("l_shipdate").cast("timestamp")),
-            lit(86400000000L)).as("day"),
+          graft.Determinism.epochDay("l_shipdate").as("day"),
           col("l_orderkey"))
         // epoch days: 1997-01-01 = 9862 (27y + 7 leap), 1997-03-01 =
         // 9862 + 31 + 28 (1997 not leap)

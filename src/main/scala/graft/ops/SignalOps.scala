@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Determinism._
 import graft.io.Tables
@@ -25,17 +24,6 @@ import graft.io.Tables
   * identical on both engines.
   */
 object SignalOps extends OpGroup {
-
-  private val D38 = DecimalType(38, 0)
-  private val DayUs = 86400000000L
-
-  /** Calendar day of o_orderdate as exact integer days-since-epoch
-    * (midnight timestamps; pure µs division — no engine calendar). */
-  private def oDay = ldiv(
-    unix_micros(col("o_orderdate").cast("timestamp")), lit(DayUs))
-
-  /** o_totalprice as exact cents. */
-  private def oCents = (money("o_totalprice") * 100).cast("long")
 
   private val oDaySql = "epoch_us(o_orderdate) // 86400000000"
   private val oCentsSql =
@@ -65,8 +53,7 @@ object SignalOps extends OpGroup {
       // final sqrt division.
       "q_ts_kendall",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .select(oDay.as("dday"), oCents.as("vc"))
+        val daily = Frames.orderDayCents(s, d)
           .groupBy(col("dday"))
           .agg(count(lit(1)).as("n"), sum(col("vc")).as("sc"))
         val a = daily.select(col("dday").as("da"), col("n").as("na"),
@@ -136,7 +123,8 @@ object SignalOps extends OpGroup {
         def arm(pri: String, p: String) = Tables.orders(s, d)
           .filter(col("o_orderpriority") === pri)
           .select(ldiv(unix_micros(col("o_orderdate").cast("timestamp")),
-                       lit(DayUs * 7)).as(s"wk$p"), oCents.as("vc"))
+                       lit(DayUs * 7)).as(s"wk$p"),
+                  cents("o_totalprice").as("vc"))
           .groupBy(col(s"wk$p"))
           .agg(count(lit(1)).as(s"n$p"), sum(col("vc")).as(s"s$p"))
         val pairs = arm("1-URGENT", "a").crossJoin(arm("5-LOW", "b"))
@@ -193,8 +181,7 @@ object SignalOps extends OpGroup {
       // variance-share ratio.
       "q_ts_changepoint",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .select(oDay.as("dday"), oCents.as("vc"))
+        val daily = Frames.orderDayCents(s, d)
           .groupBy(col("dday"))
           .agg(count(lit(1)).as("n"), sum(col("vc")).as("sc"),
                sum((col("vc").cast(D38) * col("vc")).cast(D38))
@@ -286,23 +273,8 @@ object SignalOps extends OpGroup {
       // count, nothing corpus-sized is ever sorted.
       "q_stats_friedman",
       (s, d) => {
-        val cell = Tables.orders(s, d)
-          .select((year(col("o_orderdate").cast("timestamp")) * 100 +
-                   month(col("o_orderdate").cast("timestamp"))).as("ym"),
-                  col("o_orderpriority").as("pri"), oCents.as("vc"))
-          .groupBy(col("ym"), col("pri"))
-          .agg(sum(col("vc")).as("v"))
-        val full = cell.groupBy(col("ym"))
-          .agg(count(lit(1)).as("kk")).filter(col("kk") === 5)
-          .select(col("ym").as("_fym"))
-        val inFull = cell.join(broadcast(full),
-                               col("ym") === col("_fym"), "left_semi")
-        val wR = Window.partitionBy(col("ym")).orderBy(col("v"))
-        val wT = Window.partitionBy(col("ym"), col("v"))
-        val ranked = inFull
-          .withColumn("rk", rank().over(wR).cast("long"))
-          .withColumn("ties", count(lit(1)).over(wT).cast("long"))
-          .withColumn("r2", col("rk") * 2 + col("ties") - 1)
+        val Frames.MonthBlocks(full, ranked) = Frames.monthBlocks(s, d,
+          col("o_orderpriority").as("pri"), "pri")
         val rj = ranked.groupBy(col("pri"))
           .agg(sum(col("r2")).as("R2"))
         val nb = full.agg(count(lit(1)).as("n"))
@@ -363,8 +335,7 @@ object SignalOps extends OpGroup {
         // subtrees run concurrently on idle cores while the seam
         // serializes a blocking materialization per invocation. Same
         // verdict as r12's lm_gate/collocations sites.
-        val daily = Tables.orders(s, d)
-          .select(oDay.as("dday"), oCents.as("vc"))
+        val daily = Frames.orderDayCents(s, d)
           .groupBy(col("dday")).agg(sum(col("vc")).as("sc"))
         // scale converts the input unit to micents: 10000 for the
         // cents-input price passes, 1 for the signal pass whose input
@@ -459,7 +430,7 @@ object SignalOps extends OpGroup {
       "q_stats_median_ci",
       (s, d) => {
         val vals = Tables.orders(s, d)
-          .select(oCents.as("vc"))
+          .select(cents("o_totalprice").as("vc"))
           .groupBy(col("vc")).agg(count(lit(1)).as("c"))
         // distributed CDF (r8): the distinct-cents frame is NOT
         // constant under diverse data (×9.4 at 10× in the diversity

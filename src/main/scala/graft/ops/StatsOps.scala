@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Determinism._
 import graft.io.Tables
@@ -16,8 +15,6 @@ import graft.io.Tables
   * statistic — the same determinism posture as EventOps' test trio.
   */
 object StatsOps extends OpGroup {
-
-  private val D38 = DecimalType(38, 0)
 
   /** 2×average-rank per distinct value: ties share the mean of their
     * rank block, doubled so it stays integral (the Mann-Whitney r2
@@ -63,30 +60,14 @@ object StatsOps extends OpGroup {
         // stays the sort-merge over the corpus (the rank-map side
         // remains domain-sized, never the build side of a broadcast).
         val base = Tables.lineitem(s, d)
-          .select((money("l_quantity") * 100).cast("long").as("xv"),
-                  (money("l_extendedprice") * 100).cast("long").as("yv"))
+          .select(cents("l_quantity").as("xv"),
+                  cents("l_extendedprice").as("yv"))
           .localCheckpoint()
         val rx = rank2Map(base, "xv").withColumnRenamed("r2", "r2x")
         val ry = rank2Map(base, "yv").withColumnRenamed("r2", "r2y")
         val j = base.join(broadcast(rx), "xv").join(ry, "yv")
-        val m = j.agg(
-          count(lit(1)).cast("long").as("n"),
-          sum(col("r2x").cast(D38)).as("sx"),
-          sum(col("r2y").cast(D38)).as("sy"),
-          sum((col("r2x").cast(D38) * col("r2y").cast(D38)).cast(D38))
-            .as("sxy"),
-          sum((col("r2x").cast(D38) * col("r2x").cast(D38)).cast(D38))
-            .as("sxx"),
-          sum((col("r2y").cast(D38) * col("r2y").cast(D38)).cast(D38))
-            .as("syy"))
-        val nD = col("n").cast(D38)
-        m.select(col("n").as("n_pairs"),
-                 round((nD * col("sxy") - col("sx") * col("sy"))
-                         .cast("double") /
-                       sqrt((nD * col("sxx") - col("sx") * col("sx"))
-                              .cast("double") *
-                            (nD * col("syy") - col("sy") * col("sy"))
-                              .cast("double")), 4).as("rho"))
+        Frames.pearsonSums(j.groupBy(), col("r2x"), col("r2y"))
+          .select(col("n").as("n_pairs"), Frames.pearsonR4.as("rho"))
       },
       """WITH base AS (
         |  SELECT
@@ -134,7 +115,7 @@ object StatsOps extends OpGroup {
         val base = Tables.lineitem(s, d)
           .select(col("l_returnflag"),
                   floor(money("l_quantity")).cast("long").as("x"),
-                  (money("l_extendedprice") * 100).cast("long").as("y"))
+                  cents("l_extendedprice").as("y"))
         val m = base.groupBy(col("l_returnflag"))
           .agg(count(lit(1)).cast("long").as("n"),
                sum(col("x").cast(D38)).as("sx"),
@@ -189,7 +170,7 @@ object StatsOps extends OpGroup {
       (s, d) => {
         val base = Tables.lineitem(s, d)
           .select(col("l_returnflag"),
-                  (money("l_extendedprice") * 100).cast("long").as("vc"),
+                  cents("l_extendedprice").as("vc"),
                   floor(money("l_quantity")).cast("long").as("wq"))
         val byVal = base.groupBy(col("l_returnflag"), col("vc"))
           .agg(sum(col("wq")).as("w"))
@@ -368,24 +349,10 @@ object StatsOps extends OpGroup {
           .withColumn("ph", lag(col("hr"), 1).over(w))
           .withColumn("pc", lag(col("c"), 1).over(w))
           .filter(col("ph").isNotNull && col("hr") === col("ph") + 1)
-        val m = pairs.groupBy(col("event_type"))
-          .agg(count(lit(1)).cast("long").as("n"),
-               sum(col("pc").cast(D38)).as("sx"),
-               sum(col("c").cast(D38)).as("sy"),
-               sum((col("pc").cast(D38) * col("c").cast(D38)).cast(D38))
-                 .as("sxy"),
-               sum((col("pc").cast(D38) * col("pc").cast(D38)).cast(D38))
-                 .as("sxx"),
-               sum((col("c").cast(D38) * col("c").cast(D38)).cast(D38))
-                 .as("syy"))
-        val nD = col("n").cast(D38)
-        m.select(col("event_type"), col("n").as("n_pairs"),
-                 round((nD * col("sxy") - col("sx") * col("sy"))
-                         .cast("double") /
-                       sqrt((nD * col("sxx") - col("sx") * col("sx"))
-                              .cast("double") *
-                            (nD * col("syy") - col("sy") * col("sy"))
-                              .cast("double")), 4).as("r1"))
+        Frames.pearsonSums(pairs.groupBy(col("event_type")),
+                           col("pc"), col("c"))
+          .select(col("event_type"), col("n").as("n_pairs"),
+                  Frames.pearsonR4.as("r1"))
           .orderBy(col("event_type"))
       },
       """WITH hourly AS (
@@ -587,7 +554,7 @@ object StatsOps extends OpGroup {
       // hash-agg, 168 output cells max.
       "q_events_heatmap",
       (s, d) => Tables.events(s, d)
-        .select(expr("(ts_us div 86400000000 + 4) % 7").as("dow"),
+        .select(expr(s"(ts_us div $DayUs + 4) % 7").as("dow"),
                 expr("(ts_us div 3600000000) % 24").as("hr"))
         .groupBy(col("dow"), col("hr"))
         .agg(count(lit(1)).as("n"))
@@ -616,7 +583,7 @@ object StatsOps extends OpGroup {
       (s, d) => {
         val rev = Tables.orders(s, d)
           .groupBy(col("o_custkey"))
-          .agg((sum(money("o_totalprice")) * 100).cast("long").as("rc"))
+          .agg(sumCents("o_totalprice").as("rc"))
         val ranked = distCumSumsBy(rev.withColumn("one", lit(1L)),
                                    Seq("rc", "o_custkey"), Seq("one"))
         val m = ranked.agg(
@@ -761,7 +728,7 @@ object StatsOps extends OpGroup {
       "q_stats_benford",
       (s, d) => {
         val digits = Tables.orders(s, d)
-          .select(substring((money("o_totalprice") * 100).cast("long")
+          .select(substring(cents("o_totalprice")
                     .cast("string"), 1, 1).cast("int").as("digit"))
           .groupBy(col("digit")).agg(count(lit(1)).as("n"))
         val tot = digits.agg(sum(col("n")).as("t"))
@@ -861,9 +828,7 @@ object StatsOps extends OpGroup {
       // COLLAPSED bin/distinct-cent frames, never the corpus.
       "q_stats_sketch_quantile",
       (s, d) => {
-        val e = Tables.events(s, d)
-          .select(col("event_type"),
-                  (money("value") * 100).cast("long").as("vc"))
+        val e = Frames.eventCents(s, d)
         // sketch side: the public mergeable-histogram API (api.Stats)
         val est = graft.api.Stats.binnedQuantiles(
             e, col("event_type"), col("vc"), bins = 256,
@@ -1018,11 +983,9 @@ object StatsOps extends OpGroup {
         val opened = Tables.lineitem(s, d)
           .join(Tables.orders(s, d),
                 col("l_orderkey") === col("o_orderkey"))
-          .select(ldiv(unix_micros(col("o_orderdate").cast("timestamp")),
-                       lit(86400000000L)).as("day"), lit(1L).as("delta"))
+          .select(epochDay("o_orderdate").as("day"), lit(1L).as("delta"))
         val closed = Tables.lineitem(s, d)
-          .select((ldiv(unix_micros(col("l_shipdate").cast("timestamp")),
-                        lit(86400000000L)) + 1).as("day"),
+          .select((epochDay("l_shipdate") + 1).as("day"),
                   lit(-1L).as("delta"))
         val net = opened.unionAll(closed)
           .groupBy(col("day")).agg(sum(col("delta")).as("net"))
@@ -1030,9 +993,9 @@ object StatsOps extends OpGroup {
         val run = net
           .withColumn("open_lines", sum(col("net")).over(wRun))
           .withColumn("yr", year(timestamp_micros(
-            col("day") * 86400000000L)).cast("int"))
+            col("day") * DayUs)).cast("int"))
           .withColumn("mon", month(timestamp_micros(
-            col("day") * 86400000000L)).cast("int"))
+            col("day") * DayUs)).cast("int"))
           .filter(col("yr") === 1997)
         run.groupBy(col("mon"))
           .agg(max(struct(col("open_lines"), (-col("day")).as("_nd")))
@@ -1042,7 +1005,7 @@ object StatsOps extends OpGroup {
           .select(col("mon"),
                   col("_pk").getField("open_lines").as("peak_open"),
                   date_format(timestamp_micros(
-                    -col("_pk").getField("_nd") * 86400000000L),
+                    -col("_pk").getField("_nd") * DayUs),
                     "yyyy-MM-dd").as("peak_day"),
                   col("net_change"), col("n_delta_days"))
           .orderBy(col("mon"))
@@ -1120,7 +1083,7 @@ object StatsOps extends OpGroup {
                             .cast("long").as("g_obs")),
                 col("o_custkey") === col("c_custkey"))
           .select(col("o_orderkey"), col("g_obs"),
-                  (money("o_totalprice") * 100).cast("long").as("vc"))
+                  cents("o_totalprice").as("vc"))
           .localCheckpoint()
         def grpSums(df: org.apache.spark.sql.DataFrame, g: String) = Seq(
           sum(when(col(g) === 1, col("vc")).otherwise(0L).cast(D38)),
@@ -1245,7 +1208,7 @@ object StatsOps extends OpGroup {
         val daily = Tables.events(s, d)
           .filter(col("event_type").isin("view", "purchase"))
           .select(col("event_type"),
-                  expr("ts_us div 86400000000").as("day"))
+                  expr(s"ts_us div $DayUs").as("day"))
           .groupBy(col("event_type"), col("day"))
           .agg(count(lit(1)).as("c"))
         val v = daily.filter(col("event_type") === "view")
@@ -1255,24 +1218,9 @@ object StatsOps extends OpGroup {
         val pairs = v
           .withColumn("lag", explode(sequence(lit(0L), lit(6L))))
           .join(p, col("pd") === col("vd") + col("lag"))
-        val m = pairs.groupBy(col("lag"))
-          .agg(count(lit(1)).cast("long").as("n"),
-               sum(col("x").cast(D38)).as("sx"),
-               sum(col("y").cast(D38)).as("sy"),
-               sum((col("x").cast(D38) * col("y").cast(D38)).cast(D38))
-                 .as("sxy"),
-               sum((col("x").cast(D38) * col("x").cast(D38)).cast(D38))
-                 .as("sxx"),
-               sum((col("y").cast(D38) * col("y").cast(D38)).cast(D38))
-                 .as("syy"))
-        val nD = col("n").cast(D38)
-        m.select(col("lag"), col("n").as("n_days"),
-                 round((nD * col("sxy") - col("sx") * col("sy"))
-                         .cast("double") /
-                       sqrt((nD * col("sxx") - col("sx") * col("sx"))
-                              .cast("double") *
-                            (nD * col("syy") - col("sy") * col("sy"))
-                              .cast("double")), 4).as("r"))
+        Frames.pearsonSums(pairs.groupBy(col("lag")), col("x"), col("y"))
+          .select(col("lag"), col("n").as("n_days"),
+                  Frames.pearsonR4.as("r"))
           .orderBy(col("lag"))
       },
       """WITH daily AS (
@@ -1469,9 +1417,8 @@ object StatsOps extends OpGroup {
       (s, d) => {
         val o = Tables.orders(s, d)
           .select(col("o_custkey"),
-                  (money("o_totalprice") * 100).cast("long").as("vc"),
-                  ldiv(unix_micros(col("o_orderdate").cast("timestamp")),
-                       lit(86400000000L)).as("day"))
+                  cents("o_totalprice").as("vc"),
+                  epochDay("o_orderdate").as("day"))
         val anchor = o.agg(max(col("day")).as("a"))
         val seg = Tables.customer(s, d)
           .select(col("c_custkey"), col("c_mktsegment"))
@@ -1591,9 +1538,7 @@ object StatsOps extends OpGroup {
       "q_ts_theil_sen",
       (s, d) => {
         // No seam on daily: measured 1.07×/1.08× (sf0.1/sf1), reverted: it hides the day-domain bound from PlanAuditSpec ban 2.
-        val daily = Tables.events(s, d)
-          .select(expr("ts_us div 86400000000").as("x"))
-          .groupBy(col("x")).agg(count(lit(1)).as("y"))
+        val daily = Frames.dailyEventCounts(s, d)
         val a = daily.select(col("x").as("xi"), col("y").as("yi"))
         val b = daily.select(col("x").as("xj"), col("y").as("yj"))
         val pairs = a.join(b, col("xj") > col("xi"))
@@ -1760,10 +1705,7 @@ object StatsOps extends OpGroup {
       // scanned twice and shuffled never (group keys only).
       "q_stats_levene",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val e = Tables.events(s, d)
-          .select(col("event_type"),
-                  (money("value") * 100).cast("long").as("vc"))
+        val e = Frames.eventCents(s, d)
         val med = e.groupBy(col("event_type"))
           .agg((percentile(col("vc"), lit(0.5)) * 2).cast("long")
                  .as("m2"))
@@ -1776,20 +1718,7 @@ object StatsOps extends OpGroup {
           .agg(count(lit(1)).as("ng"),
                sum(col("dd")).as("sg"),
                (sum(dD * dD) * 10000).cast(D38).as("ss4"))
-          .select(col("ng"), col("sg"), col("ss4"),
-                  halfUpDivWideDec(col("sg").cast(D38) * col("sg") * 10000,
-                                   col("ng")).as("tg"))
-        grp.agg(count(lit(1)).as("k"), sum(col("ng")).as("n"),
-                sum(col("sg")).as("st"), sum(col("ss4")).as("sss4"),
-                sum(col("tg")).as("sumt"))
-          .select(col("k"), col("n"), col("sss4"), col("sumt"),
-                  halfUpDivWideDec(col("st").cast(D38) * col("st") * 10000,
-                                   col("n")).as("tall"))
-          .select(col("k").as("n_groups"), col("n"),
-                  greatest(col("sumt") - col("tall"), lit(0L))
-                    .cast(D38).as("ssb4"),
-                  greatest(col("sss4") - col("sumt").cast(D38),
-                           lit(0L).cast(D38)).as("ssw4"))
+        Frames.anovaSS4(grp)
           .select(col("n_groups"), col("n"),
                   round((col("ssb4").cast("double") *
                          (col("n") - col("n_groups")).cast("double")) /
@@ -1859,14 +1788,10 @@ object StatsOps extends OpGroup {
       // rows; the pair join is k²/2 on the 5-row group frame.
       "q_stats_tukey_hsd",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
         val e = Tables.documents(s, d)
           .select(col("lang"), col("n_chars").as("vc"))
-        val anchors = e.groupBy(col("lang"))
-          .agg(min(col("vc")).as("a"))
-          .select(col("lang").as("t1"), col("a"))
-        val dd = (col("vc") - col("a")).cast(D38)
-        val st = e.join(broadcast(anchors), col("lang") === col("t1"))
+        val dd = Frames.centered
+        val st = Frames.minAnchored(e, "lang")
           .groupBy(col("lang"), col("a"))
           .agg(count(lit(1)).as("n"), sum(dd).as("sg"),
                (sum(dd * dd) * 10000).cast(D38).as("ss4"))
@@ -1946,20 +1871,8 @@ object StatsOps extends OpGroup {
       // everything after is a 1×1 cross join.
       "q_stats_power",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val e = Tables.events(s, d)
-          .filter(col("event_type").isin("click", "view"))
-          .select(col("event_type"),
-                  (money("value") * 100).cast("long").as("vc"))
-        val anchors = e.groupBy(col("event_type"))
-          .agg(min(col("vc")).as("a"))
-          .select(col("event_type").as("t1"), col("a"))
-        val dd = (col("vc") - col("a")).cast(D38)
-        val st = e.join(broadcast(anchors), col("event_type") === col("t1"))
-          .groupBy(col("event_type"), col("a"))
-          .agg(sum(dd).cast("double").as("sv"),
-               sum(dd * dd).cast("double").as("s2"),
-               count(lit(1)).as("n"))
+        val e = Frames.eventCents(s, d, "click", "view")
+        val st = Frames.anchoredSums(e)
           .select(col("event_type"), col("n"),
                   (col("a").cast("double") + col("sv") / col("n"))
                     .as("mc"),
@@ -2040,15 +1953,11 @@ object StatsOps extends OpGroup {
         // (only 3 duplicate scans to save vs theil_sen's 10 — the
         // materialization overhead exceeds the dedup win at this
         // multiplicity; plans/r13/ab/b3_*/b4_*)
-        val daily = Tables.events(s, d)
-          .select(expr("ts_us div 86400000000").as("x"))
-          .groupBy(col("x")).agg(count(lit(1)).as("y"))
+        val daily = Frames.dailyEventCounts(s, d)
         val a = daily.select(col("x").as("xi"), col("y").as("yi"))
         val b = daily.select(col("x").as("xj"), col("y").as("yj"))
         val sStat = a.join(b, col("xj") > col("xi"))
-          .agg(sum(when(col("yj") > col("yi"), 1L)
-                     .when(col("yj") < col("yi"), -1L)
-                     .otherwise(0L)).as("s_stat"))
+          .agg(Frames.kendallS.as("s_stat"))
         val ties = daily.groupBy(col("y"))
           .agg(count(lit(1)).as("t"))
           .agg(sum(col("t") * (col("t") - 1) * (col("t") * 2 + 5))
@@ -2059,13 +1968,7 @@ object StatsOps extends OpGroup {
                   (col("n") * (col("n") - 1) * (col("n") * 2 + 5) -
                    col("tt")).as("var18"))
           .select(col("n_days"), col("s_stat"), col("var18"),
-                  r4(when(col("s_stat") > 0,
-                       (col("s_stat") - 1).cast("double") /
-                         sqrt(col("var18").cast("double") / 18.0))
-                     .when(col("s_stat") < 0,
-                       (col("s_stat") + 1).cast("double") /
-                         sqrt(col("var18").cast("double") / 18.0))
-                     .otherwise(lit(0.0))).as("z4"))
+                  Frames.kendallZ4.as("z4"))
       },
       """WITH daily AS (
         |  SELECT epoch_us(ts) // 86400000000 AS x, COUNT(*) AS y
@@ -2105,9 +2008,7 @@ object StatsOps extends OpGroup {
       // touched by the one daily hash-agg.
       "q_stats_runs_test",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .select(expr("ts_us div 86400000000").as("x"))
-          .groupBy(col("x")).agg(count(lit(1)).as("y"))
+        val daily = Frames.dailyEventCounts(s, d)
         val wd = Window.orderBy(col("x"))
         val sg = daily
           .withColumn("pv", lag(col("y"), 1).over(wd))
@@ -2187,29 +2088,7 @@ object StatsOps extends OpGroup {
       // Scale shape: one anchor pass + one hash-agg; k-row math after.
       "q_agg_skew_kurtosis",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val e = Tables.events(s, d)
-          .select(col("event_type"),
-                  (money("value") * 100).cast("long").as("vc"))
-        val anchors = e.groupBy(col("event_type"))
-          .agg(min(col("vc")).as("a"))
-          .select(col("event_type").as("t1"), col("a"))
-        val dd = (col("vc") - col("a")).cast(D38)
-        val g = e.join(broadcast(anchors), col("event_type") === col("t1"))
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-               sum(dd).cast("double").as("s1"),
-               sum(dd * dd).cast("double").as("s2"),
-               sum(dd * dd * dd).cast("double").as("s3"),
-               sum(dd * dd * dd * dd).cast("double").as("s4"))
-        val nD = col("n").cast("double")
-        val mu = col("s1") / nD
-        val m2 = col("s2") / nD - mu * mu
-        val m3 = col("s3") / nD - mu * col("s2") / nD * 3 +
-                 mu * mu * mu * 2
-        val m4 = col("s4") / nD - mu * col("s3") / nD * 4 +
-                 mu * mu * col("s2") / nD * 6 -
-                 mu * mu * mu * mu * 3
+        val Frames.Moments4(g, _, m2, m3, m4) = Frames.eventMoments4(s, d)
         g.select(col("event_type"), col("n"),
                  r4(m3 / sqrt(m2 * m2 * m2)).as("skew4"),
                  r4(m4 / (m2 * m2) - 3.0).as("kurtosis4"))
@@ -2267,12 +2146,7 @@ object StatsOps extends OpGroup {
       // the calendar either way, never by the corpus.
       "q_win_drawdown",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .select(expr(
-              "unix_micros(cast(o_orderdate as timestamp)) " +
-              "div 86400000000").as("day"),
-                  (money("o_totalprice") * 100).cast("long").as("vc"))
-          .groupBy(col("day")).agg(sum(col("vc")).as("rev"))
+        val daily = Frames.dailyOrderCents(s, d)
         val wc = Window.orderBy(col("day"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val cur = daily
@@ -2330,12 +2204,7 @@ object StatsOps extends OpGroup {
       // domain frame, never the corpus.
       "q_win_rsi",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .select(expr(
-              "unix_micros(cast(o_orderdate as timestamp)) " +
-              "div 86400000000").as("day"),
-                  (money("o_totalprice") * 100).cast("long").as("vc"))
-          .groupBy(col("day")).agg(sum(col("vc")).as("rev"))
+        val daily = Frames.dailyOrderCents(s, d)
         val wd = Window.orderBy(col("day"))
         val w14 = Window.orderBy(col("day")).rowsBetween(-13, 0)
         val gl = daily
@@ -2396,12 +2265,7 @@ object StatsOps extends OpGroup {
       // bounded day frame; 1-row output.
       "q_ts_mase",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .select(expr(
-              "unix_micros(cast(o_orderdate as timestamp)) " +
-              "div 86400000000").as("day"),
-                  (money("o_totalprice") * 100).cast("long").as("vc"))
-          .groupBy(col("day")).agg(sum(col("vc")).as("rev"))
+        val daily = Frames.dailyOrderCents(s, d)
         val wd = Window.orderBy(col("day"))
         val er = daily
           .withColumn("e1", abs(col("rev") - lag(col("rev"), 1)
@@ -2411,15 +2275,14 @@ object StatsOps extends OpGroup {
         val g = er.agg(
           sum(col("e1")).as("s1"), count(col("e1")).as("n1"),
           sum(col("e7")).as("s7"), count(col("e7")).as("n7"))
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         g.select(col("n1"), col("n7"),
                  (col("s1").cast("double") / col("n1") / 100.0)
                    .as("mae_naive"),
                  (col("s7").cast("double") / col("n7") / 100.0)
                    .as("mae_seasonal"),
                  intRatio4Wide(
-                   col("s7").cast(D) * col("n1") * 10000,
-                   col("s1").cast(D) * col("n7")).as("ratio4"))
+                   col("s7").cast(D38) * col("n1") * 10000,
+                   col("s1").cast(D38) * col("n7")).as("ratio4"))
       },
       """WITH daily AS (
         |  SELECT epoch_us(o_orderdate) // 86400000000 AS day,
@@ -2456,30 +2319,24 @@ object StatsOps extends OpGroup {
       // bounded (~2400-row) day frame.
       "q_win_bollinger",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
-        val daily = Tables.orders(s, d)
-          .select(expr(
-              "unix_micros(cast(o_orderdate as timestamp)) " +
-              "div 86400000000").as("day"),
-                  (money("o_totalprice") * 100).cast("long").as("vc"))
-          .groupBy(col("day")).agg(sum(col("vc")).as("rev"))
+        val daily = Frames.dailyOrderCents(s, d)
         val w20 = Window.orderBy(col("day")).rowsBetween(-19, 0)
         val wd = Window.orderBy(col("day"))
         val r = daily
           .withColumn("n", count(lit(1)).over(w20))
-          .withColumn("s", sum(col("rev")).over(w20).cast(D))
-          .withColumn("q", sum(col("rev").cast(D) * col("rev"))
+          .withColumn("s", sum(col("rev")).over(w20).cast(D38))
+          .withColumn("q", sum(col("rev").cast(D38) * col("rev"))
                              .over(w20))
           .withColumn("rn", row_number().over(wd))
           .filter(col("rn") >= 20)
-        val dev = col("n").cast(D) * col("rev") - col("s")
+        val dev = col("n").cast(D38) * col("rev") - col("s")
         val lhs = dev * dev * (col("n") - 1)
-        val rhs = (col("n").cast(D) * 4) *
-                  (col("n").cast(D) * col("q") - col("s") * col("s"))
+        val rhs = (col("n").cast(D38) * 4) *
+                  (col("n").cast(D38) * col("q") - col("s") * col("s"))
         r.filter(lhs > rhs)
           .select(col("day"),
                   (col("rev").cast("double") / 100.0).as("revenue"),
-                  when(col("rev").cast(D) * col("n") > col("s"), "hi")
+                  when(col("rev").cast(D38) * col("n") > col("s"), "hi")
                     .otherwise("lo").as("side"))
           .orderBy(col("day"))
       },
@@ -2521,29 +2378,7 @@ object StatsOps extends OpGroup {
       // Scale shape: anchor pass + one hash-agg; k-row math after.
       "q_stats_jarque_bera",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val e = Tables.events(s, d)
-          .select(col("event_type"),
-                  (money("value") * 100).cast("long").as("vc"))
-        val anchors = e.groupBy(col("event_type"))
-          .agg(min(col("vc")).as("a"))
-          .select(col("event_type").as("t1"), col("a"))
-        val dd = (col("vc") - col("a")).cast(D38)
-        val g = e.join(broadcast(anchors), col("event_type") === col("t1"))
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-               sum(dd).cast("double").as("s1"),
-               sum(dd * dd).cast("double").as("s2"),
-               sum(dd * dd * dd).cast("double").as("s3"),
-               sum(dd * dd * dd * dd).cast("double").as("s4"))
-        val nD = col("n").cast("double")
-        val mu = col("s1") / nD
-        val m2 = col("s2") / nD - mu * mu
-        val m3 = col("s3") / nD - mu * col("s2") / nD * 3 +
-                 mu * mu * mu * 2
-        val m4 = col("s4") / nD - mu * col("s3") / nD * 4 +
-                 mu * mu * col("s2") / nD * 6 -
-                 mu * mu * mu * mu * 3
+        val Frames.Moments4(g, nD, m2, m3, m4) = Frames.eventMoments4(s, d)
         val g1 = m3 / sqrt(m2 * m2 * m2)
         val g2 = m4 / (m2 * m2) - 3.0
         g.select(col("event_type"), col("n"),
@@ -2599,19 +2434,13 @@ object StatsOps extends OpGroup {
       // on the bounded day frame.
       "q_win_sma_cross",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
-        val daily = Tables.orders(s, d)
-          .select(expr(
-              "unix_micros(cast(o_orderdate as timestamp)) " +
-              "div 86400000000").as("day"),
-                  (money("o_totalprice") * 100).cast("long").as("vc"))
-          .groupBy(col("day")).agg(sum(col("vc")).as("rev"))
+        val daily = Frames.dailyOrderCents(s, d)
         val w12 = Window.orderBy(col("day")).rowsBetween(-11, 0)
         val w26 = Window.orderBy(col("day")).rowsBetween(-25, 0)
         val wd = Window.orderBy(col("day"))
         val r = daily
-          .withColumn("s12", sum(col("rev")).over(w12).cast(D))
-          .withColumn("s26", sum(col("rev")).over(w26).cast(D))
+          .withColumn("s12", sum(col("rev")).over(w12).cast(D38))
+          .withColumn("s26", sum(col("rev")).over(w26).cast(D38))
           .withColumn("rn", row_number().over(wd))
           .filter(col("rn") >= 26)
           // sign decided on the DECIMAL comparison itself — a double
@@ -2670,18 +2499,12 @@ object StatsOps extends OpGroup {
       // rank window runs on the bounded day frame.
       "q_stats_grubbs",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
-        val daily = Tables.orders(s, d)
-          .select(expr(
-              "unix_micros(cast(o_orderdate as timestamp)) " +
-              "div 86400000000").as("day"),
-                  (money("o_totalprice") * 100).cast("long").as("vc"))
-          .groupBy(col("day")).agg(sum(col("vc")).as("rev"))
+        val daily = Frames.dailyOrderCents(s, d)
         val tot = daily.agg(count(lit(1)).as("n"),
-                            sum(col("rev")).cast(D).as("s"),
-                            sum(col("rev").cast(D) * col("rev"))
+                            sum(col("rev")).cast(D38).as("s"),
+                            sum(col("rev").cast(D38) * col("rev"))
                               .as("q"))
-        val dev = abs(col("rev").cast(D) * col("n") - col("s"))
+        val dev = abs(col("rev").cast(D38) * col("n") - col("s"))
         val wr = Window.orderBy(dev.desc, col("day"))
         daily.crossJoin(broadcast(tot))
           .withColumn("rk", row_number().over(wr))
@@ -2730,12 +2553,7 @@ object StatsOps extends OpGroup {
       // Scale shape: corpus → day domain; one lag window; 1-row out.
       "q_stats_sign_test",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .select(expr(
-              "unix_micros(cast(o_orderdate as timestamp)) " +
-              "div 86400000000").as("day"),
-                  (money("o_totalprice") * 100).cast("long").as("vc"))
-          .groupBy(col("day")).agg(sum(col("vc")).as("rev"))
+        val daily = Frames.dailyOrderCents(s, d)
         val wd = Window.orderBy(col("day"))
         val g = daily
           .withColumn("p7", lag(col("rev"), 7).over(wd))
@@ -2784,18 +2602,17 @@ object StatsOps extends OpGroup {
       // Scale shape: one source-keyed hash-agg; k-row math after.
       "q_stats_kish",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val g = Tables.documents(s, d)
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n"),
                sum(col("n_chars")).as("sw"),
-               sum(col("n_chars").cast(D) * col("n_chars")).as("sw2"))
+               sum(col("n_chars").cast(D38) * col("n_chars")).as("sw2"))
         g.select(col("source"), col("n"),
                  intRatio4Wide(
-                   col("sw").cast(D) * col("sw") * 10000,
+                   col("sw").cast(D38) * col("sw") * 10000,
                    col("sw2")).as("ess4"),
                  intRatio4Wide(
-                   col("sw").cast(D) * col("sw") * 10000,
+                   col("sw").cast(D38) * col("sw") * 10000,
                    col("sw2") * col("n")).as("efficiency4"))
           .orderBy(col("source"))
       },
@@ -2897,12 +2714,7 @@ object StatsOps extends OpGroup {
       // bounded day frame; 1-row out.
       "q_win_underwater",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .select(expr(
-              "unix_micros(cast(o_orderdate as timestamp)) " +
-              "div 86400000000").as("day"),
-                  (money("o_totalprice") * 100).cast("long").as("vc"))
-          .groupBy(col("day")).agg(sum(col("vc")).as("rev"))
+        val daily = Frames.dailyOrderCents(s, d)
         val wc = Window.orderBy(col("day"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val wd = Window.orderBy(col("day"))

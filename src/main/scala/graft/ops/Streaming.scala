@@ -230,7 +230,7 @@ object Streaming extends OpGroup {
       "q_ts_seasonal",
       (s, d) => {
         val ev = Tables.events(s, d)
-          .select(expr("ts_us div 86400000000").as("day"),
+          .select(expr(s"ts_us div $DayUs").as("day"),
                   expr("(ts_us div 3600000000) % 24").as("hod"))
         val hh = ev.groupBy(col("day"), col("hod"))
           .agg(count(lit(1)).as("n"))

@@ -273,7 +273,6 @@ object TextOps extends OpGroup {
       // exchange) → term-sized moment agg; lang doc-counts broadcast.
       "q_text_burstiness",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val tc = Tables.documents(s, d)
           .select(col("lang"), col("doc_id"),
                   explode(graft.api.Dedup.tokens(col("text")))
@@ -293,9 +292,9 @@ object TextOps extends OpGroup {
           .filter(col("rn") <= 10)
           .select(col("lang"), col("term"), col("ndw"), col("s"),
                   intRatio4Wide(
-                    (col("nd").cast(D) * col("q") -
-                     col("s").cast(D) * col("s")) * 10000,
-                    (col("nd") - 1).cast(D) * col("s")).as("vmr4"))
+                    (col("nd").cast(D38) * col("q") -
+                     col("s").cast(D38) * col("s")) * 10000,
+                    (col("nd") - 1).cast(D38) * col("s")).as("vmr4"))
           .orderBy(col("lang"), col("s").desc, col("term"))
       },
       s"""WITH t0 AS (
@@ -442,7 +441,6 @@ object TextOps extends OpGroup {
       // Scale shape: one (lang, term) hash-agg, one lang rollup.
       "q_text_simpson",
       (s, d) => {
-        val D = org.apache.spark.sql.types.DecimalType(38, 0)
         val tc = Tables.documents(s, d)
           .select(col("lang"),
                   explode(graft.api.Dedup.tokens(col("text")))
@@ -452,12 +450,12 @@ object TextOps extends OpGroup {
         tc.groupBy(col("lang"))
           .agg(sum(col("c")).as("n_tokens"),
                count(lit(1)).as("vocab"),
-               sum(col("c").cast(D) * (col("c") - 1)).as("_ss"))
+               sum(col("c").cast(D38) * (col("c") - 1)).as("_ss"))
           .select(col("lang"), col("n_tokens"), col("vocab"),
                   intRatio4Wide(
-                    (col("n_tokens").cast(D) * (col("n_tokens") - 1) -
+                    (col("n_tokens").cast(D38) * (col("n_tokens") - 1) -
                      col("_ss")) * 10000,
-                    col("n_tokens").cast(D) * (col("n_tokens") - 1))
+                    col("n_tokens").cast(D38) * (col("n_tokens") - 1))
                     .as("simpson_d4"))
           .orderBy(col("lang"))
       },
@@ -742,7 +740,6 @@ object TextOps extends OpGroup {
       // DECIMAL(38,0): n_ab·N clears int64 on a 100 TB corpus.
       "q_text_collocations",
       (s, d) => {
-        val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
         // r12: a localCheckpoint of toks was tried (five plan branches)
         // and MEASURED SLOWER (1.27 → 1.57 s at sf0.1) — the
         // scan+split+posexplode recompute is cheaper than storing and

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Determinism._
 import graft.io.Tables
@@ -25,7 +24,17 @@ import graft.io.Tables
   */
 object TrainOps extends OpGroup {
 
-  private val D38 = DecimalType(38, 0)
+  /** Each 64-dim embedding's coordinates as (vec_id, j, q): q the
+    * j-th coordinate in exact micro-units. */
+  private def quantizedCoords(s: org.apache.spark.sql.SparkSession,
+                              d: String): DataFrame =
+    Tables.embeddings(s, d)
+      .filter(col("embedding").isNotNull &&
+              size(col("embedding")) === 64)
+      .select(col("vec_id"),
+              posexplode(transform(col("embedding"), x =>
+                round(x.cast("double") * 1000000).cast("long")))
+                .as(Seq("j", "q")))
 
   def qs: Seq[Q] = Seq(
 
@@ -197,10 +206,7 @@ object TrainOps extends OpGroup {
       (s, d) => {
         val dir = scratchDir("graft_txdemo_", d, wipe = true)
         val t = graft.model.TxTable(s, dir)
-        val o = Tables.orders(s, d)
-          .select(col("o_orderkey"),
-                  (money("o_totalprice") * 100).cast("long").as("cents"),
-                  year(col("o_orderdate").cast("timestamp")).as("y"))
+        val o = Frames.orderCentsByYear(s, d)
         t.overwrite(o.filter(col("y") < 1998))
         t.append(o.filter(col("y") >= 1998))
         def snap(v: Long): DataFrame = t.readAt(v)
@@ -338,14 +344,7 @@ object TrainOps extends OpGroup {
         // iterate after its rescale: the plan collapses to the
         // first-principles ideal — one explode pass + 2 passes per
         // power step over the materialized qv, all 64-cell aggregates.
-        val qv = Tables.embeddings(s, d)
-          .filter(col("embedding").isNotNull &&
-                  size(col("embedding")) === 64)
-          .select(col("vec_id"),
-                  posexplode(transform(col("embedding"), x =>
-                    round(x.cast("double") * 1000000).cast("long")))
-                    .as(Seq("j", "q")))
-          .localCheckpoint()
+        val qv = quantizedCoords(s, d).localCheckpoint()
         def rescale(raw: DataFrame): DataFrame = {
           val m = raw.agg(max(abs(col("raw"))).as("m"))
           raw.crossJoin(broadcast(m))
@@ -462,14 +461,7 @@ object TrainOps extends OpGroup {
         // recomputed from parquet on every re-invocation, never a
         // cross-run cache); each pick then only runs its own
         // max-dot pass over the materialized qv.
-        val qv = Tables.embeddings(s, d)
-          .filter(col("embedding").isNotNull &&
-                  size(col("embedding")) === 64)
-          .select(col("vec_id"),
-                  posexplode(transform(col("embedding"), x =>
-                    round(x.cast("double") * 1000000).cast("long")))
-                    .as(Seq("j", "q")))
-          .localCheckpoint()
+        val qv = quantizedCoords(s, d).localCheckpoint()
         val cent = qv.groupBy(col("j"))
           .agg(sum(col("q").cast(D38)).as("sq"),
                count(lit(1)).as("c"))
@@ -661,10 +653,7 @@ object TrainOps extends OpGroup {
         val t = graft.model.TxTable(s, dir)
         // r13 (guide §3.3): `o` feeds the seed overwrite AND both batch
         // filters — three orders scans per invocation without a seam
-        val o = Tables.orders(s, d)
-          .select(col("o_orderkey"),
-                  (money("o_totalprice") * 100).cast("long").as("cents"),
-                  year(col("o_orderdate").cast("timestamp")).as("y"))
+        val o = Frames.orderCentsByYear(s, d)
           .localCheckpoint()
         t.overwrite(o.filter(col("y") < 1997))
         val batch = o
@@ -715,10 +704,7 @@ object TrainOps extends OpGroup {
         // r13 (guide §3.3): `o` feeds the seed overwrite and `late`
         // feeds BOTH WAP attempts (each stages its own data files) —
         // four orders scans per invocation without a seam
-        val o = Tables.orders(s, d)
-          .select(col("o_orderkey"),
-                  (money("o_totalprice") * 100).cast("long").as("cents"),
-                  year(col("o_orderdate").cast("timestamp")).as("y"))
+        val o = Frames.orderCentsByYear(s, d)
           .localCheckpoint()
         t.overwrite(o.filter(col("y") < 1998))
         def audit(df: DataFrame): Option[String] = {
@@ -790,10 +776,7 @@ object TrainOps extends OpGroup {
         val t = graft.model.TxTable(s, dir)
         // r13 (guide §3.3): `o` feeds three commit writes — three
         // orders scans per invocation without a seam
-        val o = Tables.orders(s, d)
-          .select(col("o_orderkey"),
-                  (money("o_totalprice") * 100).cast("long").as("cents"),
-                  year(col("o_orderdate").cast("timestamp")).as("y"))
+        val o = Frames.orderCentsByYear(s, d)
           .localCheckpoint()
         t.overwrite(o.filter(col("y") < 1996))
         t.overwrite(o.filter(col("y") === 1996))
@@ -856,10 +839,7 @@ object TrainOps extends OpGroup {
         val t = graft.model.TxTable(s, dir)
         // r13 (guide §3.3): `o` feeds three appends — three orders
         // scans per invocation without a seam
-        val o = Tables.orders(s, d)
-          .select(col("o_orderkey"),
-                  (money("o_totalprice") * 100).cast("long").as("cents"),
-                  year(col("o_orderdate").cast("timestamp")).as("y"))
+        val o = Frames.orderCentsByYear(s, d)
           .localCheckpoint()
         t.append(o.filter(col("y") < 1996))
         t.append(o.filter(col("y") === 1996 || col("y") === 1997))

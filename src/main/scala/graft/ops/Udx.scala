@@ -63,7 +63,7 @@ object Udx extends OpGroup {
         graft.functions.register(s)
         Tables.orders(s, d)
           .select(col("o_custkey"), col("o_orderkey"),
-                  (money("o_totalprice") * 100).cast("long").as("cents"))
+                  cents("o_totalprice").as("cents"))
           .groupBy(col("o_custkey"))
           .agg(expr("topk_by_long(o_orderkey, cents, 3)").as("_t"),
                count(lit(1)).as("n_orders"))

@@ -238,7 +238,7 @@ object Windows extends OpGroup {
           .rowsBetween(-4, Window.currentRow)
         Tables.lineitem(s, d)
           .filter(col("l_partkey") < 200)
-          .withColumn("cents", (money("l_extendedprice") * 100).cast("long"))
+          .withColumn("cents", cents("l_extendedprice"))
           .select(col("l_partkey"), col("l_orderkey"), col("l_linenumber"),
                   percentile(col("cents"), lit(0.5)).over(w).as("med5"))
           .orderBy(col("l_partkey"), col("l_orderkey"), col("l_linenumber"))

@@ -4,6 +4,7 @@ import java.util.Properties
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, GraftBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.functions.{current_timestamp, unix_micros}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -47,6 +48,22 @@ import graft.model.{Catalog, SchemaMapper, TopicMeta}
   * `spark.sql.streaming.checkpointFileManagerClass` is set only while
   * `start()` runs and is unset again; a value the caller set is used
   * and kept.
+  *
+  * One log per checkpoint: a version directory's manifest belongs to
+  * the checkpoint that wrote it, since the sink treats every batch id
+  * the manifest holds as a replay. So `recordParquet` checks once,
+  * before its query starts, and refuses (naming the directory and the
+  * checkpoint):
+  *  - a new checkpoint (no `offsets` entry) whose version directory's
+  *    manifest already holds a batch: its first triggers would be
+  *    skipped. The catalog gives an unchanged schema the same version,
+  *    so recording a topic again needs its old checkpoint or another
+  *    base directory;
+  *  - a used checkpoint whose version directory has no
+  *    `_spark_metadata`;
+  *  - either kind, when the directory holds part files but no
+  *    `_spark_metadata` (e.g. after [[graft.io.Writers.compact]]): a new
+  *    manifest would hide every earlier row from `readback`.
   *
   * Receipt by reference: each micro-batch replaces `current_timestamp()`
   * with its own `batchTimestampMs`, and a literal's generated code holds
@@ -126,27 +143,55 @@ object Recorder {
     // .as[T] binds by name, so the extra _recv_us column is transparent
     // to typed consumers and available to audits.
     //
-    // VERSION-SCOPED sink dir (v1, v2, …): the sink keeps a
-    // per-directory manifest keyed by batchId, so a NEW recording
-    // session (fresh checkpoint) writing into the directory of an old
-    // one would find its batch 0 "already committed" and SILENTLY skip
-    // the write — data loss, not an error. Each schema version gets
-    // its own sink dir + manifest; resuming the SAME version must
-    // reuse the original checkpoint (the standard Structured Streaming
-    // contract — checkpoint is the session identity).
+    // VERSION-SCOPED sink dir (v1, v2, …): each schema version gets
+    // its own sink dir + manifest, and the dir must be this
+    // checkpoint's log (the rule in the Recorder doc)
     //
     // ONE writer per trigger: without the coalesce the sink writes one
     // part file per input partition per trigger — a small-file tail that
     // every later scan and replay pays for in file opens and listing.
     // The manifest still commits each trigger's file exactly once.
-    val sink = new ParquetLogWriter(stream.sparkSession,
-      s"$baseDir/${meta.table}/v${meta.version}")
+    val dir = s"$baseDir/${meta.table}/v${meta.version}"
+    requireOwnLog(stream.sparkSession, dir, checkpointDir)
+    val sink = new ParquetLogWriter(stream.sparkSession, dir)
     val w = withReceipt(stream.toDF()).coalesce(1).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch(sink)
     (meta, start(stream.sparkSession, w))
+  }
+
+  /** Refuses a parquet recording whose version directory `dir` is not
+    * the log of `checkpointDir` (the rule in the [[Recorder]] doc),
+    * before anything is written. */
+  private def requireOwnLog(spark: SparkSession, dir: String,
+                            checkpointDir: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def names(p: Path): Seq[String] =
+      try p.getFileSystem(conf).listStatus(p).toSeq.map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    // log entries are named by batch id (`7`, `9.compact`); temp and
+    // checksum files are hidden
+    def batches(p: Path) =
+      names(p).filter(n => n.headOption.exists(_.isDigit))
+    val used = batches(new Path(checkpointDir, "offsets")).nonEmpty
+    val log = new Path(dir, FileStreamSink.metadataDir)
+    val hasLog = log.getFileSystem(conf).exists(log)
+    def refuse(why: String): Nothing = throw new IllegalStateException(
+      s"cannot record into $dir with checkpoint $checkpointDir: $why")
+    if (!hasLog && names(new Path(dir)).exists(_.startsWith("part-")))
+      refuse(s"it holds part files but no ${FileStreamSink.metadataDir} " +
+        "manifest (compacted, or written by another tool), so readback " +
+        "would see only the rows this recording adds")
+    if (used && !hasLog)
+      refuse(s"the checkpoint has run, but $dir has no " +
+        s"${FileStreamSink.metadataDir} manifest to resume")
+    if (!used && batches(log).nonEmpty)
+      refuse("the checkpoint is new, but the directory's manifest holds " +
+        "another recording's batches: this one's first batches would be " +
+        "skipped as replays. Resume with the checkpoint that wrote it, " +
+        "or record into another base directory")
   }
 
   /** Spark's key for the class that writes a query's offsets, commits

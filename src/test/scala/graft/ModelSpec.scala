@@ -205,6 +205,27 @@ class ModelSpec extends SparkSpec {
     assert(a.lookup("/r1/pose") == Some(m3) && m3.version == 3)
   }
 
+  test("catalog: concurrent registrations on one path keep every topic") {
+    val path = tmpDir("cat-race") + "/_metadata"
+    val v1 = StructType(Seq(StructField("x", LongType)))
+    val n = 8
+    // n threads, each with its own instance on the path, register
+    // distinct topics released together: a read-then-replace without a
+    // shared lock lets a later replace drop an earlier thread's row
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (1 to n).map { i =>
+      val cat = new graft.model.Catalog(spark, path)
+      new Thread(() =>
+        try { go.await(); cat.register(s"/race/t$i", "std_msgs/Int64", v1) }
+        catch { case t: Throwable => failures.add(t) })
+    }
+    threads.foreach(_.start()); go.countDown(); threads.foreach(_.join())
+    assert(failures.isEmpty, failures)
+    val topics = new graft.model.Catalog(spark, path).allVersions().map(_.topic)
+    assert(topics.sorted == (1 to n).map(i => s"/race/t$i").sorted)
+  }
+
   test("catalog: a write interrupted before its rename loses nothing") {
     val dir = tmpDir("cat-crash") + "/_metadata"
     val cat = new graft.model.Catalog(spark, dir)

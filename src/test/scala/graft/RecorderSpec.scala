@@ -284,6 +284,51 @@ class RecorderSpec extends SparkSpec {
     assert(back.sortBy(_.x) == msgs)
   }
 
+  /** Starts a live recording of `in` under `base` with checkpoint `ckpt`. */
+  private def recordLive(in: MemoryStream[Pose], base: String,
+      ckpt: String): StreamingQuery =
+    Recorder.recordParquet(in.toDS(), "/robot1/pose", "geometry_msgs/Pose",
+      new Catalog(spark, s"$base/_metadata"), base, s"$base/$ckpt",
+      Trigger.ProcessingTime(0))._2
+
+  test("a new checkpoint is refused a version directory whose manifest " +
+       "another recording wrote, instead of skipping its first batches") {
+    implicit val ctx = spark.sqlContext
+    val base = tmpDir("second-session")
+    val in = MemoryStream[Pose](3)
+    feed(in, recordLive(in, base, "_ckpt1"), poses(0, 4).grouped(2).toSeq)
+    // the same topic and schema get the same version directory
+    val v1 = s"$base/robot1_pose/v1"
+    val e = intercept[IllegalStateException](recordLive(in, base, "_ckpt2"))
+    assert(e.getMessage.contains(v1) &&
+      e.getMessage.contains(s"$base/_ckpt2"), e.getMessage)
+    assert(!Files.exists(Paths.get(base, "_ckpt2", "offsets")))
+    // the recording that owns the manifest still resumes
+    feed(in, recordLive(in, base, "_ckpt1"), Seq(poses(4, 6)))
+    val back = Recorder.readback[Pose](spark, "/robot1/pose",
+      new Catalog(spark, s"$base/_metadata"), base).collect().toSeq
+    assert(back.sortBy(_.x) == poses(0, 6))
+  }
+
+  test("a version directory compacted out of its manifest is refused, " +
+       "with its old checkpoint and with a new one") {
+    implicit val ctx = spark.sqlContext
+    val base = tmpDir("compacted")
+    val in = MemoryStream[Pose](3)
+    feed(in, recordLive(in, base, "_ckpt"), poses(0, 4).grouped(2).toSeq)
+    val v1 = s"$base/robot1_pose/v1"
+    graft.io.Writers.compact(spark, v1)
+    assert(!Files.exists(Paths.get(v1, "_spark_metadata")))
+    // a new manifest would resolve only the rows recorded after it
+    for (ckpt <- Seq("_ckpt", "_ckpt_new")) {
+      val e = intercept[IllegalStateException](recordLive(in, base, ckpt))
+      assert(e.getMessage.contains(v1) &&
+        e.getMessage.contains(s"$base/$ckpt"), e.getMessage)
+    }
+    assert(!Files.exists(Paths.get(v1, "_spark_metadata")))
+    assert(spark.read.parquet(v1).count() == 4)
+  }
+
   test("a task that throws mid-write leaves neither a part file nor a " +
        "manifest entry for its batch") {
     implicit val ctx = spark.sqlContext
