@@ -272,7 +272,6 @@ object Pipeline {
     * registers are engine-private). Estimate rounded to 4 dp (R3). */
   def approxDistinctKMV(
       df: DataFrame, group: Column, value: Column, k: Int): DataFrame = {
-    graft.functions.register(df.sparkSession)
     df.groupBy(group.as("g"))
       .agg(call_function("kmv_kth", hash32(value), lit(k)).as("s"))
       .select(col("g"),
@@ -331,7 +330,6 @@ object Pipeline {
   def contaminatedBloom(
       corpus: DataFrame, benchmark: DataFrame, id: Column, text: Column,
       n: Int, expectedItems: Long = 1000000L): DataFrame = {
-    graft.functions.register(corpus.sparkSession)
     val bench = idShingles(benchmark, id, text, n).select(col("g"))
     val blob = bench
       .agg(call_function("bloom_agg", xxhash64(col("g")),

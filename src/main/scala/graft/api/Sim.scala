@@ -58,7 +58,6 @@ object Sim {
     * Null ords (null embeddings) never enter the heap.
     * Returns (q_id, cand_id, _ord, rn). */
   private def heapRank(scored: DataFrame, ord: Column, k: Int): DataFrame = {
-    graft.functions.register(scored.sparkSession)
     scored.withColumn("_ord", ord)
       .groupBy(col("q_id"))
       .agg(expr(s"topk_pairs_by_long(cand_id, _ord, $k)").as("_t"))
@@ -88,7 +87,6 @@ object Sim {
     * original frame, not just the post-projection names. */
   private def withNorm(df: DataFrame, id: Column, emb: Column,
                        flags: Seq[(String, Column)] = Nil): DataFrame = {
-    graft.functions.register(df.sparkSession)
     df.select((Seq(id.as("vec_id"), emb.as("embedding")) ++
         flags.map { case (n, c) => c.as(n) }): _*)
       .withColumn("nrm", sqrt(expr("dot_f32(embedding, embedding)")))
@@ -426,8 +424,7 @@ object Sim {
     * sibling): the `aggregate(zip_with(...))` form runs interpreted
     * with an intermediate diffs array, and the PQ encode pass
     * evaluates this O(n·ks·m) times at ingest. Integer adds are
-    * order-independent, so the value is identical either way. Callers
-    * (pqTopK/ivfPqTopK) register the function on their session. */
+    * order-independent, so the value is identical either way. */
   private def d2(a: String, b: String) = expr(s"l2sq_i64($a, $b)")
 
   /** (…, j, sv): explode a `q64` long-array column into its m
@@ -471,7 +468,6 @@ object Sim {
       isQuery: Column, isCodebook: Column,
       m: Int, k: Int): DataFrame = {
     require(m >= 1, "pqTopK: m must be >= 1")
-    graft.functions.register(df.sparkSession)
     // r13 (guide §3.3): base feeds the codebook, encode, and LUT
     // branches — each re-planned the scan + grid64 quantization (6
     // parquet scans in plans/r13/q_sim_ann_pq_before.txt). One
@@ -528,7 +524,6 @@ object Sim {
       m: Int, nprobe: Int, k: Int): DataFrame = {
     require(m >= 1, "ivfPqTopK: m must be >= 1")
     require(nprobe >= 1, "ivfPqTopK: nprobe must be >= 1")
-    graft.functions.register(df.sparkSession)
     // r13 (guide §1.1, TRIED AND REVERTED): base feeds centroids,
     // assignment, probes, codebook, encode, and LUT — 8 embeddings
     // scans in plans/r13/q_sim_ann_ivfpq_before.txt — but the §3.3
@@ -916,7 +911,6 @@ object Sim {
   def silhouette(
       df: DataFrame, id: Column, emb: Column,
       centroids: DataFrame): DataFrame = {
-    graft.functions.register(df.sparkSession)
     val e = df.filter(emb.isNotNull)
       .select(id.as("vec_id"), grid64(emb).as("q64"))
     val c = centroids.select(col("cell"), grid64(col("centroid")).as("c64"))

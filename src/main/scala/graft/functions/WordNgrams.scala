@@ -58,10 +58,9 @@ case class WordNgrams(child: Expression, n: Int)
 
 object WordNgrams {
   /** THE builder for `word_ngrams(col, n)`, the entry in
-    * [[graft.functions.table]] that both the session extension and
-    * `graft.functions.register` read. Accepts any
-    * constant integral n; anything else gets a clear analysis-time error
-    * instead of a ClassCastException / unbound-reference crash. */
+    * [[graft.functions.table]]. Accepts any constant integral n;
+    * anything else gets a clear analysis-time error instead of a
+    * ClassCastException / unbound-reference crash. */
   def builder(exprs: Seq[Expression]): WordNgrams = {
     require(exprs.length == 2, "word_ngrams(col, n) takes two arguments")
     WordNgrams(exprs.head,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -14,8 +13,8 @@ package object functions {
 
   /** Every graft SQL function, one `(name, info, builder)` entry each:
     * Spark's `FunctionDescription`, the triple a session extension
-    * injects. [[graft.GraftExtensions]] injects it into each session it
-    * configures, and [[register]] writes it into one session. */
+    * injects. [[graft.GraftSessionProvider]] injects it into every
+    * session built with graft on the classpath. */
   val table: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
     entry("dot_f32", classOf[DotF32], DotF32.builder),
     entry("l2sq_i64", classOf[L2SqI64], L2SqI64.builder),
@@ -55,17 +54,6 @@ package object functions {
       case s: java.lang.Short if smallInts => s.intValue
       case b: java.lang.Byte if smallInts => b.intValue
       case other => refuse(other)
-    }
-  }
-
-  /** Writes [[table]] into `spark`'s function registry, so SQL and
-    * `selectExpr` there can call every graft function. Library code
-    * calls it before it builds a query that names one; a session
-    * configured with [[graft.GraftExtensions]] has them already. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    table.foreach { case (name, info, builder) =>
-      registry.registerFunction(name, info, builder)
     }
   }
 }

@@ -4,10 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** THE shared reader (SURVEY.md §7.1). Every declared query goes through
-  * here so the ns-timestamp workaround (FIXTURES.md gotcha 1) is applied
-  * uniformly: `events.ts` is parquet TIMESTAMP(NANOS) which Spark 4.1.2
-  * rejects unless `spark.sql.legacy.parquet.nanosAsLong=true`, in which
-  * case it arrives as LongType epoch-nanos.
+  * here, so the UTC session timezone and the event-time columns
+  * (FIXTURES.md gotcha 1) are derived one way.
   *
   * Scale note (100 TB): this helper is the single seam where a real
   * deployment would swap one-file-per-table parquet for a partitioned
@@ -35,7 +33,6 @@ object Tables {
     // sessions without extra configs (SURVEY §0.3). UTC is part of the
     // oracle contract (DuckDB epoch_us is tz-free), so pin it at the one
     // seam every query reads through.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     cache.computeIfAbsent((spark, s"$sfDir/$name.parquet"),
       k => k._1.read.parquet(k._2))
@@ -51,29 +48,19 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** `events` with the canonical event-time columns derived:
-    *  - `ts_us`: epoch-microseconds BIGINT — the cross-engine comparable
-    *    form (DuckDB reads the same column as µs TIMESTAMP; `epoch_us(ts)`
-    *    there == `ts div 1000` here, verified in FIXTURES.md gotcha 2).
-    *    Integer division (`div`), NOT double division: epoch-nanos
-    *    (~1.7e18) exceeds double's 53-bit integer range.
+  /** `events` with the canonical event-time columns derived from `ts`
+    * (parquet `timestamp[us]`: TIMESTAMP_NTZ as the fixtures write it,
+    * TIMESTAMP when Spark wrote the file):
+    *  - `ts_us`: epoch-microseconds BIGINT, the cross-engine comparable
+    *    form: the session timezone is pinned to UTC above, so the NTZ→LTZ
+    *    cast is value-identity and `unix_micros` here == DuckDB's
+    *    `epoch_us(ts)` (FIXTURES.md gotcha 2);
     *  - `ts_utc`: µs TimestampType for window()/date functions.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    val raw = table(s, d, "events")
-    raw.schema("ts").dataType match {
-      // Fixture v1 (rounds 1-3): parquet TIMESTAMP(NANOS) read as
-      // epoch-nanos LongType under nanosAsLong.
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts_us", expr("ts div 1000"))
-           .withColumn("ts_utc", timestamp_micros(expr("ts div 1000")))
-      // Fixture v2 (round 4 regen): parquet timestamp[us] arrives as
-      // TIMESTAMP_NTZ. Session tz is pinned UTC above, so the NTZ→LTZ
-      // cast is value-identity and unix_micros == DuckDB epoch_us(ts).
-      case _ =>
-        val utc = col("ts").cast("timestamp")
-        raw.withColumn("ts_us", unix_micros(utc))
-           .withColumn("ts_utc", utc)
-    }
+    val utc = col("ts").cast("timestamp")
+    table(s, d, "events")
+      .withColumn("ts_us", unix_micros(utc))
+      .withColumn("ts_utc", utc)
   }
 }

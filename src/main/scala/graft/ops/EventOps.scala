@@ -1540,7 +1540,6 @@ object EventOps extends OpGroup {
       // never O(users²), and per-bucket work is now O(cap²).
       "q_events_copresence",
       (s, d) => {
-        graft.functions.register(s)
         val sess = graft.api.Events.sessionize(
             Tables.events(s, d)
               .select(col("user_id"), col("event_id"), col("ts_us")),

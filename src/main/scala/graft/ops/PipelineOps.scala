@@ -489,7 +489,6 @@ object PipelineOps extends OpGroup {
       // SMALLER doc_id on both paths).
       "q_sample_pergroup",
       (s, d) => {
-        graft.functions.register(s)
         Tables.documents(s, d)
           .select(col("lang"), col("doc_id"),
                   // DESCENDING heap order == ascending hash16 order via

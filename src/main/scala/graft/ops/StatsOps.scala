@@ -1119,7 +1119,6 @@ object StatsOps extends OpGroup {
         // the codegen'd hash-agg buffer and only touches decimal on
         // flush/merge/eval. Same integers, same DECIMAL(38,0) result
         // type (groups are never empty: every r sees the whole pool).
-        graft.functions.register(s)
         val repStats = reps.groupBy(col("r"))
           .agg(expr("sum_long_dec38(if(g = 1, vc, cast(0 as bigint)))")
                  .as("s1"),

@@ -497,7 +497,6 @@ object TextOps extends OpGroup {
       // shows it does); 1-row output.
       "q_text_head_coverage",
       (s, d) => {
-        graft.functions.register(s)
         val tok = Tables.documents(s, d)
           .select(graft.api.Dedup.tokens(col("text")).as("w"))
           .filter(size(col("w")) >= 3)

@@ -60,7 +60,6 @@ object Udx extends OpGroup {
       // slice: the hash match proves heap and sort agree, ties included.
       "q_agg_topk_by",
       (s, d) => {
-        graft.functions.register(s)
         Tables.orders(s, d)
           .select(col("o_custkey"), col("o_orderkey"),
                   cents("o_totalprice").as("cents"))
@@ -89,7 +88,6 @@ object Udx extends OpGroup {
     Q(
       "q_udtf_ngrams",
       (s, d) => {
-        graft.functions.register(s)
         Tables.documents(s, d)
           .filter(col("doc_id") < 20)
           .selectExpr("word_ngrams(text, 2) AS bigram")
@@ -122,7 +120,6 @@ object Udx extends OpGroup {
       // k survivors) is the documented production path.
       "q_agg_heavy_hitters",
       (s, d) => {
-        graft.functions.register(s)
         Tables.documents(s, d)
           .groupBy(col("source"))
           .agg(expr("heavy_hitters(lang, 16)").as("_hh"))

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -176,14 +176,9 @@ final case class AsOfJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** Public API + strategy registration. */
+/** Public API. Every session plans the join with [[AsOfJoinStrategy]],
+  * which [[graft.GraftSessionProvider]] installs. */
 object AsOf {
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val exp = spark.experimental
-    if (!exp.extraStrategies.contains(AsOfJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsOfJoinStrategy
-  }
-
   /** `asofJoin(trades, quotes, keys, tradeTime, quoteTime)`: every left
     * row joined to the latest strictly-prior right row per key.
     * `inclusive` admits equal timestamps (pandas merge_asof
@@ -202,9 +197,7 @@ object AsOf {
       inclusive: Boolean = false,
       toleranceUs: Long = -1L,
       rightTieBreak: Seq[Column] = Nil): DataFrame = {
-    val spark = left.sparkSession
-    ensureRegistered(spark)
-    GraftBridge.ofRows(spark, AsOfJoinPlan(
+    GraftBridge.ofRows(left.sparkSession, AsOfJoinPlan(
       GraftBridge.logicalPlan(left),
       GraftBridge.logicalPlan(right),
       leftKeys.map(GraftBridge.expression),

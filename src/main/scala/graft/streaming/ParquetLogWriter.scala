@@ -29,7 +29,15 @@ import org.apache.spark.util.SerializableConfiguration
   * `part-<p>-<uuid>-c000<ext>`, and the files' statuses are added to the
   * manifest as that batch id. A task that throws deletes its file; a
   * failed job or commit deletes the files of its tasks; a batch id
-  * another writer already committed throws.
+  * another writer already committed throws. The manifest's latest batch
+  * id is read once, on the first batch, and then kept in memory: the log
+  * finds it by listing `_spark_metadata`, which holds one file per batch
+  * for the log's cleanup delay (10 min, thousands of files at 10
+  * triggers/s), so asking it on every trigger would cost a listing each.
+  * The log still lists the directory itself: once, to learn its compact
+  * interval, and, to delete expired files, on every add from batch
+  * `spark.sql.streaming.minBatchesToRetain` + compact interval − 1 on
+  * (109 by default).
   *
   * Unlike `FileStreamSink`'s write job, whose every task carries the
   * whole Hadoop configuration twice (see [[Recorder]]), the job's
@@ -54,13 +62,14 @@ private[graft] final class ParquetLogWriter(spark: SparkSession, dir: String)
 
   private var log: FileStreamSinkLog = _
   private var write: WritePartition = _
+  private var latest = -1L
 
   /** The function each write task runs; set by the first batch. */
   private[graft] def task: WritePartition = write
 
   def apply(batch: DataFrame, batchId: Long): Unit = {
     if (log == null) prepare(batch)
-    if (batchId > log.getLatestBatchId().getOrElse(-1L)) {
+    if (batchId > latest) {
       val rows = batch.queryExecution.toRdd
       val written = new Array[Option[SinkFileStatus]](rows.getNumPartitions)
       try {
@@ -69,6 +78,7 @@ private[graft] final class ParquetLogWriter(spark: SparkSession, dir: String)
         if (!log.add(batchId, written.flatten))
           throw new IllegalStateException(
             s"batch $batchId of $root was committed by another writer")
+        latest = batchId
       } catch {
         case t: Throwable =>
           for (s <- written if s != null; f <- s) {
@@ -91,6 +101,7 @@ private[graft] final class ParquetLogWriter(spark: SparkSession, dir: String)
     log = new FileStreamSinkLog(FileStreamSinkLog.VERSION, session,
       FileStreamSink.getMetadataLogPath(root.getFileSystem(conf), root,
         session.sessionState.conf).toString)
+    latest = log.getLatestBatchId().getOrElse(-1L)
   }
 }
 

@@ -65,6 +65,20 @@ import graft.model.{Catalog, SchemaMapper, TopicMeta}
   *    `_spark_metadata` (e.g. after [[graft.io.Writers.compact]]): a new
   *    manifest would hide every earlier row from `readback`.
   *
+  * Replaying a recording costs a listing job. Spark's file source
+  * (`spark.readStream.parquet(dir)`) resolves the files the manifest
+  * names as explicit paths, and past
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32 files)
+  * `InMemoryFileIndex` lists them with a Spark job of one task per part
+  * file: a 15 s recording at 100 ms triggers writes ~150 files, and the
+  * event log of one such replay (`perfbench` `ros_record`, seed 4,
+  * 4-core box) showed 150 tasks taking 1.18 s.
+  * The threshold cannot be raised for the replay query alone, as
+  * `start` sets the file-manager key: the query builds its
+  * `FileStreamSource` from the reader's `StreamingRelation.dataSource`,
+  * which holds the caller's session, not the query's clone, and the
+  * listing reads the threshold from that session.
+  *
   * Receipt by reference: each micro-batch replaces `current_timestamp()`
   * with its own `batchTimestampMs`, and a literal's generated code holds
   * its value in the Java source. With the receipt as a plain literal,

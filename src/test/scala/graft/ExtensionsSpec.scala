@@ -1,44 +1,42 @@
 package graft
 
-import org.apache.spark.sql.{ExtensionBridge, SparkSessionExtensions}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{ExtensionBridge, SparkSession, SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
-import graft.plans.AsOfJoinStrategy
+import graft.plans.{AsOf, AsOfJoinExec, BandedRangeJoinRule, BitmapDistinctRule}
 
-/** `spark.sql.extensions=graft.GraftExtensions` wiring: the extension
-  * must inject every graft function and the as-of planner strategy into
-  * a session being constructed. Verified against the extension-build
-  * steps directly (a second SparkContext per JVM isn't possible, so we
-  * don't boot a whole configured session). */
+/** How graft reaches a session: [[GraftSessionProvider]], found on the
+  * classpath by Spark's session builder, installs the function table and
+  * the as-of strategy in every session; `spark.sql.extensions=
+  * graft.GraftExtensions` adds only the two optimizer rules. The
+  * extension objects are checked through Spark's own build steps (a
+  * second SparkContext per JVM isn't possible); the provider is checked
+  * in live sessions. */
 class ExtensionsSpec extends SparkSpec {
+  import spark.implicits._
 
-  private def injected(): SparkSessionExtensions = {
+  private def injected(f: SparkSessionExtensions => Unit): SparkSessionExtensions = {
     val ext = new SparkSessionExtensions
-    new GraftExtensions().apply(ext)
+    f(ext)
     ext
   }
 
-  test("GraftExtensions injects dot_f32, word_ngrams, and the asof strategy") {
-    val ext = injected()
-
-    val strategies = ExtensionBridge.plannerStrategies(ext, spark)
-    assert(strategies.contains(AsOfJoinStrategy))
-
-    val reg = ExtensionBridge.registerFunctions(
-      ext, ExtensionBridge.freshFunctionRegistry())
-    assert(reg.functionExists(new FunctionIdentifier("dot_f32")))
-    assert(reg.functionExists(new FunctionIdentifier("word_ngrams")))
-    // the first AGGREGATE through injectFunction (the analyzer wraps
-    // the bare AggregateFunction) — regressions here would only hit
-    // spark.sql.extensions users, invisible to register()-path tests
-    assert(reg.functionExists(new FunctionIdentifier("topk_by_long")))
+  test("GraftExtensions injects the two optimizer rules and no function") {
+    val ext = injected(new GraftExtensions())
+    assert(ExtensionBridge.optimizerRules(ext, spark) ==
+      Seq(BandedRangeJoinRule, BitmapDistinctRule))
+    assert(ExtensionBridge.plannerStrategies(ext, spark).isEmpty)
+    assert(ExtensionBridge.registerFunctions(
+      ext, ExtensionBridge.freshFunctionRegistry()).listFunction().isEmpty)
   }
 
   test("the injected dot_f32 takes exactly two arguments") {
     val reg = ExtensionBridge.registerFunctions(
-      injected(), ExtensionBridge.freshFunctionRegistry())
+      injected(new GraftSessionProvider()), ExtensionBridge.freshFunctionRegistry())
     val a = Literal.create(Array(1.0f), ArrayType(FloatType))
     for (args <- Seq(Seq(a), Seq(a, a, a))) {
       val e = intercept[IllegalArgumentException](
@@ -48,27 +46,15 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
-  test("the extension and graft.functions.register write the one function table") {
-    val names = graft.functions.table.map(_._1)
+  // in a newSession() and in a session built with no graft call at all
+  test("the classpath provider installs every function and the as-of strategy") {
+    val table = graft.functions.table
+    val names = table.map(_._1)
     assert(names.size == 12 && names.distinct == names, names)
+    val providers = java.util.ServiceLoader
+      .load(classOf[SparkSessionExtensionsProvider]).asScala.map(_.getClass).toSeq
+    assert(providers.contains(classOf[GraftSessionProvider]), providers)
 
-    val viaExt = ExtensionBridge.registerFunctions(
-      injected(), ExtensionBridge.freshFunctionRegistry())
-    assert(viaExt.listFunction().toSet == names.toSet)
-
-    val fresh = spark.newSession()
-    val reg = fresh.sessionState.functionRegistry
-    val before = reg.listFunction().toSet
-    graft.functions.register(fresh)
-    assert(reg.listFunction().toSet -- before == names.toSet)
-    for (n <- names)
-      assert(reg.lookupFunction(n).map(_.getClassName) ==
-             viaExt.lookupFunction(n).map(_.getClassName), n)
-
-    // every injected name resolves in a session the extension built
-    val ext = spark.newSession()
-    ExtensionBridge.registerFunctions(
-      injected(), ext.sessionState.functionRegistry)
     val calls = Map(
       "dot_f32" ->
         "SELECT dot_f32(array(CAST(1 AS FLOAT)), array(CAST(2 AS FLOAT)))",
@@ -89,7 +75,28 @@ class ExtensionsSpec extends SparkSpec {
       "bloom_might_contain" ->
         "SELECT bloom_might_contain(CAST(NULL AS BINARY), xxhash64(1))")
     assert(calls.keySet == names.map(_.funcName).toSet)
-    for ((n, sql) <- calls)
-      assert(ext.sql(sql).queryExecution.analyzed.resolved, n)
+
+    def check(s: SparkSession, which: String): Unit = {
+      val reg = s.sessionState.functionRegistry
+      for ((name, info, _) <- table)
+        assert(reg.lookupFunction(name).map(_.getClassName) ==
+          Some(info.getClassName), s"$which: $name")
+      for ((n, sql) <- calls)
+        assert(s.sql(sql).queryExecution.analyzed.resolved, s"$which: $n")
+      val l = s.range(3).select($"id".as("k"), $"id".as("t"))
+      val r = s.range(3).select($"id".as("rk"), ($"id" - 1).as("rt"))
+      val j = AsOf.join(l, r, Seq(l("k")), Seq(r("rk")), l("t"), r("rt"))
+      assert(j.queryExecution.sparkPlan.collectFirst {
+        case x: AsOfJoinExec => x }.isDefined,
+        s"$which:\n${j.queryExecution.sparkPlan}")
+      assert(j.count() == 3, which)
+    }
+    check(spark.newSession(), "newSession()")
+    // a session of its own builder, on the running context; the builder
+    // makes it the thread's active session, which the other suites share
+    val built = SparkSession.builder().create()
+    try check(built, "builder().create()")
+    finally SparkSession.setActiveSession(spark)
+    assert(built ne spark)
   }
 }

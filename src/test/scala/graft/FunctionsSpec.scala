@@ -11,7 +11,6 @@ class FunctionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("dot_f32 computes the sequential double fold exactly") {
-    graft.functions.register(spark)
     val df = Seq(
       (Seq(1.0f, 2.0f, 3.0f), Seq(4.0f, 5.0f, 6.0f))).toDF("a", "b")
     val got = df.selectExpr("dot_f32(a, b) AS d").head().getDouble(0)
@@ -19,7 +18,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("dot_f32 and l2sq_i64 take exactly two arguments, else fail naming the function") {
-    graft.functions.register(spark)
     val df = Seq((Seq(1.0f), Seq(2.0f), Seq(1L), Seq(2L))).toDF("a", "b", "x", "y")
     for ((fn, args) <- Seq("dot_f32" -> Seq("a", "b"), "l2sq_i64" -> Seq("x", "y"));
          call <- Seq(args.take(1), args :+ args.head)) {
@@ -33,7 +31,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("dot_f32 agrees bit-for-bit with the lambda formulation") {
-    graft.functions.register(spark)
     val e = graft.io.Tables.embeddings(spark, sfDir).limit(50)
       .select(col("vec_id"), col("embedding"))
     val both = e.selectExpr(
@@ -47,7 +44,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("dot_f32 interpreted eval matches codegen result") {
-    graft.functions.register(spark)
     val df = Seq((Seq(0.1f, -0.2f, 0.3f, 1.5f), Seq(2.5f, 0.4f, -1.1f, 0.7f)))
       .toDF("a", "b")
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
@@ -66,7 +62,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("dot_f32 is null-safe and handles length mismatch") {
-    graft.functions.register(spark)
     val df = Seq(
       (Some(Seq(1.0f)), None: Option[Seq[Float]]),
       (Some(Seq(1.0f, 2.0f)), Some(Seq(3.0f)))).toDF("a", "b")
@@ -101,7 +96,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("l2sq_i64: exact integer distance, lambda agreement, null/len rules") {
-    graft.functions.register(spark)
     val df = Seq((Seq(3L, -4L, 10000L), Seq(0L, 0L, 9999L))).toDF("a", "b")
     assert(df.selectExpr("l2sq_i64(a, b) AS d").head().getLong(0) == 26L)
     // agreement with the higher-order formulation it replaces
@@ -135,7 +129,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("word_ngrams generates n-grams, drops nulls and short docs") {
-    graft.functions.register(spark)
     val df = Seq(Some("a b c d"), Some("x"), None)
       .toDF("text")
     val rows = df.selectExpr("word_ngrams(text, 3) AS g")
@@ -144,7 +137,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("word_ngrams composes with aggregation below other operators") {
-    graft.functions.register(spark)
     val n = Seq("a b a b").toDF("text")
       .selectExpr("word_ngrams(text, 2) AS g")
       .groupBy("g").count()
@@ -153,7 +145,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("word_ngrams tokenizes real whitespace (runs, tabs, newlines)") {
-    graft.functions.register(spark)
     val rows = Seq("a  b\tc\nd ").toDF("text")
       .selectExpr("word_ngrams(text, 2) AS g")
       .collect().map(_.getString(0)).toSeq
@@ -161,7 +152,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("word_ngrams n accepts any integral literal, rejects non-constants") {
-    graft.functions.register(spark)
     val df = Seq("a b c").toDF("text")
     val viaLong = df.selectExpr("word_ngrams(text, CAST(2 AS BIGINT)) AS g")
       .collect().map(_.getString(0)).toSeq
@@ -222,7 +212,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("topk_by_long: heap order, ties, k>n, and merged partials") {
-    graft.functions.register(spark)
     // 12 partitions force serialize/deserialize + merge of partial heaps
     val df = Seq(
       ("g", 1L, 50L), ("g", 2L, 90L), ("g", 3L, 90L), ("g", 4L, 10L),
@@ -243,7 +232,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("topk_pairs_by_long equals the window row_number form (property)") {
-    graft.functions.register(spark)
     val rnd = new scala.util.Random(42)
     // 3 trials × random pair sets with heavy ord collisions (small ord
     // range) — the regime where the tiebreak must decide everything
@@ -272,7 +260,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("heavy_hitters: exact when distinct <= k; MG bounds when not") {
-    graft.functions.register(spark)
     // exact regime: 3 distinct items, k=8 — no decrement can occur, so
     // the sketch equals exact counts regardless of partitioning
     val small = (Seq.fill(50)("a") ++ Seq.fill(30)("b") ++ Seq.fill(5)("c"))
@@ -317,7 +304,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("kmv_kth: partition-independent, exact below k, bounded error above") {
-    graft.functions.register(spark)
     import graft.api.Pipeline
 
     // exact regime: fewer distinct values than k → n is the exact
@@ -365,7 +351,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("count_min: one-sided bounds vs exact, partition-invariant blob, probe seam") {
-    graft.functions.register(spark)
     // Zipf-ish planted corpus: item i appears 1000/i times, i in 1..50
     // (N = sum ≈ 4500 rows, 50 distinct)
     val rows = (1 to 50).flatMap(i => Seq.fill(1000 / i)(s"item_$i"))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 import graft.io.Tables
 
@@ -138,29 +139,24 @@ class SourceFormatSpec extends SparkSpec {
       s"orc filter not pushed:\n$plan")
   }
 
-  test("Tables.events adapts to BOTH fixture ts layouts (int64-ns, timestamp-µs)") {
-    // the driver regenerated events.parquet mid-build (TIMESTAMP(NANOS)
-    // → timestamp[us]); the reader seam must derive identical
-    // ts_us/ts_utc from either layout so no query code ever changes
+  test("Tables.events derives ts_us and ts_utc from a timestamp[us] ts") {
+    // the fixtures' ts is parquet timestamp[us] (TIMESTAMP_NTZ here); a
+    // file Spark wrote holds TIMESTAMP. Both derive the same µs columns.
     val dir = tmpDir("evts")
     val usT = java.sql.Timestamp.from(
       java.time.Instant.parse("2024-01-01T00:00:01.234567Z"))
-    // v2 layout: real timestamp column (micros)
     Seq((1L, usT)).toDF("event_id", "ts")
-      .write.mode("overwrite").parquet(s"$dir/v2/events.parquet")
-    // v1 layout: int64 epoch-NANOS under the same column name
-    Seq((1L, 1704067201234567891L)).toDF("event_id", "ts")
-      .write.mode("overwrite").parquet(s"$dir/v1/events.parquet")
-    val v2 = Tables.events(spark, s"$dir/v2")
-      .select("ts_us").as[Long].head()
-    val v1 = Tables.events(spark, s"$dir/v1")
-      .select("ts_us").as[Long].head()
-    assert(v2 == 1704067201234567L, s"v2 ts_us: $v2")
-    assert(v1 == 1704067201234567L, s"v1 ts_us: $v1 (ns div 1000)")
-    // ts_utc agrees too (µs precision on both paths)
-    val u2 = Tables.events(spark, s"$dir/v2").select("ts_utc").head().get(0)
-    val u1 = Tables.events(spark, s"$dir/v1").select("ts_utc").head().get(0)
-    assert(u1 == u2, s"ts_utc diverged: $u1 vs $u2")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val e = Tables.events(spark, dir).select("ts_us", "ts_utc").head()
+    assert(e.getLong(0) == 1704067201234567L, s"ts_us: ${e.get(0)}")
+    assert(e.getTimestamp(1) == usT, s"ts_utc: ${e.get(1)}")
+    val fixture = Tables.events(spark, sfDir)
+    assert(fixture.schema("ts").dataType == TimestampNTZType)
+    assert(fixture.schema("ts_us").dataType == LongType)
+    assert(fixture.schema("ts_utc").dataType == TimestampType)
+    val mismatched = fixture.filter(
+      col("ts_us") =!= unix_micros(col("ts_utc"))).count()
+    assert(mismatched == 0)
   }
 
   test("parquet schema evolution: mergeSchema unifies drifted batches") {

@@ -4,13 +4,17 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 import java.util.Properties
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, PathFilter, Path => HPath}
 import org.apache.spark.SparkEnv
 import org.apache.spark.sql.{Encoders, SaveMode}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField}
 import org.apache.spark.util.SerializableConfiguration
@@ -26,6 +30,17 @@ case class PoseEvolved(x: Double, y: Double, z: Double, stamp: Stamp,
                        frame: Option[String])
 case class LiveEvent(event_id: Long, ts: Timestamp, user_id: Long,
     event_type: String, value: Double, props: String)
+
+/** Spark's file-system log manager, counting how often a query's logs
+  * list a `_spark_metadata` directory. */
+class ManifestListCounter(path: HPath, conf: Configuration)
+    extends FileSystemBasedCheckpointFileManager(path, conf) {
+  override def list(p: HPath, filter: PathFilter): Array[FileStatus] = {
+    if (p.getName == FileStreamSink.metadataDir) ManifestListCounter.lists.incrementAndGet()
+    super.list(p, filter)
+  }
+}
+object ManifestListCounter { val lists = new AtomicInteger }
 
 /** End-to-end ros_sql-equivalent pipeline (SURVEY §2.9/§3.1 ⊘): typed
   * stream → schema registration → micro-batched sink → catalog-verified
@@ -327,6 +342,25 @@ class RecorderSpec extends SparkSpec {
     }
     assert(!Files.exists(Paths.get(v1, "_spark_metadata")))
     assert(spark.read.parquet(v1).count() == 4)
+  }
+
+  test("a parquet recording lists its manifest once, not on every trigger") {
+    implicit val ctx = spark.sqlContext
+    val base = tmpDir("manifest-lists")
+    val in = MemoryStream[Pose](3)
+    val k = 25
+    ManifestListCounter.lists.set(0)
+    withManager(classOf[ManifestListCounter].getName)(
+      feed(in, recordLive(in, base, "_ckpt"), poses(0, 2 * k).grouped(2).toSeq))
+    // once for the latest batch id, and once by the log itself when it
+    // first looks for compacted files to learn its compact interval
+    val lists = ManifestListCounter.lists.get
+    assert(lists <= 2, s"_spark_metadata listed $lists times over $k triggers")
+    val v1 = s"$base/robot1_pose/v1"
+    assert(entries(s"$v1/_spark_metadata").count(_.head.isDigit) == k)
+    val back = Recorder.readback[Pose](spark, "/robot1/pose",
+      new Catalog(spark, s"$base/_metadata"), base).collect().toSeq
+    assert(back.sortBy(_.x) == poses(0, 2 * k))
   }
 
   test("a task that throws mid-write leaves neither a part file nor a " +

@@ -17,6 +17,12 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      // Spark's generated-class cache holds 100 entries by default, and
+      // a full run of the suites compiles 7,686 distinct classes (keyed
+      // by class loader and source): with room for all of them, a class
+      // is compiled once, not again after each eviction. A static conf,
+      // so it is set here, before the first compile.
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -404,7 +404,6 @@ class StreamingSpec extends SparkSpec {
 
   test("topk_by_long streams: serialized heap state merges across batches") {
     implicit val ctx = spark.sqlContext
-    graft.functions.register(spark)
     // the custom TypedImperativeAggregate must behave like Spark's own
     // sketches in a streaming agg: partial heaps serialize into the
     // state store and merge on the next micro-batch
